@@ -25,17 +25,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64
+from projet_data_infrastructure_spark.operators.joins import vertex_side
 from projet_data_infrastructure_spark.operators.text import normalize, tokens
 
 MINHASH_HASHES = 6  #: k independent hash functions
 MINHASH_BAND_ROWS = 2  #: rows per band → 3 bands of 2
-
-#: Exact-|V| threshold for broadcasting the CC label frame into the per-round
-#: joins (same discipline and value as ``plans/graph_geo.BROADCAST_VERTEX_ROWS``
-#: — duplicated here because operators must not import from plans). Above it
-#: the joins run as keyed SHUFFLE_HASH with identical algebra; tests force the
-#: shuffle form by monkeypatching this to 0 and pin row-identical output.
-_BROADCAST_LABEL_ROWS = 50_000_000
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -258,17 +252,11 @@ def duplicate_clusters(
         # Both per-round joins build on the |V|-bounded label frame, which is
         # a stats-free checkpoint — left to itself Catalyst picks sort-merge
         # and shuffles BOTH sides every round (guide §3.1). The explicit
-        # build-side pick is sized on the EXACT |V| from the init aggregate:
-        # broadcast below _BROADCAST_LABEL_ROWS, keyed SHUFFLE_HASH above
-        # (identical algebra — the plans/graph_geo.vertex_side discipline;
-        # the shuffle form is pinned row-identical in tests). Locally this
-        # removes 4 of the ~5 exchanges per round: −0.2..−0.4 s per CC spec,
-        # position-matched.
-        lab = (
-            F.broadcast(labels)
-            if n_nodes <= _BROADCAST_LABEL_ROWS
-            else labels.hint("shuffle_hash")
-        )
+        # build-side pick (``vertex_side``) is sized on the EXACT |V| from
+        # the init aggregate; the shuffle form is pinned row-identical in
+        # tests. Locally this removes 4 of the ~5 exchanges per round:
+        # −0.2..−0.4 s per CC spec, position-matched.
+        lab = vertex_side(labels, n_nodes)
         # Neighbor propagation + path halving (label-of-label hop): the hop
         # forwards every node straight toward its component minimum, cutting
         # rounds from O(diameter) to O(log diameter) — two extra tiny joins

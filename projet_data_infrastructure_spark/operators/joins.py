@@ -10,6 +10,10 @@ and dedup. Scale stance:
   ``repartition(key)`` / bucketed tables when a key is reused across stages.
 * AQE (on in session.py) converts to broadcast at runtime when a filtered
   side turns out small, and splits skewed partitions.
+* Iterative graph loops (PageRank, BFS, Bellman-Ford, k-core, HITS,
+  TextRank, label propagation, connected components) join a |V|-bounded
+  vertex frame every round; :func:`vertex_side` is their one
+  broadcast-vs-shuffle switch.
 """
 
 from __future__ import annotations
@@ -18,6 +22,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.operators.transforms import align_key_type
+
+
+# |V|-row frames (rank emissions, frontiers, distance maps, CC labels)
+# broadcast while the vertex set is executor-memory bounded — entity graphs
+# (customers, suppliers, domains) stay far below this even at 100 TB edge
+# scale. Above it (web graphs, |V| ≥ 10⁹) the SAME joins run as keyed
+# SHUFFLE_HASH joins: identical algebra, no broadcast of an unbounded frame.
+# Tests force the shuffle form by monkeypatching this to 0 and pin
+# row-identical results (``test_graph_shuffle_fallback_matches_broadcast``).
+BROADCAST_VERTEX_ROWS = 50_000_000
+
+
+def vertex_side(df: DataFrame, n_rows: int) -> DataFrame:
+    """Build-side wrapper for a |V|-bounded frame in an iterative graph
+    join: explicit broadcast below ``BROADCAST_VERTEX_ROWS``, explicit
+    ``SHUFFLE_HASH`` hint above it (the frames come from aggregates or
+    checkpoints, whose size estimates are unreliable — left to itself
+    Catalyst would pick sort-merge and sort the edge list every round).
+    ``n_rows`` is an upper bound on the frame's rows: an exact count, or
+    the node-table sizes the vertex ids are packed from."""
+    if n_rows > BROADCAST_VERTEX_ROWS:
+        return df.hint("shuffle_hash")
+    return F.broadcast(df)
 
 
 def enrich(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
+from projet_data_infrastructure_spark.operators.joins import vertex_side
 from projet_data_infrastructure_spark.operators.text import bpe_ish_tokens, tokens
 from projet_data_infrastructure_spark.plans._portable import (
     fdiv as _fdiv,
@@ -139,10 +140,8 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE with no FP summation-order leeway. Vertex set = corpus vocabulary
     (bounded); the emission frame broadcasts below the house vertex
     threshold and falls back to a keyed shuffle-hash join above it
-    (``graph_geo.vertex_side``). Output: top-20 keywords (score desc,
+    (``operators.joins.vertex_side``). Output: top-20 keywords (score desc,
     word asc)."""
-    from projet_data_infrastructure_spark.plans.graph_geo import vertex_side
-
     docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",

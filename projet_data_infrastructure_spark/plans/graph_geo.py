@@ -36,39 +36,15 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
+from projet_data_infrastructure_spark.operators.joins import vertex_side
 from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
 from projet_data_infrastructure_spark.sources.readers import read_table
-
-# --------------------------------------------------------------------------
-# Vertex-frame join strategy (shared by PageRank / BFS / Bellman-Ford)
-# --------------------------------------------------------------------------
-
-# |V|-row frames (rank emissions, frontiers, distance maps) broadcast while
-# the vertex set is executor-memory bounded — entity graphs (customers,
-# suppliers, domains) stay far below this even at 100 TB edge scale. Above
-# it (web graphs, |V| ≥ 10⁹) the SAME joins run as keyed SHUFFLE_HASH
-# joins: identical algebra, no broadcast of an unbounded frame. Tests force
-# the shuffle form by monkeypatching this to 0 and pin row-identical
-# results (``test_graph_shuffle_fallback_matches_broadcast``).
-BROADCAST_VERTEX_ROWS = 50_000_000
-
-
-def vertex_side(df: DataFrame, n_rows: int) -> DataFrame:
-    """Build-side wrapper for a |V|-bounded frame in an iterative graph
-    join: explicit broadcast below ``BROADCAST_VERTEX_ROWS``, explicit
-    ``SHUFFLE_HASH`` hint above it (the frames come from aggregates, whose
-    size estimates are unreliable — left to itself Catalyst would pick
-    sort-merge and sort the edge list every round)."""
-    if n_rows > BROADCAST_VERTEX_ROWS:
-        return df.hint("shuffle_hash")
-    return F.broadcast(df)
-
 
 # --------------------------------------------------------------------------
 # PageRank in fixed-point integer arithmetic (oracle-exact link analysis)
@@ -125,19 +101,86 @@ def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_pagerank_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 trade-graph nodes by 3-iteration fixed-point PageRank.
+def _trade_vertex_bound(spark: SparkSession, sf_dir: str) -> int:
+    """Upper bound on the trade graph's |V| for :func:`vertex_side`:
+    customers + suppliers, the two tables the node ids are packed from.
+    Both counts are parquet-metadata jobs — no scan of the O(|E|) edge
+    list. An |E|-count bound crossed the switch at the synthetic sf10 rung
+    (240 M arcs vs 1.6 M true nodes) and shuffled the edge list every round
+    (SCALING_SF10 first measured shuffle α 1.77-1.90 from exactly this)."""
+    return (
+        read_table(spark, sf_dir, "customer").count()
+        + read_table(spark, sf_dir, "supplier").count()
+    )
 
-    Plan shape per iteration: the (rank DIV degree) emission table — |V|
-    rows — BROADCASTS into a map-side hash join against the edge list, and
-    the only exchange is the destination aggregate, map-side-combined from
-    |E| rows down to |V|. The edge list itself is never shuffled. That is
-    the right plan whenever |V| ≪ |E| and the vertex table fits executor
-    memory (entity graphs: customers, suppliers, domains, repos). For
-    web-scale vertex sets (|V| > ``BROADCAST_VERTEX_ROWS``) the SAME joins
-    run as keyed SHUFFLE_HASH joins via :func:`vertex_side` — the size
-    switch is on the exact |V| (``deg.count()``, free off the checkpointed
-    aggregate), and the shuffle form is row-identical to the broadcast form
+
+def _node_label() -> Column:
+    """Display label of a packed trade-graph ``node`` id: customer k →
+    ``c<k>``, supplier k → ``s<k>`` (inverts the :func:`_trade_edges`
+    packing)."""
+    return F.concat(
+        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
+        F.expr("node DIV 2").cast("string"),
+    )
+
+
+def _integer_pagerank(edges: DataFrame, deg: DataFrame, iters: int) -> DataFrame:
+    """``iters`` rounds of fixed-point integer PageRank over ``edges``.
+
+    ``deg`` is the lazily ``localCheckpoint``ed (src, degree, seed) vertex
+    frame; ``seed`` scales each node's start mass and its 15 % teleport
+    (1 everywhere for global PageRank, 0/1 for the personalized walk).
+    Returns (node, degree, seed, score) in micro-units: the start score is
+    seed·1 000 000 and each step is
+    ``seed·150000 + (85 * Σ incoming(score DIV degree)) DIV 100``.
+
+    Plan shape per iteration: the (score DIV degree) emission table — |V|
+    rows — joins the edge list via :func:`vertex_side` (broadcast below
+    the size switch, keyed SHUFFLE_HASH above, on the exact |V| from
+    ``deg.count()``, the job that fills the checkpoint), and the only
+    exchange is the destination aggregate, map-side-combined from |E| rows
+    down to |V|. The edge list itself is never shuffled. Degree rides
+    INSIDE the rank frame, so the emission needs no rank⋈degree join per
+    iteration, and the rebuild joins contrib back onto the checkpointed
+    ``deg`` directly.
+    """
+    n_vertices = deg.count()  # exact |V|; this job fills the checkpoint
+    ranks = deg.select(
+        F.col("src").alias("node"),
+        "degree",
+        "seed",
+        (F.col("seed") * F.lit(_PR_UNIT)).cast("long").alias("score"),
+    )
+    for _ in range(iters):
+        emit = ranks.select("node", F.expr("score DIV degree").alias("c"))
+        contrib = (
+            edges.join(vertex_side(emit, n_vertices), edges.src == emit.node)
+            .groupBy("dst")
+            .agg(F.sum("c").alias("inc"))
+        )
+        ranks = deg.join(
+            vertex_side(contrib, n_vertices), deg.src == contrib.dst, "left"
+        ).select(
+            F.col("src").alias("node"),
+            "degree",
+            "seed",
+            (
+                F.col("seed") * F.lit(150_000)
+                + F.expr("(85 * coalesce(inc, CAST(0 AS BIGINT))) DIV 100")
+            )
+            .cast("long")
+            .alias("score"),
+        )
+    return ranks
+
+
+def q_pagerank_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 trade-graph nodes by 3-iteration fixed-point PageRank
+    (:func:`_integer_pagerank` with seed = 1 for every node).
+
+    The right plan whenever |V| ≪ |E| and the vertex table fits executor
+    memory (entity graphs: customers, suppliers, domains, repos); the
+    shuffle form is row-identical to the broadcast form
     (``test_graph_shuffle_fallback_matches_broadcast``). All rank
     arithmetic is integer, so the result hash-matches the unrolled-CTE
     DuckDB oracle exactly — no FP summation-order leeway.
@@ -155,46 +198,16 @@ def q_pagerank_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deg (|V| rows) is read by every iteration's emission join AND the node
     # list — checkpoint the tiny aggregate once instead of re-scanning the
     # edge list per iteration.
-    # Lazy: the |V| count on the next line materializes the blocks (r14).
+    # Lazy: the |V| count in _integer_pagerank materializes the blocks (r14).
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("degree"))
         .localCheckpoint(eager=False)
     )
-    n_vertices = deg.count()  # exact |V|; this job fills the checkpoint
-    # Degree rides INSIDE the rank frame: emit needs no rank⋈degree join
-    # per iteration (one fewer |V|-join × _PR_ITERS than the textbook
-    # two-table loop), and the rank rebuild joins contrib back onto the
-    # checkpointed deg directly.
-    ranks = deg.select(
-        F.col("src").alias("node"), "degree", F.lit(_PR_UNIT).cast("long").alias("pr_score")
-    )
-    for _ in range(_PR_ITERS):
-        emit = ranks.select("node", F.expr("pr_score DIV degree").alias("c"))
-        contrib = (
-            edges.join(vertex_side(emit, n_vertices), edges.src == emit.node)
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inc"))
-        )
-        ranks = deg.join(
-            vertex_side(contrib, n_vertices), deg.src == contrib.dst, "left"
-        ).select(
-            F.col("src").alias("node"),
-            "degree",
-            (
-                F.lit(150_000)
-                + F.expr("(85 * coalesce(inc, CAST(0 AS BIGINT))) DIV 100")
-            )
-            .cast("long")
-            .alias("pr_score"),
-        )
-    label = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.expr("node DIV 2").cast("string"),
-    )
+    ranks = _integer_pagerank(edges, deg.withColumn("seed", F.lit(1)), _PR_ITERS)
     # tie-break on the STRING label (matches the oracle's ORDER BY node)
     return (
-        ranks.select(label.alias("node"), "pr_score")
+        ranks.select(_node_label().alias("node"), F.col("score").alias("pr_score"))
         .orderBy(F.desc("pr_score"), F.asc("node"))
         .limit(20)
     )
@@ -1009,20 +1022,13 @@ def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape per round: one map-side-combined degree aggregate over the
     current edge set, then two semi-joins (src∈keep, dst∈keep) against the
-    |V|-bounded survivor frame via :func:`vertex_side` (broadcast below
-    the size switch, keyed SHUFFLE_HASH above). The edge list derives
+    |V|-bounded survivor frame via :func:`vertex_side` sized by
+    :func:`_trade_vertex_bound`. The edge list derives
     lazily from the checkpointed pair table and is never shuffled. Output
     is one row per round: survivor count + order-free node-id checksum.
     """
     edges = _trade_edges(spark, sf_dir)
-    # |V| <= n_customers + n_suppliers (node ids pack those two tables).
-    # Counting the DIMENSION tables is a parquet-metadata-only job, unlike
-    # the prior edges.count() which scanned |E| at plan construction
-    # (VERDICT r7 item 8).
-    n_vertex_bound = (
-        read_table(spark, sf_dir, "customer").count()
-        + read_table(spark, sf_dir, "supplier").count()
-    )
+    n_vertex_bound = _trade_vertex_bound(spark, sf_dir)
     outs = []
     for r in range(1, _KCORE_ROUNDS + 1):
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
@@ -1108,8 +1114,8 @@ def q_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-frame hub/authority recurrence).
 
     Plan shape per half-round: the |V|-bounded score frame joins the
-    checkpointed arc list via :func:`vertex_side` (broadcast / keyed-
-    shuffle size switch) and aggregates map-side-combined onto the other
+    checkpointed arc list via :func:`vertex_side` sized by
+    :func:`_trade_vertex_bound` and aggregates map-side-combined onto the other
     side; the max is a 1-row aggregate broadcast back. Arcs are scanned,
     never shuffled. Top-20 is TakeOrderedAndProject."""
     pairs = _trade_pairs(spark, sf_dir)
@@ -1117,13 +1123,7 @@ def q_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_custkey") * 2).cast("long").alias("c"),
         (F.col("l_suppkey") * 2 + 1).cast("long").alias("s"),
     )
-    # TIGHT |V| bound from the dimension tables (r15, see q_bfs_khop): the
-    # old |E|-count bound flips the half-round joins to SHUFFLE_HASH long
-    # before the TRUE vertex set outgrows a broadcast.
-    n_vertex_bound = (
-        read_table(spark, sf_dir, "customer").count()
-        + read_table(spark, sf_dir, "supplier").count()
-    )
+    n_vertex_bound = _trade_vertex_bound(spark, sf_dir)
     # h0 = UNIT for every customer → a1 = UNIT · indeg(s)
     auth = arcs.groupBy("s").agg((F.count(F.lit(1)) * F.lit(_HITS_UNIT)).alias("a"))
     for it in range(_HITS_ITERS):
@@ -1761,17 +1761,11 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank on the customer–supplier trade graph with the
     teleport restricted to a seed set (nation-0 customers) — the
     recommendation / related-entity query that global `pagerank_fixed_point`
-    cannot answer. Same plan shape per iteration (emission table broadcast
-    into the edge join, one destination aggregate, edges never shuffled;
-    `graph_geo.vertex_side` size-switch applies) and the same all-integer
-    rank arithmetic, so the result hash-matches the unrolled-CTE oracle
-    exactly. Seeds get the 15% teleport mass; non-seeds accumulate only
-    propagated rank, so scores measure proximity to the seed cohort."""
-    from projet_data_infrastructure_spark.plans.graph_geo import (
-        _trade_edges,
-        vertex_side,
-    )
-
+    cannot answer. Same loop (:func:`_integer_pagerank`, so the same plan
+    shape and all-integer rank arithmetic), so the result hash-matches the
+    unrolled-CTE oracle exactly. Seeds get the start mass and the 15%
+    teleport; non-seeds accumulate only propagated rank, so scores measure
+    proximity to the seed cohort."""
     edges = _trade_edges(spark, sf_dir)
     seeds = read_table(spark, sf_dir, "customer").filter(
         F.col("c_nationkey") == 0
@@ -1783,42 +1777,12 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "src", "degree", F.col("node").isNotNull().cast("int").alias("seed")
         )
-        # Lazy: the |V| count on the next line materializes the blocks (r14).
+        # Lazy: the |V| count in _integer_pagerank materializes the blocks (r14).
         .localCheckpoint(eager=False)
     )
-    n_vertices = deg.count()
-    ranks = deg.select(
-        F.col("src").alias("node"),
-        "degree",
-        "seed",
-        (F.col("seed") * F.lit(1_000_000)).cast("long").alias("ppr"),
-    )
-    for _ in range(_PPR_ITERS):
-        emit = ranks.select("node", F.expr("ppr DIV degree").alias("c"))
-        contrib = (
-            edges.join(vertex_side(emit, n_vertices), edges.src == emit.node)
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inc"))
-        )
-        ranks = deg.join(
-            vertex_side(contrib, n_vertices), deg.src == contrib.dst, "left"
-        ).select(
-            F.col("src").alias("node"),
-            "degree",
-            "seed",
-            (
-                F.col("seed") * F.lit(150_000)
-                + F.expr("(85 * coalesce(inc, CAST(0 AS BIGINT))) DIV 100")
-            )
-            .cast("long")
-            .alias("ppr"),
-        )
-    label = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.expr("node DIV 2").cast("string"),
-    )
+    ranks = _integer_pagerank(edges, deg, _PPR_ITERS)
     return (
-        ranks.select(label.alias("node"), "seed", "ppr")
+        ranks.select(_node_label().alias("node"), "seed", F.col("score").alias("ppr"))
         .orderBy(F.desc("ppr"), F.asc("node"))
         .limit(20)
     )

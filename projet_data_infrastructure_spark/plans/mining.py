@@ -101,7 +101,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from projet_data_infrastructure_spark.operators.asof import asof_join
+from projet_data_infrastructure_spark.operators.joins import vertex_side
 from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
+from projet_data_infrastructure_spark.plans.graph_geo import (
+    _node_label,
+    _trade_edges,
+    _trade_vertex_bound,
+)
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import read_table
 
@@ -120,10 +126,10 @@ def q_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round r: frontier (hop r-1 nodes, ≤|V|) broadcasts into one equi-join
     against the checkpointed edge list; newly reached nodes are the
     anti-join against the visited set. Only the edge list (the only
-    O(|E|) object) is ever shuffled. Above
-    ``graph_geo.BROADCAST_VERTEX_ROWS`` (using the cheap bound |V| ≤ |E|
-    off the checkpointed edge count) the same joins run as keyed
-    SHUFFLE_HASH joins via ``graph_geo.vertex_side`` — identical rows,
+    O(|E|) object) is ever shuffled. Both joins pick their build side via
+    ``operators.joins.vertex_side`` sized by
+    ``graph_geo._trade_vertex_bound`` (customers + suppliers): broadcast
+    below the switch, keyed SHUFFLE_HASH above it — identical rows,
     web-scale-safe (equivalence-tested). Output is 1 row per hop level:
     integer count + sum of packed node ids, so an iterative traversal is
     order-insensitively hash-exact.
@@ -136,23 +142,8 @@ def q_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts only partially reuse): measured 3.0-3.5 s lazy vs
     2.2-2.5 s checkpointed per-hop at sf0.1, position-matched.
     """
-    from projet_data_infrastructure_spark.plans.graph_geo import (
-        _trade_edges,
-        vertex_side,
-    )
-
     edges = _trade_edges(spark, sf_dir)  # pair table checkpointed inside
-    # TIGHT |V| bound from the dimension tables (parquet-metadata counts,
-    # the kcore discipline) — r15: the old |V| ≤ |E| edge-count bound
-    # crossed BROADCAST_VERTEX_ROWS at the synthetic sf10 rung (240 M arcs
-    # vs 1.6 M true nodes), flipping every per-hop join to SHUFFLE_HASH and
-    # shuffling the 1.5 GB edge list once per hop (SCALING_SF10 first
-    # measured shuffle α 1.90 from exactly this; the bound fix restores the
-    # broadcast plan wherever the TRUE vertex set fits).
-    n_vertex_bound = (
-        read_table(spark, sf_dir, "customer").count()
-        + read_table(spark, sf_dir, "supplier").count()
-    )
+    n_vertex_bound = _trade_vertex_bound(spark, sf_dir)
     cust = read_table(spark, sf_dir, "customer")
     visited = (
         cust.filter(F.col("c_custkey") < _BFS_SEED_MAX)
@@ -890,9 +881,10 @@ def q_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one equi-join against the checkpointed edge list, then a min
     aggregate merges relaxed candidates with the previous distances —
     identical plan skeleton to the PageRank loop (edge list scanned, never
-    shuffled). Above ``graph_geo.BROADCAST_VERTEX_ROWS`` (bound |V| ≤ |E|
-    off the checkpointed edge count) the distance-frame join runs as a
-    keyed SHUFFLE_HASH join via ``graph_geo.vertex_side`` — identical rows
+    shuffled). The distance-frame join picks its build side via
+    ``operators.joins.vertex_side`` sized by
+    ``graph_geo._trade_vertex_bound`` (customers + suppliers): broadcast
+    below the switch, keyed SHUFFLE_HASH above it — identical rows
     (equivalence-tested). Unreached nodes are simply absent (no ∞ sentinel
     to overflow). Output is top-20 by (distance, label) via
     TakeOrderedAndProject — no global sort.
@@ -918,13 +910,7 @@ def q_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs.count()  # materializes the lazy checkpoint in ONE pass before the
     # doubled-arc union below consumes it twice (an unmaterialized lazy
     # checkpoint is recomputed per consumer within a job).
-    # TIGHT |V| bound (r15, see q_bfs_khop): the old |E|-count bound crossed
-    # the broadcast switch at the sf10 rung and shuffled the edge list every
-    # round (shuffle α 1.77 in the first SCALING_SF10 sweep).
-    n_vertex_bound = (
-        read_table(spark, sf_dir, "customer").count()
-        + read_table(spark, sf_dir, "supplier").count()
-    )
+    n_vertex_bound = _trade_vertex_bound(spark, sf_dir)
     # r14: the distance frame is checkpointed per round. Unlike PageRank
     # (where each round references the prior frame once), Bellman-Ford
     # references dist TWICE per round (relaxation join + the min-merge
@@ -934,8 +920,6 @@ def q_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = spark.range(1).select(
         F.lit(0).cast("long").alias("node"), F.lit(0).cast("long").alias("d")
     )
-    from projet_data_infrastructure_spark.plans.graph_geo import vertex_side
-
     for _ in range(_BF_ROUNDS):
         relaxed = (
             edges.join(vertex_side(dist, n_vertex_bound), edges.src == dist.node)
@@ -949,12 +933,8 @@ def q_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("d").alias("d"))
             .localCheckpoint(eager=True)
         )
-    label = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.expr("node DIV 2").cast("string"),
-    )
     return (
-        dist.select(label.alias("node"), "d")
+        dist.select(_node_label().alias("node"), "d")
         .orderBy(F.asc("d"), F.asc("node"))
         .limit(20)
     )
@@ -1280,15 +1260,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The frontier/pick frames below are |V|-bounded (≤ one row per
     # embedding) but come out of checkpoints/aggregates with no stats, so
     # Catalyst would sort-merge and shuffle the edge list every round. Pick
-    # the build side explicitly on the exact |V| that was already counted
-    # for the centroid derivation — broadcast below the graph specs'
-    # 50M-row switch, keyed SHUFFLE_HASH above (identical algebra; r15,
-    # guide §3.1: 4.12 → 3.91 s median position-matched).
-    _side = (
-        F.broadcast
-        if n_emb <= 50_000_000
-        else (lambda d: d.hint("shuffle_hash"))
-    )
+    # the build side explicitly via ``vertex_side`` on the exact |V| that
+    # was already counted for the centroid derivation (r15, guide §3.1:
+    # 4.12 → 3.91 s median position-matched).
     pairs = similarity.neardup_pairs_bucketed(
         emb, threshold=_LP_SIM, n_centroids=c, centroid_src=plain
     ).select("vec_a", "vec_b")
@@ -1314,7 +1288,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("node").alias("dst"), F.col("lab").alias("nlab")
         )
         votes = (
-            edges.join(_side(frontier), "dst")
+            edges.join(vertex_side(frontier, n_emb), "dst")
             .groupBy(F.col("src").alias("node"), "nlab")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -1327,7 +1301,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ContextCleaner frees the superseded checkpoint (ADVICE r14:
         # Dataset.unpersist cannot release localCheckpoint blocks).
         labels = (
-            labels.join(_side(pick), "node", "left")
+            labels.join(vertex_side(pick, n_emb), "node", "left")
             .select("node", F.coalesce(F.col("lab"), F.col("plab")).alias("lab"))
             .localCheckpoint(eager=True)
         )

@@ -6,9 +6,10 @@ first, and (c) account for every elided spec so the line stays auditable
 against the total."""
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 

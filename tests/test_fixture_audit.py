@@ -18,11 +18,12 @@ import json
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT / "tools"))
 
 from fixture_audit import build_inventory  # noqa: E402
 
-SNAPSHOT = Path("/root/repo/FIXTURES_AUDIT.json")
+SNAPSHOT = ROOT / "FIXTURES_AUDIT.json"
 
 #: Modules whose specs implement hand-derived math on both engines — the
 #: highest-risk class for mirrored formula bugs. Every spec here must carry

@@ -791,24 +791,33 @@ def test_ivf_assign_large_c_uses_broadcast_join(spark):
     assert "Exchange hashpartitioning" not in final
 
 
-def test_graph_shuffle_fallback_matches_broadcast(spark, monkeypatch):
+@pytest.mark.parametrize(
+    "name",
+    [
+        "pagerank_fixed_point",
+        "personalized_pagerank",
+        "bfs_khop_reachability",
+        "bellman_ford_distances",
+        "kcore_decomposition",
+        "hits_authorities",
+        "textrank_keywords",
+        "label_propagation",
+        "entity_resolution_clusters",  # connected components (duplicate_clusters)
+    ],
+)
+def test_graph_shuffle_fallback_matches_broadcast(spark, monkeypatch, name):
     # Verdict r4 item 3: the keyed-shuffle form of the iterative graph
     # joins (web-scale |V|, where broadcasting the vertex frame is the
     # scale-killer) must be row-identical to the broadcast form. Force it
-    # by dropping the switch threshold to 0 and compare all three
-    # iterative specs against their default-mode output.
-    from projet_data_infrastructure_spark.plans import graph_geo, mining
+    # by dropping the one switch threshold to 0 and compare every spec
+    # that reaches ``joins.vertex_side`` against its default-mode output.
+    from projet_data_infrastructure_spark.operators import joins
+    from projet_data_infrastructure_spark.plans import all_specs
 
-    fns = {
-        "pagerank": graph_geo.q_pagerank_fixed_point,
-        "bfs": mining.q_bfs_khop,
-        "bellman_ford": mining.q_bellman_ford,
-    }
-    base = {name: fn(spark, SF).collect() for name, fn in fns.items()}
-    monkeypatch.setattr(graph_geo, "BROADCAST_VERTEX_ROWS", 0)
-    for name, fn in fns.items():
-        got = fn(spark, SF).collect()
-        assert got == base[name], f"{name}: shuffle form diverged"
+    fn = next(s.fn for s in all_specs() if s.name == name)
+    base = fn(spark, SF).collect()
+    monkeypatch.setattr(joins, "BROADCAST_VERTEX_ROWS", 0)
+    assert fn(spark, SF).collect() == base, f"{name}: shuffle form diverged"
 
 
 def test_graph_shuffle_fallback_plans_keyed_join(spark, monkeypatch):
@@ -817,9 +826,10 @@ def test_graph_shuffle_fallback_plans_keyed_join(spark, monkeypatch):
     # web-scale |V| would execute. (At sf0.001 AQE legitimately converts
     # the tiny runtime shuffles back to broadcast, so the gate reads the
     # pre-AQE initial plan, not the adaptively final one.)
+    from projet_data_infrastructure_spark.operators import joins
     from projet_data_infrastructure_spark.plans import graph_geo
 
-    monkeypatch.setattr(graph_geo, "BROADCAST_VERTEX_ROWS", 0)
+    monkeypatch.setattr(joins, "BROADCAST_VERTEX_ROWS", 0)
     df = graph_geo.q_pagerank_fixed_point(spark, SF)
     df.collect()
     full = df._jdf.queryExecution().executedPlan().toString()
@@ -1286,16 +1296,3 @@ def test_bh_fdr_windows_only_over_nation_frame(spark):
     agg = plan.find("HashAggregate(keys=[c_nationkey", win_pos)
     assert agg != -1, plan
     assert "o_orderkey" not in plan[win_pos:agg], plan
-
-
-def test_cc_label_shuffle_fallback_matches_broadcast(spark, monkeypatch):
-    # r15: duplicate_clusters builds its per-round joins on the |V|-bounded
-    # label frame via an exact-count broadcast/SHUFFLE_HASH switch (the
-    # graph_geo.vertex_side discipline). The web-scale shuffle form must be
-    # row-identical to the broadcast form.
-    from projet_data_infrastructure_spark.operators import dedup
-    from projet_data_infrastructure_spark.plans.advanced import q_entity_resolution
-
-    base = q_entity_resolution(spark, SF).collect()
-    monkeypatch.setattr(dedup, "_BROADCAST_LABEL_ROWS", 0)
-    assert q_entity_resolution(spark, SF).collect() == base

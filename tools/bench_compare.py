@@ -11,7 +11,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 
@@ -98,7 +99,7 @@ def main() -> None:
 
     total_s = sum(r[1] for r in rows)
     total_d = sum(r[2] for r in rows)
-    with open("/root/repo/BENCH_COMPARE.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH_COMPARE.md"), "w") as f:
         f.write(
             "# BENCH_COMPARE — Spark engine vs DuckDB oracle, same parquet, "
             f"same queries\n\nsf_dir: `{sf_dir}`; Spark runs the registry plan "

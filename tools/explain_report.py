@@ -7,9 +7,11 @@ Usage: python tools/explain_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from projet_data_infrastructure_spark.plans import all_specs
 from projet_data_infrastructure_spark.session import get_spark
@@ -35,7 +37,7 @@ def main() -> None:
         plan = df._jdf.queryExecution().explainString(mode)
         tree = plan.split("\n\n")[0]
         out.append(f"## {spec.name}\n\n```\n{tree}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(out)} sections)")
     spark.stop()

@@ -45,11 +45,12 @@ import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from projet_data_infrastructure_spark.plans.registry import all_specs  # noqa: E402
 
-TESTS = Path("/root/repo/tests")
+TESTS = ROOT / "tests"
 
 # Files whose references prove plan shape / registration / scaling, not the
 # formula. Hits here never lift a spec out of the mirrored-only class.

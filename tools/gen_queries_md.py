@@ -6,10 +6,12 @@ Regenerate after adding specs: python tools/gen_queries_md.py
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from projet_data_infrastructure_spark.plans import all_specs  # noqa: E402
 
@@ -139,7 +141,7 @@ def main() -> None:
                 f"{'yes' if s.oracle else 'rows-only'} | {doc} |"
             )
         lines.append("")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote QUERIES.md ({n} specs, {len(by_mod)} modules)")
 

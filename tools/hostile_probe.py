@@ -12,10 +12,11 @@ Usage: python tools/hostile_probe.py [n_window] [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

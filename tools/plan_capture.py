@@ -15,21 +15,22 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import json
 
 from projet_data_infrastructure_spark.plans import all_specs
 from projet_data_infrastructure_spark.session import get_spark
 
-OUT_DIR = "/root/repo/plans/r14"
+OUT_DIR = os.path.join(ROOT, "plans", "r14")
 
 
 def main() -> None:
     label = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:]
     if not names:
-        with open("/root/repo/BENCH_HEADLINERS.json") as f:
+        with open(os.path.join(ROOT, "BENCH_HEADLINERS.json")) as f:
             names = json.load(f)["names"]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(OUT_DIR, exist_ok=True)

@@ -12,7 +12,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from projet_data_infrastructure_spark.plans import all_specs
 from projet_data_infrastructure_spark.session import get_spark
@@ -30,7 +31,7 @@ def _release(spark):
 def main() -> None:
     names = sys.argv[1:]
     if not names:
-        with open("/root/repo/BENCH_LOCAL_r13.json") as f:
+        with open(os.path.join(ROOT, "BENCH_LOCAL_r13.json")) as f:
             q = json.load(f)["queries"]
         names = [n for n, _ in sorted(q.items(), key=lambda kv: -kv[1])[:30]]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

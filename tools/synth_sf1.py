@@ -17,7 +17,7 @@ does NOT reproduce the data-driven edge densification seen across the real
 sf0.001→0.1 fixtures (more orders per customer ⇒ denser graph) — SCALING.md
 documents both curves side by side.
 
-Writes to /root/repo/synthdata/sf1 (git-ignored). Deterministic: re-running
+Writes to synthdata/sf1 under the repo root (git-ignored). Deterministic: re-running
 produces byte-identical row sets (order within parquet files may differ;
 all consumers aggregate).
 
@@ -36,7 +36,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -129,7 +130,7 @@ def _content_transform(table: str, col: str, copy_col):
 def main() -> None:
     global N_COPIES
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/synthdata/sf1"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "synthdata", "sf1")
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 and sys.argv[3] else None
     if len(sys.argv) > 4:
         N_COPIES = int(sys.argv[4])
