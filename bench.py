@@ -1,11 +1,15 @@
-"""Benchmark harness (driver contract).
+"""Benchmark harness (driver contract) and the one measurement protocol.
 
-Runs the headline queries (registry specs tagged "bench") at
+Runs the round's pinned headline queries (``BENCH_HEADLINERS.json``) at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` and prints two JSON lines: the full record
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": ...}
+
+and, last, a compact summary sized for the driver's stdout tail capture.
+The full record is also written to ``BENCH_FULL_c{cpus}.json``; the same
+file, read before the run overwrites it, is the run's ``vs_prior`` baseline.
 
 Each query materializes through the noop sink (full execution, no
 driver-side row transfer) after one untimed warmup of the session/JIT.
@@ -14,19 +18,27 @@ median is reported: run-to-run variance on identical code spans ~1.5x
 totals, which made single-shot per-query deltas (±3 s on a 4 s query)
 unattributable. Medians over interleaved passes absorb transient system
 noise without hiding a real regression.
+
+Every tool that times specs uses this module's protocol: ``warm_up``,
+``_release_cached_blocks``, ``timed_run``, ``UI_CONF`` with
+``completed_stages``, ``headliners`` and ``baseline``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from projet_data_infrastructure_spark.plans import all_specs
-from projet_data_infrastructure_spark.session import get_spark
+from projet_data_infrastructure_spark.session import default_parallelism, get_spark
+from projet_data_infrastructure_spark.sources.readers import TABLES, read_table
 
 #: Frozen benchmark core (VERDICT r7 item 5): these 30 specs must stay
 #: bench-tagged FOREVER so every round's BENCH_r{N}.json carries a directly
@@ -47,6 +59,28 @@ BENCH_CORE = (
     "naive_bayes_lang", "pagerank_fixed_point", "geo_cell_neighbor_pairs",
     "multimodal_phash_neardup",
 )
+
+
+#: Interleaved passes per query, for bench.py and every tool that times specs.
+REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+
+#: Session conf for reading stages through the status REST API. The caps
+#: must exceed a run's total stage count: the status store EVICTS old
+#: stages past them (observed round 12 on the last specs of an 18-spec x
+#: 3-SF x 2-rep scaling run).
+UI_CONF = {
+    "spark.ui.enabled": "true",
+    "spark.ui.retainedStages": "100000",
+    "spark.ui.retainedJobs": "100000",
+}
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed warm-up: spin up executors/codegen and touch every table's
+    footer/listing so the first measured query doesn't pay cold IO setup."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for t in TABLES:
+        read_table(spark, sf_dir, t).limit(1).collect()
 
 
 def _release_cached_blocks(spark) -> None:
@@ -80,6 +114,51 @@ def _release_cached_blocks(spark) -> None:
             rdd.unpersist(False)
     except Exception:
         pass  # py4j view quirks must never abort a bench run
+
+
+def timed_run(spark, spec, sf_dir: str) -> float:
+    """Build ``spec`` and execute it through the noop sink; return the
+    build + execution seconds. The cache release that follows is untimed."""
+    t0 = time.perf_counter()
+    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    sec = time.perf_counter() - t0
+    _release_cached_blocks(spark)
+    return sec
+
+
+def completed_stages(spark) -> dict[int, dict]:
+    """Completed stages by stage id, from the status REST API (the session
+    must be built with ``UI_CONF``). Diff the ids of two reads to get the
+    stages a run launched."""
+    sc = spark.sparkContext
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages?status=complete"
+    with urllib.request.urlopen(url, timeout=30) as r:
+        return {s["stageId"]: s for s in json.load(r)}
+
+
+def headliners() -> list[str]:
+    """The round's frozen headliner list, ``BENCH_HEADLINERS.json``.
+
+    Written once per round by ``tools/pin_headliners.py`` (the only home of
+    the selection rule) and committed, so the driver's end-of-round bench
+    and every local bench measure the SAME composition (VERDICT r13 item 3).
+    A missing or empty pin is an error, not a fallback."""
+    with open(os.path.join(HERE, "BENCH_HEADLINERS.json")) as f:
+        names = json.load(f)["names"]
+    if not names:
+        raise ValueError("BENCH_HEADLINERS.json pins no names")
+    return names
+
+
+def baseline(cpus: int, root: str = HERE) -> dict | None:
+    """The previous full record at this core count, ``BENCH_FULL_c{cpus}.json``
+    (exact per-query medians), or None when there is none."""
+    try:
+        with open(os.path.join(root, f"BENCH_FULL_c{cpus}.json")) as f:
+            rec = json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return None
+    return rec if isinstance(rec.get("queries"), dict) else None
 
 
 def _calibration_run() -> float:
@@ -130,6 +209,8 @@ def _calibrate_membw(n: int = 3) -> list[float]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    cpus = default_parallelism()
+    prior = baseline(cpus)
     cal_before = _calibrate()
     membw_before = _calibrate_membw()
     spark = get_spark("bench")
@@ -139,57 +220,21 @@ def main() -> None:
     # timings (the first queries absorb residual JIT/codegen warm-up). A fixed
     # order keeps vs-prior-round deltas attributable to code, not position.
     registry = all_specs()
-    bench_names = {s.name for s in registry if "bench" in s.tags}
-    # Measured-cost auto-selection (VERDICT r11 item 5): the hand-curated
-    # bench tags can miss a future heavy spec. The committed
-    # LOCAL_ORACLE_sf0.1.json times every registered spec's Spark side; any
-    # name in its top-N by measured cost joins the headliner set
-    # automatically.
-    #
-    # Per-round PIN (VERDICT r13 item 3): LOCAL_ORACLE_sf0.1.json is itself
-    # refreshed mid-round, so two same-round bench runs could auto-select
-    # slightly different sets (r13: driver 119 vs local 116 specs) and the
-    # vs_prior totals compared near-but-not-identical compositions. The
-    # selection is therefore frozen once per round into the committed
-    # BENCH_HEADLINERS.json (tools/pin_headliners.py); every bench run of
-    # the round — local or driver — replays exactly that list. Recompute
-    # only at the START of a round, before the first measurement.
-    pinned = _pinned_headliners()
-    if pinned is not None:
-        selected = set(pinned) & {s.name for s in registry}
-        auto_added = sorted(selected - bench_names)
-    else:
-        auto_n = int(os.environ.get("SPARK_GRAFT_BENCH_AUTO_TOPN", "70"))
-        auto_added = sorted(_top_measured_names(auto_n) - bench_names)
-        selected = bench_names | set(auto_added)
-    specs = sorted((s for s in registry if s.name in selected), key=lambda s: s.name)
+    pinned = set(headliners())
+    specs = sorted((s for s in registry if s.name in pinned), key=lambda s: s.name)
+    auto_added = sorted({s.name for s in specs} - {s.name for s in registry if "bench" in s.tags})
     missing_core = set(BENCH_CORE) - {s.name for s in specs}
     assert not missing_core, f"frozen bench core missing from selection: {missing_core}"
 
-    # Warmup (untimed): spin up executors/codegen and touch every table's
-    # footer/listing so the first measured query doesn't pay cold IO setup.
-    from projet_data_infrastructure_spark.sources.readers import TABLES, read_table
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in TABLES:
-        read_table(spark, sf_dir, t).limit(1).collect()
-
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+    warm_up(spark, sf_dir)
     samples: dict[str, list[float]] = {s.name: [] for s in specs}
-    for _ in range(reps):
+    for _ in range(REPS):
         for spec in specs:
-            t0 = time.time()
-            df = spec.fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples[spec.name].append(time.time() - t0)
-            _release_cached_blocks(spark)
-
-    import statistics
+            samples[spec.name].append(timed_run(spark, spec, sf_dir))
 
     timings = {name: round(statistics.median(ts), 3) for name, ts in samples.items()}
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
-    prior = _latest_prior_round()
     prior_ok = (
         prior is not None
         and prior.get("sf") == sf_val
@@ -198,12 +243,12 @@ def main() -> None:
     # Load-noise guard (verdict r4 item 8): a transient system spike during
     # one pass can fake a per-query regression that an idle rerun dissolves
     # (round 4 had three such phantoms). Any query whose median moved >20%
-    # AND >0.15 s vs the prior round is re-measured with `reps` fresh
+    # AND >0.15 s vs the baseline is re-measured with REPS fresh
     # interleaved passes folded into its sample before reporting, so the
     # emitted vs_prior deltas are trustworthy as-is.
     requeried: list[str] = []
     if prior_ok:
-        prior_q = prior.get("queries", {})
+        prior_q = prior["queries"]
         suspects = [
             s
             for s in specs
@@ -212,12 +257,9 @@ def main() -> None:
             and abs(timings[s.name] - prior_q[s.name])
             > max(0.2 * prior_q[s.name], 0.15)
         ]
-        for _ in range(reps):
+        for _ in range(REPS):
             for spec in suspects:
-                t0 = time.time()
-                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples[spec.name].append(time.time() - t0)
-                _release_cached_blocks(spark)
+                samples[spec.name].append(timed_run(spark, spec, sf_dir))
         for spec in suspects:
             timings[spec.name] = round(statistics.median(samples[spec.name]), 3)
             requeried.append(spec.name)
@@ -228,11 +270,11 @@ def main() -> None:
     membw_median = round(statistics.median(membw_before + membw_after), 4)
     cal_median = round(statistics.median(cal_before + cal_after), 4)
     out = {
-        "metric": f"headline-query wall time (noop sink), sum of per-query medians of {reps}",
+        "metric": f"headline-query wall time (noop sink), sum of per-query medians of {REPS}",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "reps": reps,
+        "reps": REPS,
         "sf": sf_val,
         # Machine-load fingerprint: a fixed single-thread CPU loop timed
         # around the run. Compare `median` across rounds — a load_ratio far
@@ -245,14 +287,13 @@ def main() -> None:
         out["requeried"] = requeried
     if auto_added:
         out["auto_headliners"] = auto_added
-    if pinned is not None:
-        out["headliner_pin"] = {"file": "BENCH_HEADLINERS.json", "n": len(specs)}
+    out["headliner_pin"] = {"file": "BENCH_HEADLINERS.json", "n": len(specs)}
     if prior_ok:
-        prior_q = prior.get("queries", {})
+        prior_q = prior["queries"]
         out["vs_prior"] = {
             "prior_total": prior["value"],
             "delta_total": round(total - prior["value"], 3),
-            # per-query delta (sec); only queries present in both rounds
+            # per-query delta (sec); only queries present in both records
             "delta_queries": {
                 k: round(v - prior_q[k], 3) for k, v in timings.items() if k in prior_q
             },
@@ -261,7 +302,7 @@ def main() -> None:
         if isinstance(prior_cal, dict) and isinstance(
             prior_cal.get("median"), (int, float)
         ) and prior_cal["median"] > 0:
-            # >1: this round's box is slower than the prior round's. The
+            # >1: this run's box is slower than the baseline's. The
             # adjusted delta divides out that environmental factor so a real
             # code regression separates from container drift without a
             # manual idle rerun.
@@ -270,24 +311,17 @@ def main() -> None:
             out["vs_prior"]["delta_total_load_adjusted"] = round(
                 total / ratio - prior["value"], 3
             )
-    # Full record: stdout (for local capture) + files beside the script, so
-    # the per-query map survives even when the driver keeps only a 2,000-char
-    # stdout tail. ROUND-STAMPED (VERDICT r14 item 1): the driver's low-core
-    # scaling re-run overwrote BENCH_FULL_LATEST.json in r14, losing the
-    # round's 32-core record — stamping by (round, cpus) keeps both.
+    # Full record: stdout (for local capture) + BENCH_FULL_c{cpus}.json, so
+    # the per-query map survives the driver's 2,000-char stdout tail and
+    # becomes the next run's baseline at this core count. Keyed by cores
+    # only, so a low-core re-run never overwrites the high-core record.
     full_line = json.dumps(out)
     print(full_line)
-    here = os.path.dirname(os.path.abspath(__file__))
-    n_cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 0))
-    for fname in (
-        "BENCH_FULL_LATEST.json",
-        f"BENCH_FULL_r{_max_driver_round() + 1}_c{n_cpus}.json",
-    ):
-        try:
-            with open(os.path.join(here, fname), "w") as f:
-                f.write(full_line + "\n")
-        except OSError:
-            pass
+    try:
+        with open(os.path.join(HERE, f"BENCH_FULL_c{cpus}.json"), "w") as f:
+            f.write(full_line + "\n")
+    except OSError:
+        pass
     # Compact summary as the FINAL stdout line (VERDICT r12 item 4): the
     # driver json-parses the tail of stdout, and the full record outgrew its
     # 2,000-char capture in rounds 11-12 (BENCH_r{11,12}.json parsed=null).
@@ -312,9 +346,9 @@ def _compact_summary(out: dict, timings: dict[str, float]) -> dict:
     summarised by count + their summed seconds so the map remains auditable
     against "value"). Values are rounded to 0.1 s — coarse but sufficient
     for the driver's regression/geomean screen; exact medians live in the
-    round-stamped BENCH_FULL record."""
+    BENCH_FULL_c{cpus}.json record."""
     compact = {
-        "metric": "headline-query wall time (noop sink); top-cost per-query subset, full map in BENCH_FULL_r{N}_c{cpus}.json",
+        "metric": "headline-query wall time (noop sink); top-cost per-query subset, full map and next baseline in BENCH_FULL_c{cpus}.json",
         "value": out["value"],
         "unit": "sec",
         "n": len(timings),
@@ -323,7 +357,9 @@ def _compact_summary(out: dict, timings: dict[str, float]) -> dict:
         "calibration_median": out["calibration"]["median"],
         "membw_median": out["calibration"]["membw_median"],
         "queries": {},
-        "elided": {"n": 0, "sum_sec": 0.0},
+        # Sized as if every spec were elided, so the final elided values can
+        # only be shorter than what the budget below reserved for them.
+        "elided": {"n": len(timings), "sum_sec": round(sum(timings.values()), 1)},
     }
     if "vs_prior" in out:
         compact["vs_prior"] = {
@@ -344,137 +380,6 @@ def _compact_summary(out: dict, timings: dict[str, float]) -> dict:
     elided = [sec for name, sec in timings.items() if name not in compact["queries"]]
     compact["elided"] = {"n": len(elided), "sum_sec": round(sum(elided), 1)}
     return compact
-
-
-def _max_driver_round() -> int:
-    """Newest round number among the driver's committed BENCH_r{N}.json
-    records (the driver writes its record only after the round's bench, so
-    during round N the max on disk is N-1). 0 when none exist."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0)
-
-
-def _pinned_headliners() -> list[str] | None:
-    """The round's frozen headliner list from BENCH_HEADLINERS.json, or None
-    when no pin exists (fall back to live auto-selection).
-
-    Written once per round by ``tools/pin_headliners.py`` and committed, so
-    the driver's end-of-round bench and every local bench measure the SAME
-    composition regardless of when LOCAL_ORACLE_sf0.1.json was refreshed.
-    ``SPARK_GRAFT_BENCH_IGNORE_PIN=1`` bypasses (for pin regeneration)."""
-    if os.environ.get("SPARK_GRAFT_BENCH_IGNORE_PIN") == "1":
-        return None
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_HEADLINERS.json"
-    )
-    try:
-        with open(path) as f:
-            rec = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    names = rec.get("names")
-    if isinstance(names, list) and all(isinstance(n, str) for n in names) and names:
-        return names
-    return None
-
-
-def _top_measured_names(n: int) -> set[str]:
-    """Top-n spec names by Spark-side cost from the committed full-registry
-    oracle run at sf0.1 (tools/check_oracle.py writes per-spec `spark_sec`).
-    Empty set when the record predates the timing field."""
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "LOCAL_ORACLE_sf0.1.json"
-    )
-    try:
-        with open(path) as f:
-            results = json.load(f).get("results", {})
-    except (OSError, json.JSONDecodeError):
-        return set()
-    timed = [
-        (rec["spark_sec"], name)
-        for name, rec in results.items()
-        if isinstance(rec, dict) and isinstance(rec.get("spark_sec"), (int, float))
-    ]
-    return {name for _sec, name in sorted(timed, reverse=True)[:n]}
-
-
-def _latest_prior_round() -> dict | None:
-    """Newest parseable benchmark record beside this script — the baseline
-    for per-query regression attribution. Candidates, newest round first:
-    the driver's BENCH_r{N}.json and our own committed BENCH_LOCAL_r{N}.json
-    (the driver has shipped rounds whose stdout tail is front-truncated past
-    the queries dict — BENCH_r08 — so the locally written full record is the
-    fallback that keeps vs_prior continuity alive)."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    driver = []
-    local = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            driver.append((int(m.group(1)), 1, p))
-    max_driver = max((r for r, _, _ in driver), default=-1)
-    for p in glob.glob(os.path.join(here, "BENCH_LOCAL_r*.json")):
-        m = re.search(r"BENCH_LOCAL_r(\d+)\.json$", p)
-        # cap LOCAL candidates at the newest DRIVER round so the current
-        # round's own freshly written local record never becomes its own
-        # "prior" (the driver writes BENCH_r{N}.json only after this run).
-        if m and int(m.group(1)) <= max_driver:
-            local.append((int(m.group(1)), 0, p))
-    for _, _, path in sorted(driver + local, reverse=True):
-        got = _parse_bench_record(path)
-        # From round 13 on the driver's parsed record may be the COMPACT
-        # summary (totals only). It is useless as a per-query baseline —
-        # fall through to the same round's full BENCH_LOCAL record instead.
-        if got is not None and isinstance(got.get("queries"), dict) and got["queries"]:
-            return got
-    return None
-
-
-def _parse_bench_record(path: str) -> dict | None:
-    import re
-
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    # The driver wraps our JSON line under "parsed" alongside run metadata —
-    # but has also shipped rounds with parsed=null and only a FRONT-TRUNCATED
-    # stdout tail (BENCH_r04). Recover value/queries by regex from the tail
-    # and the sf from the driver's own metadata so vs_prior still engages.
-    parsed = data.get("parsed")
-    if isinstance(parsed, dict):
-        return parsed
-    if "queries" in data:
-        return data
-    tail = data.get("tail")
-    if not isinstance(tail, str):
-        return None
-    mv = re.search(r'"value": ([0-9.]+)', tail)
-    mq = re.search(r'"queries": (\{[^{}]*\})', tail)
-    if not (mv and mq):
-        return None
-    try:
-        queries = json.loads(mq.group(1))
-        sf_meta = data.get("sf")
-        return {
-            "value": float(mv.group(1)),
-            "queries": queries,
-            "sf": float(sf_meta) if sf_meta is not None else None,
-        }
-    except (ValueError, json.JSONDecodeError):
-        return None
 
 
 if __name__ == "__main__":

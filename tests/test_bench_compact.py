@@ -9,6 +9,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
@@ -29,9 +31,18 @@ def _fake_out(timings):
     }
 
 
-def test_compact_line_fits_tail_budget_with_long_names():
-    # Worst case: many specs, long names (real registry max ~28 chars).
-    timings = {f"extremely_long_spec_name_number_{i:03d}": 5.0 - i * 0.03 for i in range(140)}
+@pytest.mark.parametrize(
+    "timings",
+    [
+        # Many specs, long names (real registry max ~28 chars).
+        {f"extremely_long_spec_name_number_{i:03d}": 5.0 - i * 0.03 for i in range(140)},
+        # Budget edge: the final elided count and seconds must fit in what
+        # the fixed part reserved for them.
+        {"x" * 19 + f"{i:04d}": round(20.0 - i * 0.01, 2) for i in range(164)},
+    ],
+    ids=["long_names_140", "elided_growth_164"],
+)
+def test_compact_line_fits_tail_budget_with_long_names(timings):
     compact = bench._compact_summary(_fake_out(timings), timings)
     line = json.dumps(compact)
     assert len(line) <= bench._COMPACT_BUDGET, len(line)
@@ -59,3 +70,15 @@ def test_compact_small_suite_includes_everything():
     compact = bench._compact_summary(_fake_out(timings), timings)
     assert len(compact["queries"]) == 10
     assert compact["elided"] == {"n": 0, "sum_sec": 0.0}
+
+
+def test_baseline_is_the_full_record_for_this_core_count(tmp_path):
+    """vs_prior compares against BENCH_FULL_c{cpus}.json's exact per-query
+    map, never a compact driver line or another core count's record."""
+    full = {"value": 3.5, "sf": 0.1, "queries": {"a": 1.234, "b": 2.266}}
+    compact = {"value": 3.5, "sf": 0.1, "n": 2, "queries": {"b": 2.3},
+               "elided": {"n": 1, "sum_sec": 1.2}}
+    (tmp_path / "BENCH_FULL_c8.json").write_text(json.dumps(full) + "\n")
+    (tmp_path / "BENCH_r15.json").write_text(json.dumps({"parsed": compact}))
+    assert bench.baseline(8, root=str(tmp_path))["queries"] == full["queries"]
+    assert bench.baseline(32, root=str(tmp_path)) is None

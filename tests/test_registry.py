@@ -65,17 +65,11 @@ def test_headliner_pin_is_valid():
     """BENCH_HEADLINERS.json (the per-round frozen bench composition,
     VERDICT r13 item 3) must resolve entirely against the registry and
     contain the never-rotating BENCH_CORE, or same-round bench runs drift
-    back to comparing different spec sets."""
-    import json
-    import os
-
+    back to comparing different spec sets. bench.py has no fallback, so a
+    missing pin fails here."""
     import bench
 
-    path = os.path.join(os.path.dirname(bench.__file__), "BENCH_HEADLINERS.json")
-    if not os.path.exists(path):
-        pytest.skip("no headliner pin committed yet")
-    with open(path) as f:
-        names = json.load(f)["names"]
+    names = bench.headliners()
     assert len(names) == len(set(names))
     registered = {s.name for s in all_specs()}
     unknown = [n for n in names if n not in registered]

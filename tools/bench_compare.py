@@ -16,74 +16,50 @@ sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 
+from bench import REPS, baseline, headliners, timed_run, warm_up  # noqa: E402
 from projet_data_infrastructure_spark.plans import all_specs  # noqa: E402
-from projet_data_infrastructure_spark.session import get_spark  # noqa: E402
-from projet_data_infrastructure_spark.sources.readers import TABLES, read_table  # noqa: E402
+from projet_data_infrastructure_spark.session import default_parallelism, get_spark  # noqa: E402
+from projet_data_infrastructure_spark.sources.readers import TABLES  # noqa: E402
+from tools.check_oracle import register_views  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("bench-compare")
     con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    register_views(con, sf_dir)
 
-    # warmups
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warm_up(spark, sf_dir)
     for t in TABLES:
-        read_table(spark, sf_dir, t).limit(1).collect()
         con.sql(f"SELECT count(*) FROM {t}").fetchall()
 
-    # Prior round's per-query Spark times (driver-recorded BENCH_r{N}.json)
-    # for the regression-attribution column. Only comparable when sf_dir has
-    # a parseable sfN suffix matching the prior run's sf — otherwise skip.
-    from bench import _latest_prior_round
-
-    prior = _latest_prior_round() or {}
+    # bench.py's baseline (BENCH_FULL_c{cpus}.json) for the
+    # regression-attribution column. Only comparable when sf_dir has a
+    # parseable sfN suffix matching the baseline's sf — otherwise skip.
+    prior = baseline(default_parallelism()) or {}
     try:
         this_sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         this_sf = None
     prior_q = prior.get("queries", {}) if (this_sf is not None and prior.get("sf") == this_sf) else {}
 
-    # Name order, same as bench.py: registry order changes per round (driver
-    # priority window) and would shift warm-up between queries, polluting the
-    # vs-prior deltas with position noise.
-    # Same selection as bench.py: the round's pinned headliner list
-    # (BENCH_HEADLINERS.json, VERDICT r13 item 3) when present, else the
-    # live tags ∪ top-N rule, so BENCH_COMPARE.md and BENCH_r{N}.json always
-    # cover the same spec set (ADVICE r12).
-    from bench import _pinned_headliners, _top_measured_names
-
-    pinned = _pinned_headliners()
-    if pinned is not None:
-        chosen = set(pinned)
-    else:
-        auto = _top_measured_names(
-            int(os.environ.get("SPARK_GRAFT_BENCH_AUTO_TOPN", "70"))
-        )
-        chosen = {s.name for s in all_specs() if "bench" in s.tags} | auto
+    # Name order and the pinned headliner list, same as bench.py, so
+    # BENCH_COMPARE.md and BENCH_r{N}.json always cover the same spec set
+    # (ADVICE r12) and position noise stays out of the vs-prior deltas.
+    chosen = set(headliners())
     bench_specs = sorted(
         (s for s in all_specs() if s.name in chosen and s.oracle is not None),
         key=lambda s: s.name,
     )
-    # Median of 3 interleaved passes on BOTH engines — the same protocol as
-    # bench.py, so the "vs prior round" column compares like with like
+    # Median of REPS interleaved passes on BOTH engines — the bench.py
+    # protocol, so the "vs baseline" column compares like with like
     # (single-shot numbers embed first-run codegen and made the deltas
     # unattributable).
-    REPS = 3
     t_spark: dict[str, list[float]] = {s.name: [] for s in bench_specs}
     t_duck: dict[str, list[float]] = {s.name: [] for s in bench_specs}
-    from bench import _release_cached_blocks
-
     for _ in range(REPS):
         for spec in bench_specs:
-            t0 = time.time()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t_spark[spec.name].append(time.time() - t0)
-            # same storage-state discipline as bench.py: accumulated
-            # localCheckpoint blocks must not squeeze later heavy specs
-            _release_cached_blocks(spark)
+            t_spark[spec.name].append(timed_run(spark, spec, sf_dir))
             t0 = time.time()
             con.sql(spec.oracle).fetchall()
             t_duck[spec.name].append(time.time() - t0)
@@ -104,7 +80,7 @@ def main() -> None:
             "# BENCH_COMPARE — Spark engine vs DuckDB oracle, same parquet, "
             f"same queries\n\nsf_dir: `{sf_dir}`; Spark runs the registry plan "
             "through the noop sink, DuckDB runs the oracle SQL and fetches; both\n"
-            "report the per-query median of 3 interleaved passes (the bench.py\n"
+            f"report the per-query median of {REPS} interleaved passes (the bench.py\n"
             "protocol).\n\n"
             "Reading this honestly: at sf0.1 (600 k-row fact table) every Spark "
             "query pays a ~0.5-1 s fixed scheduling/codegen/AQE cost that "
@@ -150,7 +126,7 @@ def main() -> None:
             "and the DuckDB column in this table doubles as the cross-round "
             "co-movement witness — if DuckDB moved with Spark, suspect the "
             "box first.\n\n"
-            "| query | spark (s) | duckdb (s) | vs prior round (s) |\n"
+            "| query | spark (s) | duckdb (s) | vs bench baseline (s) |\n"
             "|---|---|---|---|\n"
         )
         for name, ts, td, tp in rows:

@@ -75,14 +75,20 @@ def value_hash(rows, colnames, canon_fn=canon):
     return hashlib.md5("\n".join(digests).encode()).hexdigest()
 
 
+def register_views(con, sf_dir: str) -> None:
+    """One DuckDB view per source table over its parquet file, under the
+    table names the oracle SQL references."""
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("oracle-check")
     results: dict[str, dict] = {}
     con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    register_views(con, sf_dir)
 
     specs = [s for s in all_specs() if not only or s.name in only]
     n_pass = n_fail = 0

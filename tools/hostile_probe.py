@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
-from tools.check_oracle import canon, value_hash  # noqa: E402
+from tools.check_oracle import register_views, value_hash  # noqa: E402
 
 
 def main() -> int:
@@ -46,12 +46,7 @@ def main() -> int:
     window = [n for n in qmap if n in omap][:n_window]
 
     con = duckdb.connect()
-    from projet_data_infrastructure_spark.sources.readers import TABLES
-
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    register_views(con, sf_dir)
 
     n_pass = n_fail = 0
     for name in window:

@@ -1,47 +1,37 @@
 """Per-query time breakdown: fn() construction (incl. eager jobs like
 localCheckpoint/count), physical planning, and noop-sink execution.
 
-Usage: python tools/profile_queries.py [name ...]   (default: top-30 by
-BENCH_LOCAL_r13.json). Prints one line per query; run AFTER a JIT warmup.
+Usage: python tools/profile_queries.py [name ...]   (default: top-30 of the
+bench baseline BENCH_FULL_c{cpus}.json, else every pinned headliner).
+Prints one line per query, after bench.py's warm-up.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _release_cached_blocks, baseline, headliners, warm_up
 from projet_data_infrastructure_spark.plans import all_specs
-from projet_data_infrastructure_spark.session import get_spark
-
-
-def _release(spark):
-    spark.catalog.clearCache()
-    try:
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist(False)
-    except Exception:
-        pass
+from projet_data_infrastructure_spark.session import default_parallelism, get_spark
 
 
 def main() -> None:
     names = sys.argv[1:]
     if not names:
-        with open(os.path.join(ROOT, "BENCH_LOCAL_r13.json")) as f:
-            q = json.load(f)["queries"]
-        names = [n for n, _ in sorted(q.items(), key=lambda kv: -kv[1])[:30]]
+        prior = baseline(default_parallelism())
+        if prior is None:
+            names = headliners()
+        else:
+            q = prior["queries"]
+            names = sorted(q, key=lambda n: -q[n])[:30]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile")
     specs = {s.name: s for s in all_specs()}
-    # warmup
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from projet_data_infrastructure_spark.sources.readers import TABLES, read_table
-    for t in TABLES:
-        read_table(spark, sf_dir, t).limit(1).collect()
+    warm_up(spark, sf_dir)
 
     print(f"{'query':38s} {'fn()':>7s} {'plan':>7s} {'exec':>7s} {'total':>7s}")
     for name in names:
@@ -63,7 +53,7 @@ def main() -> None:
         t2 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         t3 = time.perf_counter()
-        _release(spark)
+        _release_cached_blocks(spark)
         print(
             f"{name:38s} {t1 - t0:7.3f} {t2 - t1:7.3f} {t3 - t2:7.3f} {t3 - t0:7.3f}"
         )

@@ -7,9 +7,9 @@ For each heavy spec, runs the query at sf0.001 / sf0.01 / sf0.1 and records
 * shuffle read+write bytes,
 * executor run time (CPU-proxy) and input bytes,
 
-attributed per run as deltas of the Spark status REST API's completed-stage
-totals (the UI is enabled for this session only). It then fits the growth
-exponent per adjacent SF decade, ``alpha = log(m_hi/m_lo) / log(10)``:
+attributed per run as totals over the completed stages the run added to
+the Spark status store (the UI is enabled for this session only). It then
+fits the growth exponent per adjacent SF decade, ``alpha = log(m_hi/m_lo) / log(10)``:
 linear scaling is alpha = 1, quadratic alpha = 2. Shuffle-byte and
 input-byte exponents are the scale-design signal (wall time at small SF is
 dominated by the fixed per-job scheduling floor, so its exponent
@@ -30,11 +30,10 @@ import math
 import os
 import statistics
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import UI_CONF, completed_stages, timed_run, warm_up
 from projet_data_infrastructure_spark.plans import all_specs
 from projet_data_infrastructure_spark.session import get_spark
 
@@ -77,51 +76,23 @@ if os.environ.get("SPARK_GRAFT_SCALING_SPECS"):
     HEAVY = tuple(os.environ["SPARK_GRAFT_SCALING_SPECS"].split(","))
 
 
-def _stage_totals(ui: str, app_id: str) -> dict[str, int]:
-    url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = json.load(r)
-    tot = {"shuffle_bytes": 0, "input_bytes": 0, "executor_ms": 0}
-    for s in stages:
-        tot["shuffle_bytes"] += s.get("shuffleReadBytes", 0) + s.get(
-            "shuffleWriteBytes", 0
-        )
-        tot["input_bytes"] += s.get("inputBytes", 0)
-        tot["executor_ms"] += s.get("executorRunTime", 0)
-    return tot
-
-
-def _release(spark) -> None:
-    spark.catalog.clearCache()
-    try:
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist(False)
-    except Exception:
-        pass
+def _stage_totals(stages: list[dict]) -> dict[str, int]:
+    return {
+        "shuffle_bytes": sum(
+            s.get("shuffleReadBytes", 0) + s.get("shuffleWriteBytes", 0) for s in stages
+        ),
+        "input_bytes": sum(s.get("inputBytes", 0) for s in stages),
+        "executor_ms": sum(s.get("executorRunTime", 0) for s in stages),
+    }
 
 
 def main() -> None:
     sf_root = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata"
     reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "2"))
-    # retainedStages must exceed the sweep's total stage count: the status
-    # store EVICTS old stages past the cap, which silently SHRINKS the
-    # completed-stage totals and turns late-run deltas negative (observed
-    # round 12 on the last three specs of an 18-spec x 3-SF x 2-rep run).
-    spark = get_spark(
-        "scaling-curve",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-        },
-    )
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    spark = get_spark("scaling-curve", extra_conf=UI_CONF)
     specs = {s.name: s for s in all_specs() if s.name in HEAVY}
     missing = [n for n in HEAVY if n not in specs]
     assert not missing, f"heavy specs missing from registry: {missing}"
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warmup
 
     # Labels are basenames; two SFS entries sharing a basename (e.g.
     # /root/testdata/sf0.1 and /root/synthdata/sf0.1) would silently
@@ -137,22 +108,16 @@ def main() -> None:
     for sf_entry in SFS:
         sf_dir = sf_entry if "/" in sf_entry else f"{sf_root}/{sf_entry}"
         sf = os.path.basename(sf_entry.rstrip("/"))
+        warm_up(spark, sf_dir)
         for name in HEAVY:
             walls: list[float] = []
             deltas: list[dict[str, int]] = []
             for _ in range(reps):
-                before = _stage_totals(ui, app_id)
-                t0 = time.perf_counter()
-                df = specs[name].fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                walls.append(time.perf_counter() - t0)
-                deltas.append(
-                    {
-                        k: v - before[k]
-                        for k, v in _stage_totals(ui, app_id).items()
-                    }
-                )
-                _release(spark)
+                before = set(completed_stages(spark))
+                walls.append(timed_run(spark, specs[name], sf_dir))
+                deltas.append(_stage_totals(
+                    [s for sid, s in completed_stages(spark).items() if sid not in before]
+                ))
             med = statistics.median
             results[name][sf] = {
                 "wall_sec": round(med(walls), 3),

@@ -27,15 +27,15 @@ Usage: python tools/single_task_sweep.py [top_n] [sf_dir]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import UI_CONF, completed_stages, timed_run, warm_up
 from projet_data_infrastructure_spark.plans import all_specs
 from projet_data_infrastructure_spark.session import get_spark
+from tools.pin_headliners import _top_measured_names
 
 MAX_TASKS = 2
 MIN_MS = 1500
@@ -44,43 +44,21 @@ MIN_MS = 1500
 def main() -> None:
     top_n = int(sys.argv[1]) if len(sys.argv) > 1 else 30
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "LOCAL_ORACLE_sf0.1.json")) as f:
-        results = json.load(f)["results"]
-    timed = sorted(
-        ((r.get("spark_sec", 0.0), n) for n, r in results.items()), reverse=True
-    )[:top_n]
+    names = _top_measured_names(top_n)
     specs = {s.name: s for s in all_specs()}
-
-    # retainedStages must exceed the sweep's total stage count (full-registry
-    # runs cross the default 1000-stage eviction cap, which would silently
-    # shrink the percent-of-total denominator and could hide a late flag —
-    # the same pathology scaling_curve.py fixed; ADVICE r12).
-    spark = get_spark(
-        "single-task-sweep",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-        },
-    )
-    ui, app = spark.sparkContext.uiWebUrl, spark.sparkContext.applicationId
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def stages() -> dict:
-        url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-        with urllib.request.urlopen(url, timeout=30) as r:
-            return {s["stageId"]: s for s in json.load(r)}
+    # UI_CONF keeps every stage of a full-registry sweep in the status store.
+    spark = get_spark("single-task-sweep", extra_conf=UI_CONF)
+    warm_up(spark, sf_dir)
 
     n_flagged = 0
-    for _cost, name in timed:
-        before = set(stages())
+    for name in names:
+        before = set(completed_stages(spark))
         try:
-            specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            timed_run(spark, specs[name], sf_dir)
         except Exception as e:  # noqa: BLE001 - report and continue the sweep
             print(f"ERR  {name}: {type(e).__name__}", flush=True)
             continue
-        new = [s for sid, s in stages().items() if sid not in before]
+        new = [s for sid, s in completed_stages(spark).items() if sid not in before]
         bad = [
             (s["numTasks"], s["executorRunTime"])
             for s in new
@@ -97,13 +75,7 @@ def main() -> None:
             )
         else:
             print(f"ok   {name}", flush=True)
-        spark.catalog.clearCache()
-        try:
-            for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-                rdd.unpersist(False)
-        except Exception:
-            pass
-    print(f"\n{n_flagged} flagged / {len(timed)} swept")
+    print(f"\n{n_flagged} flagged / {len(names)} swept")
     spark.stop()
 
 
