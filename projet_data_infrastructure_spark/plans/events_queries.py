@@ -25,6 +25,7 @@ from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
 from projet_data_infrastructure_spark.sources.readers import read_table, read_table_balanced
+from projet_data_infrastructure_spark.streaming.sinks import drain
 
 # --------------------------------------------------------------------------
 # F1/P2: JSON field extraction (get_json_object ≈ SaveDelta.scala:140-147)
@@ -357,23 +358,16 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: watermark-flush batch, which measured as expensive as the data batch.
 #: AQE cannot coalesce streaming state, so derive the partition count from
 #: the input size instead of inheriting the session's batch shuffle setting:
-#: one state partition per ~512 KiB of source bytes, clamped to
-#: [2, session shuffle partitions]. At sf0.1 (2 MB events) this is 4 instead
-#: of 32 (stream_stream_join 12.7 s → 2.7 s measured, identical rows); on a
-#: real cluster the clamp cap is the configured shuffle partitions, so large
-#: inputs keep full parallelism. Override: SPARK_GRAFT_STREAM_STATE_PARTITIONS.
+#: one state partition per ~512 KiB of the ``sf_dir`` events/documents
+#: parquet bytes, clamped to [2, session shuffle partitions]. At sf0.1
+#: (2 MB events) this is 4 instead of 32 (stream_stream_join 12.7 s → 2.7 s
+#: measured, identical rows); on a real cluster the clamp cap is the
+#: configured shuffle partitions, so large inputs keep full parallelism.
 _STREAM_STATE_TARGET_BYTES = 512 * 1024
 
 
-def _stream_state_partitions(spark: SparkSession, sf_dir: str | None) -> int:
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return int(env)
+def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if sf_dir is None:
-        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    if not sf_dir:
-        return cap
     total = 0
     try:
         for fname in os.listdir(sf_dir):
@@ -386,9 +380,7 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str | None) -> int:
     return max(2, min(cap, -(-total // _STREAM_STATE_TARGET_BYTES)))
 
 
-def _run_stream(
-    df_writer, spark: SparkSession, name: str, sf_dir: str | None = None
-) -> DataFrame:
+def _run_stream(df_writer, spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     # State partitions are pinned at first query start from the session's
     # shuffle-partition conf; set the size-derived value for the duration of
     # the run and restore the batch setting after (the conf is session-wide,
@@ -397,13 +389,7 @@ def _run_stream(
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
-        query = (
-            df_writer.queryName(name).trigger(availableNow=True).format("memory").start()
-        )
-        # awaitTermination returns False on timeout — fail loudly rather than
-        # returning a partially-filled memory table as an oracle mismatch.
-        assert query.awaitTermination(120), f"stream {name} timed out"
-        query.stop()
+        drain(df_writer.queryName(name).trigger(availableNow=True).format("memory").start())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)

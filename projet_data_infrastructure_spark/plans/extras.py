@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import read_table
+from projet_data_infrastructure_spark.streaming.sinks import drain
 
 
 def q_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,18 +581,22 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     op = d / u / c by event_id residue (deletes carry their image in
     ``before``, per the Debezium contract), ts_ms = event_id (a total
     order, so latest-wins is unambiguous) — streams them through
-    ``apply_cdc_batch``, and returns the final lake state. The end state
-    is pure relational algebra over the same parquet: keep the
-    max-event_id change per key, drop keys whose last change is a delete —
-    which is exactly the DuckDB oracle (``row_number() … DESC = 1`` minus
-    deletes), upgrading this spec from rows-only to hash-checked while
-    exercising all three op paths (the old generator form replayed only
-    creates). One source file ⇒ one availableNow micro-batch, so the
+    ``apply_cdc_batch_ooo``, and returns the live lake state
+    (``read_cdc_state``). The end state is pure relational algebra over
+    the same parquet: keep the max-event_id change per key, drop keys
+    whose last change is a delete — which is exactly the DuckDB oracle
+    (``row_number() … DESC = 1`` minus deletes), upgrading this spec from
+    rows-only to hash-checked while exercising all three op paths (the old
+    generator form replayed only creates). One source file ⇒ one availableNow micro-batch, so the
     streamed apply and the one-shot oracle see the same change order.
     """
     import tempfile
 
-    from projet_data_infrastructure_spark.streaming.cdc import apply_cdc_batch, parse_envelope
+    from projet_data_infrastructure_spark.streaming.cdc import (
+        apply_cdc_batch_ooo,
+        parse_envelope,
+        read_cdc_state,
+    )
 
     work = tempfile.mkdtemp(prefix="cdc_apply_")
     ev = read_table(spark, sf_dir, "events")
@@ -601,19 +606,15 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = f"{work}/state"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cdc_batch(target, parse_envelope(batch_df))
+        apply_cdc_batch_ooo(target, parse_envelope(batch_df))
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", f"{work}/ck")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
-    from projet_data_infrastructure_spark.streaming.versioned import read_snapshot
-
-    return read_snapshot(spark, target)
+    return read_cdc_state(spark, target)
 
 
 def q_stream_cdc_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,14 +673,12 @@ def q_stream_cdc_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         apply_cdc_batch_ooo(target, parse_envelope(batch_df))
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", f"{work}/ck")
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(180), "stream_cdc_ooo did not drain in time"
-    q.stop()
     return read_cdc_state(spark, target)
 
 
@@ -769,14 +768,12 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         apply_signature_dedup_batch(target, batch_df)
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", f"{work}/ck")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
     return read_snapshot(spark, target).select("doc_id", "sig")
 
 

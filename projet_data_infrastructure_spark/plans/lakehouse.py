@@ -42,6 +42,8 @@ from projet_data_infrastructure_spark.functions.hashing import (
 from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import read_table
+from projet_data_infrastructure_spark.streaming import versioned
+from projet_data_infrastructure_spark.streaming.sinks import drain
 
 # --------------------------------------------------------------------------
 # SCD Type-2 dimension history from a change stream
@@ -666,11 +668,15 @@ def _hll_rows(ev: DataFrame) -> DataFrame:
     return base.select("event_type", "bucket", m.alias("m"))
 
 
+def _hll_reduce(rows: DataFrame) -> DataFrame:
+    """Max (event_type, bucket, m) rows into registers — associative, so it
+    folds stored registers and fresh rows alike."""
+    return rows.groupBy("event_type", "bucket").agg(F.max("m").alias("m"))
+
+
 def _hll_registers(ev: DataFrame) -> DataFrame:
     """(event_type, bucket, m) register maxima — the mergeable HLL state."""
-    return _hll_rows(ev).groupBy("event_type", "bucket").agg(
-        F.max("m").alias("m")
-    )
+    return _hll_reduce(_hll_rows(ev))
 
 
 def _hll_report(regs: DataFrame, exact: DataFrame) -> DataFrame:
@@ -715,8 +721,6 @@ def q_stream_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta table and the merge stays ``union → groupBy max``."""
     import tempfile
 
-    from projet_data_infrastructure_spark.streaming import versioned
-
     work = tempfile.mkdtemp(prefix="stream_hll_")
     ev = read_table(spark, sf_dir, "events").select("event_id", "event_type")
     src = f"{work}/events"
@@ -730,29 +734,16 @@ def q_stream_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = f"{work}/state"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # One aggregate per batch: fold the stored sketch and the batch's
-        # per-event rows together (max is associative — pre-reducing the
-        # batch first only added an exchange; partial aggregation condenses
-        # the union to ≤ M·|types| rows per task before it ships).
-        if versioned.snapshot_exists(target):
-            current = versioned.read_snapshot(batch_df.sparkSession, target)
-            regs = (
-                current.unionByName(_hll_rows(batch_df))
-                .groupBy("event_type", "bucket")
-                .agg(F.max("m").alias("m"))
-            )
-        else:
-            regs = _hll_registers(batch_df)
-        versioned.write_snapshot(regs, target)
+        # Partial aggregation condenses stored ∪ rows to ≤ M·|types| rows
+        # per task before the max ships.
+        versioned.fold_snapshot(_hll_rows(batch_df), target, _hll_reduce)
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", f"{work}/ck")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
     exact = ev.groupBy("event_type").agg(
         F.count_distinct(F.col("event_id")).alias("n_exact")
     )

@@ -39,6 +39,8 @@ from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 from projet_data_infrastructure_spark.functions.hashing import HEX_PREFIX_LEN
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import read_table
+from projet_data_infrastructure_spark.streaming import versioned
+from projet_data_infrastructure_spark.streaming.sinks import drain
 
 # --------------------------------------------------------------------------
 # seeded portable hash where the seed is a COLUMN (the per-row sketch seeds
@@ -108,9 +110,15 @@ def _cms_updates(ev: DataFrame) -> DataFrame:
     )
 
 
+def _cms_reduce(updates: DataFrame) -> DataFrame:
+    """Sum (s, bucket, cnt) rows into registers — associative, so it folds
+    stored registers and fresh updates alike."""
+    return updates.groupBy("s", "bucket").agg(F.sum("cnt").alias("cnt"))
+
+
 def _cms_registers(ev: DataFrame) -> DataFrame:
     """(s, bucket, cnt) Count-Min registers — the additive mergeable state."""
-    return _cms_updates(ev).groupBy("s", "bucket").agg(F.sum("cnt").alias("cnt"))
+    return _cms_reduce(_cms_updates(ev))
 
 
 def _cms_probe(regs: DataFrame, ev: DataFrame) -> DataFrame:
@@ -157,8 +165,6 @@ def q_stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge stays ``union → groupBy sum``."""
     import tempfile
 
-    from projet_data_infrastructure_spark.streaming import versioned
-
     work = tempfile.mkdtemp(prefix="stream_cms_")
     ev = read_table(spark, sf_dir, "events").select("user_id")
     src = f"{work}/events"
@@ -172,28 +178,16 @@ def q_stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = f"{work}/state"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # One aggregate per batch: fold the stored registers and the batch's
-        # per-event increments together (addition is associative; partial
-        # aggregation condenses the union to ≤ d·w rows per task).
-        if versioned.snapshot_exists(target):
-            current = versioned.read_snapshot(batch_df.sparkSession, target)
-            regs = (
-                current.unionByName(_cms_updates(batch_df))
-                .groupBy("s", "bucket")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            regs = _cms_registers(batch_df)
-        versioned.write_snapshot(regs, target)
+        # Partial aggregation condenses stored ∪ increments to ≤ d·w rows
+        # per task before the sum ships.
+        versioned.fold_snapshot(_cms_updates(batch_df), target, _cms_reduce)
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", f"{work}/ck")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
     return _cms_probe(versioned.read_snapshot(spark, target), ev)
 
 

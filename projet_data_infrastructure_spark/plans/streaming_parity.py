@@ -23,6 +23,7 @@ from projet_data_infrastructure_spark.sources.readers import (
     read_table,
     read_table_balanced,
 )
+from projet_data_infrastructure_spark.streaming.sinks import drain
 
 SPECS: list[QuerySpec] = []
 
@@ -191,16 +192,12 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # appending duplicate rows to the store.
             result.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-        q = (
+        drain(
             stream.writeStream.foreachBatch(handle)
             .option("checkpointLocation", f"{work}/ck")
             .trigger(availableNow=True)
             .start()
         )
-        # awaitTermination returns False on timeout — fail loudly rather than
-        # reading a partially-written store as a confusing oracle mismatch.
-        assert q.awaitTermination(180), "stream_incremental_dedup timed out"
-        q.stop()
         # Partition discovery surfaces the batch_id path key as a column;
         # drop it — the accumulated store equals the batch spec's output.
         # Materialize before the finally-cleanup deletes the backing files.

@@ -7,9 +7,10 @@ no deletes. This module does CDC properly, Spark-first:
 
 * one ``from_json`` with the full envelope schema (before/after/op/ts_ms),
 * tombstone + malformed-row policy as explicit filters,
-* ``apply_cdc_batch``: op-aware upsert/delete semantics for ``foreachBatch``
-  (Delta ``MERGE`` when delta-spark is installed; a deterministic
-  keep-latest-by-key reduction otherwise — same semantics, parquet-friendly).
+* ``apply_cdc_batch_ooo``: op-aware upsert/delete semantics for
+  ``foreachBatch`` — a deterministic keep-latest-by-key fold of each batch
+  into a versioned snapshot that keeps tombstones, so late (out-of-order)
+  changes cannot override newer ones; ``read_cdc_state`` is its live view.
 
 Scale: parsing is JVM-side json decoding within whole-stage codegen; the
 apply step shuffles once on the key (latest-wins reduction), which is the
@@ -21,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from projet_data_infrastructure_spark.streaming import versioned
 
 #: Row payload of the reference's sport_activities stream
 #: (SaveDelta.scala:87-95; µs-epoch start_datetime per FIXTURES.md).
@@ -111,102 +114,32 @@ def latest_by_key(changes: DataFrame, key: str = "id") -> DataFrame:
     return changes.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def apply_cdc_batch(target_path: str, changes: DataFrame, key: str = "id") -> None:
-    """Apply a micro-batch of parsed changes to a lakehouse table.
-
-    With delta-spark installed this is a ``MERGE`` (upsert for op in c/r/u,
-    delete for op=d). Without Delta (this container), the portable reduction:
-    read current + latest changes → keep-latest per key → drop deletes →
-    overwrite. Same end state, usable under ``foreachBatch``.
-    """
-    spark = changes.sparkSession
-    latest = latest_by_key(changes, key)
-    meta_cols = [c for c in ("op", "ts_ms", "_seq") if c in latest.columns]
-    try:  # pragma: no cover - delta not installed in the test container
-        from delta.tables import DeltaTable  # type: ignore
-
-        if not DeltaTable.isDeltaTable(spark, target_path):
-            # Fresh target: bootstrap with the non-delete image instead of
-            # letting DeltaTable.forPath raise AnalysisException.
-            latest.filter(F.col("op") != "d").drop(*meta_cols).write.format(
-                "delta"
-            ).mode("overwrite").save(target_path)
-            return
-        tgt = DeltaTable.forPath(spark, target_path)
-        # Explicit column maps: the meta columns (op/ts_ms/_seq) drive the
-        # merge but must not be written into the target table.
-        row_cols = [c for c in latest.columns if c not in meta_cols]
-        assign = {c: f"s.{c}" for c in row_cols}
-        (
-            tgt.alias("t")
-            .merge(latest.alias("s"), f"t.{key} = s.{key}")
-            .whenMatchedDelete(condition="s.op = 'd'")
-            .whenMatchedUpdate(condition="s.op != 'd'", set=assign)
-            .whenNotMatchedInsert(condition="s.op != 'd'", values=assign)
-            .execute()
-        )
-        return
-    except ImportError:
-        pass
-    from projet_data_infrastructure_spark.streaming import versioned
-
-    current = None
-    if versioned.snapshot_exists(target_path):
-        current = versioned.read_snapshot(spark, target_path)
-    upserts = latest.filter(F.col("op") != "d").drop(*meta_cols)
-    if current is not None:
-        survivors = current.join(latest.select(key), key, "left_anti")
-        upserts = survivors.unionByName(upserts, allowMissingColumns=True)
-    # Atomic publish: new immutable snapshot + pointer flip (see
-    # streaming/versioned.py) — readers never observe partial state. Delta's
-    # transactional MERGE replaces this whole branch when installed.
-    versioned.write_snapshot(upserts, target_path)
-
-
 def apply_cdc_batch_ooo(target_path: str, changes: DataFrame, key: str = "id") -> None:
-    """Out-of-order-safe CDC apply: reconciliation-grade ``foreachBatch``.
+    """Op-aware, out-of-order-safe CDC apply for ``foreachBatch``.
 
-    :func:`apply_cdc_batch` is last-BATCH-wins: a batch's change always
-    overrides the stored row, which is correct only when the source
-    delivers each key's changes in ``ts_ms`` order across micro-batches.
     Real CDC feeds (multi-partition Kafka topics, backfills, replayed
     windows) interleave — an update with ``ts_ms=5`` can arrive a batch
-    AFTER the delete with ``ts_ms=10`` it logically precedes. This variant
-    keeps the change metadata (``op``/``ts_ms``/``_seq``) — including
-    DELETE TOMBSTONES — inside the stored state and re-runs
-    :func:`latest_by_key` over ``stored ∪ incoming`` each batch, so the
-    end state is the per-key argmax over (ts_ms, _seq, op) of every change
-    ever seen, independent of how changes were sliced into batches. Read
-    the user-facing table with :func:`read_cdc_state`, which drops
-    tombstones and metadata.
+    AFTER the delete with ``ts_ms=10`` it logically precedes, so a
+    last-batch-wins apply would resurrect stale rows. This apply keeps the
+    change metadata (``op``/``ts_ms``/``_seq``) — including DELETE
+    TOMBSTONES — inside the stored state and folds each batch into it with
+    :func:`latest_by_key` (``versioned.fold_snapshot``), so the end state
+    is the per-key argmax over (ts_ms, _seq, op) of every change ever seen,
+    independent of how changes were sliced into batches. On an in-order
+    feed that is the plain upsert/delete end state. Read the user-facing
+    table with :func:`read_cdc_state`, which drops tombstones and metadata.
 
     Scale: one keyed shuffle per batch over |state| + |batch| rows — the
     same asymptotics as any snapshot-based merge; with Delta installed the
     equivalent is a MERGE whose condition compares ``s.ts_ms >= t.ts_ms``
     (tombstones retained as flagged rows, vacuumed by retention).
     """
-    from projet_data_infrastructure_spark.streaming import versioned
-
-    # One reduction per batch, not two: the per-key argmax over
-    # (ts_ms, _seq, op) is associative, so pre-reducing the incoming slice
-    # before reducing ``stored ∪ incoming`` only removes rows the outer
-    # window discards anyway — same winner row, one fewer window + exchange
-    # per micro-batch (r15, guide §2.4).
-    if versioned.snapshot_exists(target_path):
-        current = versioned.read_snapshot(changes.sparkSession, target_path)
-        latest = latest_by_key(
-            current.unionByName(changes, allowMissingColumns=True), key
-        )
-    else:
-        latest = latest_by_key(changes, key)
-    versioned.write_snapshot(latest, target_path)
+    versioned.fold_snapshot(changes, target_path, lambda rows: latest_by_key(rows, key))
 
 
 def read_cdc_state(spark, target_path: str) -> DataFrame:
     """User-facing view of an :func:`apply_cdc_batch_ooo` table: live rows
     only (tombstones filtered), change metadata dropped."""
-    from projet_data_infrastructure_spark.streaming import versioned
-
     state = versioned.read_snapshot(spark, target_path)
     meta = [c for c in ("op", "ts_ms", "_seq") if c in state.columns]
     return state.filter(F.col("op") != "d").drop(*meta)

@@ -22,6 +22,24 @@ from projet_data_infrastructure_spark.session import HAVE_DELTA
 
 LAKE_FORMAT = "delta" if HAVE_DELTA else "parquet"
 
+#: How long :func:`drain` waits for an availableNow query to terminate.
+DRAIN_TIMEOUT_S = 180
+
+
+def drain(query: StreamingQuery) -> None:
+    """Wait for an availableNow ``query`` to process its backlog, then stop it.
+
+    ``awaitTermination`` returns False on timeout; raise then, rather than
+    let the caller read a partly written sink as a confusing mismatch. The
+    query is stopped either way, so a stalled one never outlives its caller."""
+    try:
+        done = query.awaitTermination(DRAIN_TIMEOUT_S)
+    finally:
+        query.stop()
+    if not done:
+        name = query.name or query.id
+        raise TimeoutError(f"stream {name} did not drain in {DRAIN_TIMEOUT_S} s")
+
 
 def stream_append_sink(
     df: DataFrame,

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,6 +63,23 @@ def read_snapshot(spark: SparkSession, table_path: str, version: int | None = No
 
 def snapshot_exists(table_path: str) -> bool:
     return latest_version(table_path) is not None
+
+
+def fold_snapshot(
+    rows: DataFrame, table_path: str, reduce: Callable[[DataFrame], DataFrame]
+) -> int:
+    """Fold a micro-batch into the published snapshot: publish
+    ``reduce(stored ∪ rows)``, or ``reduce(rows)`` when nothing is stored yet.
+
+    ``reduce`` must be associative over unions (a per-key argmax, a register
+    max or sum), so the stored state equals one reduction over every row
+    ever folded, however the rows were sliced into batches. One reduction
+    per batch: reducing ``rows`` first only adds an exchange the outer
+    reduction redoes."""
+    if snapshot_exists(table_path):
+        stored = read_snapshot(rows.sparkSession, table_path)
+        rows = stored.unionByName(rows, allowMissingColumns=True)
+    return write_snapshot(reduce(rows), table_path)
 
 
 def compact_snapshot(spark: SparkSession, table_path: str, target_files: int = 1) -> int:

@@ -7,10 +7,12 @@ import json
 from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.streaming.cdc import (
-    apply_cdc_batch,
+    apply_cdc_batch_ooo,
     latest_by_key,
     parse_envelope,
+    read_cdc_state,
 )
+from projet_data_infrastructure_spark.streaming.sinks import drain
 from projet_data_infrastructure_spark.streaming.versioned import read_snapshot
 
 
@@ -82,17 +84,15 @@ def test_streaming_cdc_apply_end_to_end(spark, tmp_path):
     stream = spark.readStream.schema("value string").format("parquet").load(src)
 
     def handle(batch_df, batch_id):
-        apply_cdc_batch(target, parse_envelope(batch_df))
+        apply_cdc_batch_ooo(target, parse_envelope(batch_df))
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
-    rows = {r["id"]: r for r in read_snapshot(spark, target).collect()}
+    rows = {r["id"]: r for r in read_cdc_state(spark, target).collect()}
     assert set(rows) == {1}  # delete applied, update applied
     assert rows[1]["activity_duration"] == 3600
 
@@ -129,22 +129,20 @@ def test_streaming_cdc_restart_incremental(spark, tmp_path):
         def handle(batch_df, batch_id):
             parsed = parse_envelope(batch_df)
             if parsed.take(1):
-                apply_cdc_batch(target, parsed)
+                apply_cdc_batch_ooo(target, parsed)
 
-        q = (
+        drain(
             stream.writeStream.foreachBatch(handle)
             .option("checkpointLocation", ck)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        q.stop()
 
     (src / "batch1.jsonl").write_text(
         "\n".join([envelope("c", after=ROW1, ts_ms=1000), envelope("c", after=ROW2, ts_ms=1001)])
     )
     run_once()
-    assert {r["id"] for r in read_snapshot(spark, target).collect()} == {1, 2}
+    assert {r["id"] for r in read_cdc_state(spark, target).collect()} == {1, 2}
 
     (src / "batch2.jsonl").write_text(
         "\n".join(
@@ -155,7 +153,7 @@ def test_streaming_cdc_restart_incremental(spark, tmp_path):
         )
     )
     run_once()
-    rows = {r["id"]: r for r in read_snapshot(spark, target).collect()}
+    rows = {r["id"]: r for r in read_cdc_state(spark, target).collect()}
     assert set(rows) == {1} and rows[1]["activity_duration"] == 3600
     # Restart with NO new files: no new snapshot version is published
     # (the replayed source yields an empty batch, which we skip applying).
@@ -169,8 +167,8 @@ def test_streaming_cdc_restart_incremental(spark, tmp_path):
 def test_apply_cdc_batch_upsert_delete(spark, tmp_path):
     target = str(tmp_path / "activities")
     changes = parse_envelope(golden_frame(spark))
-    apply_cdc_batch(target, changes)
-    state = read_snapshot(spark, target)
+    apply_cdc_batch_ooo(target, changes)
+    state = read_cdc_state(spark, target)
     rows = {r["id"]: r for r in state.collect()}
     assert set(rows) == {1}  # id 2 deleted, id 1 upserted to v2
     assert rows[1]["activity_duration"] == 3600
@@ -183,10 +181,12 @@ def test_apply_cdc_batch_upsert_delete(spark, tmp_path):
         ],
         "value string",
     )
-    apply_cdc_batch(target, parse_envelope(batch2))
-    rows = {r["id"]: r for r in read_snapshot(spark, target).collect()}
-    # time travel: v1 still shows the pre-batch-2 state
-    assert {r["id"] for r in read_snapshot(spark, target, version=1).collect()} == {1}
+    apply_cdc_batch_ooo(target, parse_envelope(batch2))
+    rows = {r["id"]: r for r in read_cdc_state(spark, target).collect()}
+    # time travel: v1 still shows the pre-batch-2 state (its live rows; the
+    # stored state keeps delete tombstones)
+    v1 = read_snapshot(spark, target, version=1).filter(F.col("op") != "d")
+    assert {r["id"] for r in v1.collect()} == {1}
     assert set(rows) == {1, 2}
     assert rows[1]["comment"] == "v3"
 
@@ -216,13 +216,13 @@ def test_apply_cdc_batch_replay_is_idempotent(spark, tmp_path):
     retries are exactly-once-equivalent without a batch-id ledger."""
     target = str(tmp_path / "replay")
     changes = parse_envelope(golden_frame(spark))
-    apply_cdc_batch(target, changes)
+    apply_cdc_batch_ooo(target, changes)
     before = sorted(
-        tuple(r) for r in read_snapshot(spark, target).select("id", "comment").collect()
+        tuple(r) for r in read_cdc_state(spark, target).select("id", "comment").collect()
     )
-    apply_cdc_batch(target, changes)  # replay, verbatim
+    apply_cdc_batch_ooo(target, changes)  # replay, verbatim
     after = sorted(
-        tuple(r) for r in read_snapshot(spark, target).select("id", "comment").collect()
+        tuple(r) for r in read_cdc_state(spark, target).select("id", "comment").collect()
     )
     assert after == before
 
@@ -230,13 +230,8 @@ def test_apply_cdc_batch_replay_is_idempotent(spark, tmp_path):
 def test_apply_cdc_batch_ooo_late_arrivals(spark, tmp_path):
     """Reconciliation-grade out-of-order apply: a change arriving a batch
     LATE must not override a logically-newer change already applied —
-    tombstones included. (apply_cdc_batch is last-batch-wins by contract;
-    apply_cdc_batch_ooo stores op/ts_ms with the state and re-reduces.)"""
-    from projet_data_infrastructure_spark.streaming.cdc import (
-        apply_cdc_batch_ooo,
-        read_cdc_state,
-    )
-
+    tombstones included: apply_cdc_batch_ooo stores op/ts_ms with the
+    state and re-reduces."""
     target = str(tmp_path / "ooo")
     # batch 1: delete id1 @ ts 10, update id2 -> "new" @ ts 20
     b1 = spark.createDataFrame(
@@ -273,13 +268,6 @@ def test_apply_cdc_batch_ooo_batch_slicing_invariant(spark, tmp_path):
     including replays. Deterministic sweep over slicings and orders of an
     8-change / 3-key feed with ts inversions and delete-update races."""
     import itertools
-
-    from pyspark.sql import functions as F
-
-    from projet_data_infrastructure_spark.streaming.cdc import (
-        apply_cdc_batch_ooo,
-        read_cdc_state,
-    )
 
     changes = [
         ("c", dict(ROW1, comment="a1"), None, 10),

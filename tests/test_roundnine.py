@@ -12,6 +12,7 @@ import projet_data_infrastructure_spark.plans.events_queries as evq
 import projet_data_infrastructure_spark.plans.stats_inference as si
 import projet_data_infrastructure_spark.plans.streaming_parity as spar
 import projet_data_infrastructure_spark.plans.timeseries as tsm
+from projet_data_infrastructure_spark.streaming.sinks import drain
 
 SF = "/root/testdata/sf0.001"
 
@@ -32,7 +33,7 @@ def _run_funnel3(spark, rows):
     work = tempfile.mkdtemp(prefix="funnel3_unit_")
     src.coalesce(1).write.parquet(f"{work}/in")
     stream = spark.readStream.schema(src.schema).format("parquet").load(f"{work}/in")
-    q = (
+    drain(
         funnel3_state(stream)
         .writeStream.outputMode("update")
         .queryName("funnel3_unit")
@@ -40,8 +41,6 @@ def _run_funnel3(spark, rows):
         .format("memory")
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
     return {
         r.user_id: (r.first_view_us, r.first_click_us, r.first_purchase_us)
         for r in spark.table("funnel3_unit").collect()
@@ -153,14 +152,12 @@ def test_stream_incremental_dedup_batch_split_invariant(spark, monkeypatch):
             "append"
         ).parquet(out_dir)
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", f"{work}/ck")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
-    q.stop()
     assert len(batch_ids) >= 2  # genuinely split
     streamed = {
         r.new_doc: (r.matched_index_doc, r.jac_micro, r.n_matches)
@@ -570,7 +567,7 @@ def test_dedup_within_watermark_evicts_state(spark, tmp_path):
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    q = (
+    drain(
         stream.writeStream.outputMode("append")
         .queryName("dedup_wm_unit")
         .option("checkpointLocation", str(tmp_path / "ck"))
@@ -578,8 +575,6 @@ def test_dedup_within_watermark_evicts_state(spark, tmp_path):
         .format("memory")
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
     counts = {}
     for r in spark.table("dedup_wm_unit").collect():
         counts[r.event_id] = counts.get(r.event_id, 0) + 1
@@ -609,7 +604,7 @@ def test_dedup_within_watermark_suppresses_in_window(spark, tmp_path):
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    q = (
+    drain(
         stream.writeStream.outputMode("append")
         .queryName("dedup_wm_unit2")
         .option("checkpointLocation", str(tmp_path / "ck"))
@@ -617,8 +612,6 @@ def test_dedup_within_watermark_suppresses_in_window(spark, tmp_path):
         .format("memory")
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
     assert spark.table("dedup_wm_unit2").count() == 1
 
 

@@ -4,6 +4,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from projet_data_infrastructure_spark.streaming.sinks import drain
 from projet_data_infrastructure_spark.streaming.sources import file_replay_stream
 from projet_data_infrastructure_spark.streaming.stateful import running_totals
 
@@ -19,7 +20,7 @@ def test_running_totals_accumulate_across_batches(spark, tmp_path):
         spark, src, "user_id LONG, value DOUBLE", max_files_per_trigger=1
     )
     out = running_totals(stream)
-    q = (
+    drain(
         out.writeStream.outputMode("update")
         .format("memory")
         .queryName("state_sink")
@@ -27,8 +28,6 @@ def test_running_totals_accumulate_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
 
     # memory sink in update mode appends each emission; the LAST row per key
     # is the final running total. Across both batches user 1 saw 3 events.
@@ -70,7 +69,7 @@ def test_transform_with_state_matches_legacy_api(spark, tmp_path):
         spark, src, "user_id LONG, value DOUBLE", max_files_per_trigger=1
     )
     out = running_totals_tws(stream)
-    q = (
+    drain(
         out.writeStream.outputMode("update")
         .format("memory")
         .queryName("tws_sink")
@@ -78,8 +77,6 @@ def test_transform_with_state_matches_legacy_api(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
     last = {}
     for r in spark.table("tws_sink").collect():
         last[r["key"]] = (r["n_events"], r["total_value"])
@@ -132,7 +129,7 @@ def test_pit_regimes_state_carries_across_batches(spark):
         )
         collected = []
         # memory sink cannot recover from a checkpoint; foreachBatch can.
-        q = (
+        drain(
             pit_regimes(stream)
             .writeStream.outputMode("update")
             .option("checkpointLocation", ckpt)
@@ -140,8 +137,6 @@ def test_pit_regimes_state_carries_across_batches(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        q.stop()
         return collected
 
     out1 = run_batch(

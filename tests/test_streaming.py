@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from projet_data_infrastructure_spark.streaming.monitor import attach_monitor, reconcile
 from projet_data_infrastructure_spark.streaming.sinks import (
     csv_sink,
+    drain,
     foreach_batch_http_sink,
     jsonl_sink,
     stream_append_sink,
@@ -57,7 +58,7 @@ def test_events_stream_ts_matches_batch_read(spark):
     from projet_data_infrastructure_spark.sources.readers import read_table
 
     sf = "/root/testdata/sf0.001"
-    got = (
+    drain(
         events_stream(spark, sf)
         .select("event_id", "ts")
         .writeStream.format("memory")
@@ -65,8 +66,6 @@ def test_events_stream_ts_matches_batch_read(spark):
         .trigger(availableNow=True)
         .start()
     )
-    got.awaitTermination(60)
-    got.stop()
     streamed = {
         r["event_id"]: r["ts"] for r in spark.table("ts_unit_probe").collect()
     }
@@ -98,8 +97,7 @@ def test_rate_source_produces_rows(spark, tmp_path):
 def test_stream_append_sink_checkpointed(spark, tmp_path):
     out, ckpt = str(tmp_path / "lake"), str(tmp_path / "ckpt")
     stream = with_event_date(events_stream(spark), "ts")
-    q = stream_append_sink(stream, out, ckpt, available_now=True, partition_by="event_date")
-    q.awaitTermination(120)
+    drain(stream_append_sink(stream, out, ckpt, available_now=True, partition_by="event_date"))
     written = spark.read.parquet(out)
     expected = spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()
     assert written.count() == expected
@@ -107,9 +105,8 @@ def test_stream_append_sink_checkpointed(spark, tmp_path):
     assert "event_date" in written.columns
 
     # idempotent restart: same checkpoint, no new data → no duplicates
-    q2 = stream_append_sink(events_stream(spark).transform(lambda d: with_event_date(d, "ts")),
-                            out, ckpt, available_now=True, partition_by="event_date")
-    q2.awaitTermination(60)
+    drain(stream_append_sink(events_stream(spark).transform(lambda d: with_event_date(d, "ts")),
+                             out, ckpt, available_now=True, partition_by="event_date"))
     assert spark.read.parquet(out).count() == expected
 
 
@@ -157,14 +154,12 @@ def test_incremental_microbatches_respect_max_files(spark, tmp_path):
     def handle(df, bid):
         batches.append((bid, df.count()))
 
-    q = (
+    drain(
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
     assert sum(c for _, c in batches) == 30
     assert len(batches) >= 3
 
@@ -174,9 +169,7 @@ def test_foreach_batch_http_sink_collects(spark):
     stream = events_stream(spark).withColumn(
         "comment", F.when(F.col("event_type") == "error", F.lit("failed run"))
     )
-    q = foreach_batch_http_sink(stream, posted.extend, filter_expr="comment IS NOT NULL")
-    q.awaitTermination(120)
-    q.stop()
+    drain(foreach_batch_http_sink(stream, posted.extend, filter_expr="comment IS NOT NULL"))
     n_errors = (
         spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         .filter("event_type = 'error'")
@@ -191,11 +184,7 @@ def test_foreach_batch_http_sink_chunks_burst_batches(spark):
     # reach `post` as bounded chunks, never one unbounded list.
     calls: list[list[dict]] = []
     stream = events_stream(spark).withColumn("comment", F.lit("x"))
-    q = foreach_batch_http_sink(
-        stream, calls.append, filter_expr=None, max_rows_per_post=100
-    )
-    q.awaitTermination(120)
-    q.stop()
+    drain(foreach_batch_http_sink(stream, calls.append, filter_expr=None, max_rows_per_post=100))
     total = spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()
     assert sum(len(c) for c in calls) == total
     assert len(calls) >= 2  # the burst was actually split
@@ -241,7 +230,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
     flat = agg.select(F.col("w.start").alias("wstart"), "n")
 
     def run_once():
-        q = (
+        drain(
             flat.writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
@@ -249,7 +238,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(60)
 
     run_once()
     late.coalesce(1).write.mode("append").parquet(src)
@@ -262,10 +250,11 @@ def test_watermark_drops_late_data(spark, tmp_path):
 def test_monitor_listener_counts(spark, tmp_path):
     monitor = attach_monitor(spark)
     out, ckpt = str(tmp_path / "m_lake"), str(tmp_path / "m_ckpt")
-    q = stream_append_sink(
-        events_stream(spark), out, ckpt, available_now=True, query_name="monitored"
+    drain(
+        stream_append_sink(
+            events_stream(spark), out, ckpt, available_now=True, query_name="monitored"
+        )
     )
-    q.awaitTermination(120)
     deadline = time.time() + 15
     expected = spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()
     while time.time() < deadline and monitor.stats.total_rows < expected:
@@ -319,7 +308,7 @@ def test_dedup_within_watermark_bounds_state(spark, tmp_path):
     ckpt, out = str(tmp_path / "ck"), str(tmp_path / "out")
 
     def run_once():
-        q = (
+        drain(
             dedup.writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
@@ -327,7 +316,6 @@ def test_dedup_within_watermark_bounds_state(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(60)
 
     run_once()
     batch2.coalesce(1).write.mode("append").parquet(src)
@@ -359,7 +347,7 @@ def test_observe_metrics_reach_monitor(spark, tmp_path):
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").isNull().cast("long")).alias("n_null_value"),
     )
-    q = (
+    drain(
         observed.writeStream.outputMode("append")
         .format("parquet")
         .option("path", str(tmp_path / "obs_out"))
@@ -367,7 +355,6 @@ def test_observe_metrics_reach_monitor(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
     deadline = time.time() + 15
     while time.time() < deadline and "quality" not in monitor.stats.observed:
         time.sleep(0.5)
@@ -398,3 +385,26 @@ def test_signature_dedup_first_arrival_wins_across_batches(spark, tmp_path):
     apply_signature_dedup_batch(target, b2)
     state = {r.doc_id for r in read_snapshot(spark, target).collect()}
     assert state == {10, 20}, state
+
+
+def test_drain_raises_and_stops_a_stalled_stream(spark, tmp_path, monkeypatch):
+    """A query still running at the drain timeout raises TimeoutError and is
+    stopped, so it cannot keep writing into whatever runs next."""
+    import pytest
+
+    from projet_data_infrastructure_spark.streaming import sinks
+
+    monkeypatch.setattr(sinks, "DRAIN_TIMEOUT_S", 1)
+    src = str(tmp_path / "src")
+    spark.range(3).coalesce(1).write.parquet(src)
+    stream = file_replay_stream(spark, src, "id bigint")
+    q = (
+        stream.writeStream.foreachBatch(lambda df, bid: time.sleep(4))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(TimeoutError):
+        drain(q)
+    assert not q.isActive
+    assert spark.streams.active == []

@@ -1,12 +1,12 @@
 """Capture .explain("formatted") for named specs (or every pinned headliner)
-into plans/r14/<query>_<label>.txt, plus a one-line smell summary per query.
+into plans/<label>/<query>.txt, plus a one-line smell summary per query.
 
 Usage:
     python tools/plan_capture.py <label> [name ...]
 
-With no names, captures every name in BENCH_HEADLINERS.json. Smells flagged:
-BatchEvalPython/ArrowEvalPython nodes, SortMergeJoin, CartesianProduct,
-Exchange count, missing PushedFilters on filtered scans.
+With no names, captures every pinned headliner (``bench.headliners()``).
+Smells flagged: BatchEvalPython/ArrowEvalPython nodes, SortMergeJoin,
+CartesianProduct, Exchange count, missing PushedFilters on filtered scans.
 """
 
 from __future__ import annotations
@@ -18,22 +18,17 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-import json
-
+from bench import headliners
 from projet_data_infrastructure_spark.plans import all_specs
 from projet_data_infrastructure_spark.session import get_spark
-
-OUT_DIR = os.path.join(ROOT, "plans", "r14")
 
 
 def main() -> None:
     label = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
-    if not names:
-        with open(os.path.join(ROOT, "BENCH_HEADLINERS.json")) as f:
-            names = json.load(f)["names"]
+    names = sys.argv[2:] or headliners()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(OUT_DIR, exist_ok=True)
+    out_dir = os.path.join(ROOT, "plans", label)
+    os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-capture")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     specs = {s.name: s for s in all_specs()}
@@ -49,7 +44,7 @@ def main() -> None:
         except Exception as e:  # streaming specs EXECUTE in fn(); skip plan
             rows.append((name, f"ERROR {type(e).__name__}: {e}"))
             continue
-        with open(os.path.join(OUT_DIR, f"{name}_{label}.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(plan)
         n_exch = len(re.findall(r"\bExchange\b", plan))
         smells = []
