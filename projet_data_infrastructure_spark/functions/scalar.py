@@ -40,8 +40,3 @@ def is_weekend(ts: Column) -> Column:
     Spark ``dayofweek`` is 1=Sunday..7=Saturday, so weekend = {1, 7}.
     """
     return F.dayofweek(ts).isin(1, 7)
-
-
-def km_from_meters(col: Column) -> Column:
-    """F5: metres → km (``commute_validation.py:112``)."""
-    return col / F.lit(1000.0)

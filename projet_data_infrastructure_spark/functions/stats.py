@@ -10,9 +10,6 @@ doubles and hash-check without tolerance fudges.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 #: Zelen & Severo coefficients (A&S 26.2.17).
 _B = (0.319381530, -0.356563782, 1.781477937, -1.821255978, 1.330274429)
 _P = 0.2316419
@@ -41,8 +38,3 @@ def two_sided_p_sql(z_expr: str) -> str:
     evaluate the verbatim-identical expression tree.
     """
     return f"(2.0 * {_sf_formula(f'abs({z_expr})')})"
-
-
-def two_sided_p(z_expr: str) -> Column:
-    """Spark Column form of :func:`two_sided_p_sql` (same shared tree)."""
-    return F.expr(two_sided_p_sql(z_expr))

@@ -50,11 +50,6 @@ def fake_decode(payload: bytes) -> dict:
     return {"width": w, "height": h, "feature": feat}
 
 
-def real_decode(payload: bytes) -> dict:  # pragma: no cover
-    """Placeholder for the production decoder (Pillow/ffmpeg not installed)."""
-    raise NotImplementedError("media codecs are not available in this environment")
-
-
 def synthetic_assets(spark, n: int = 64) -> DataFrame:
     """Synthetic binary asset table for tests (id, media_type, content)."""
     return spark.range(n).select(

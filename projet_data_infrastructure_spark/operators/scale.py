@@ -93,14 +93,6 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def co_partition(left: DataFrame, right: DataFrame, key: str, n: int | None = None):
-    """Shuffle both sides onto the same hash partitioning once, so a chain of
-    joins/aggs on ``key`` reuses the exchange instead of re-shuffling."""
-    if n:
-        return left.repartition(n, key), right.repartition(n, key)
-    return left.repartition(key), right.repartition(key)
-
-
 def explain_has(df: DataFrame, *needles: str) -> dict[str, bool]:
     """Plan introspection helper (used by plan-quality tests): which of the
     given operator names appear in the formatted physical plan."""

@@ -22,10 +22,14 @@ are bit-stable and cross-engine comparable after a 1e-6 round.
 
 from __future__ import annotations
 
+import math
+from functools import reduce
+from operator import add
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from projet_data_infrastructure_spark.plans._portable import _EPS, pround
+from projet_data_infrastructure_spark.plans._portable import _EPS, fdiv, pround
 
 
 def derived_n_centroids(n_rows: int, floor: int = 8) -> int:
@@ -35,8 +39,6 @@ def derived_n_centroids(n_rows: int, floor: int = 8) -> int:
     the bucketed path to stay sub-quadratic; C ≈ √N keeps expected total pair
     comparisons ≈ N^1.5. Computed via double sqrt (not ``math.isqrt``) so it
     is bit-identical to the oracle's ``floor(sqrt(count(*)::DOUBLE))``."""
-    import math
-
     return max(floor, int(math.floor(math.sqrt(float(n_rows)))))
 
 
@@ -61,6 +63,60 @@ def l2_sq(a: str | Column, b: str | Column) -> Column:
     a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
     diff = F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** F.lit(2))
     return F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _portable_l2(a: list[float], b: list[float]) -> float:
+    """Driver-side replica of ``pround(l2_sq(a, b), 6)``: the same sequential
+    Σ(x−y)² left fold, then the same portable half-up round, so a value the
+    driver computes from model parameters (ADC tables, probed buckets) is
+    bit-identical to the one the executors compute."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += (x - y) ** 2
+    return math.floor(acc * 1e6 + (0.5 + _EPS)) / 1e6
+
+
+def _arr_lit(vals: list[float]) -> Column:
+    """A literal array<double> column (plan-inlined, no join), built from ONE
+    parsed SQL string: a ``F.lit`` per element would issue one py4j call
+    each. ``repr(float)`` is shortest-roundtrip, so the parsed doubles are
+    bit-identical to the driver-side values."""
+    return F.expr("array(" + ",".join(f"CAST({v!r} AS DOUBLE)" for v in vals) + ")")
+
+
+def seed_vectors(
+    emb: DataFrame, n: int, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> list[tuple[int, list[float]]]:
+    """The rows with ``id_col < n`` as ``[(id, [float, …])]`` in id order —
+    the deterministic model parameters (IVF centroids, PQ codebook seeds,
+    Lloyd's round-0 centroids) every quantizer here starts from.
+
+    Bounded at n rows, so the id sort runs on the driver: one scan job,
+    where a distributed ``orderBy`` adds a range-sampling job and a
+    shuffle job for the same ≤ n rows."""
+    rows = emb.filter(F.col(id_col) < n).select(id_col, vec_col).collect()
+    return sorted(
+        ((int(r[id_col]), [float(x) for x in r[vec_col]]) for r in rows),
+        key=lambda c: c[0],
+    )
+
+
+def _query_vector(
+    emb: DataFrame, query_id: int, id_col: str, vec_col: str
+) -> list[float]:
+    """The query's vector, collected to enter a plan as a literal."""
+    rows = emb.filter(F.col(id_col) == query_id).select(vec_col).collect()
+    if not rows:
+        raise ValueError(f"query id {query_id} not found")
+    return [float(x) for x in rows[0][vec_col]]
+
+
+def _exact_rerank(
+    cands: DataFrame, emb: DataFrame, query_id: int, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact cosine top-k of ``cands`` against the query row of ``emb``."""
+    qvec = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("qvec"))
+    return brute_force_topk(cands, qvec, k, id_col, vec_col)
 
 
 def brute_force_topk(
@@ -128,17 +184,8 @@ def neardup_pairs_bucketed(
     repartition — the id filter then pushes down to parquet instead of
     paying the balance shuffle just to read C rows.
     """
-    cent_rows = (
-        (centroid_src if centroid_src is not None else emb)
-        .filter(F.col(id_col) < n_centroids)
-        .select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec"))
-        .orderBy("centroid_id")
-        .collect()
-    )
-    assign = centroid_argmin_col(
-        [(int(r["centroid_id"]), [float(x) for x in r["cvec"]]) for r in cent_rows],
-        vec_col,
-    )
+    src = centroid_src if centroid_src is not None else emb
+    assign = centroid_argmin_col(seed_vectors(src, n_centroids, id_col, vec_col), vec_col)
     # The bucket id is a map-side EXPRESSION on emb (no join back to the
     # assignment — that re-shuffled the table on vec_id). Norms likewise
     # precomputed ONCE per row before the pair join (linear work); inside
@@ -209,17 +256,8 @@ def semdedup_prune(
     centroid distance is computed ONCE per row before the pair join, so the
     join adds only the dot product per candidate pair.
     """
-    cent_rows = (
-        (centroid_src if centroid_src is not None else emb)
-        .filter(F.col(id_col) < n_centroids)
-        .select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec"))
-        .orderBy("centroid_id")
-        .collect()
-    )
-    best = centroid_argmin_col(
-        [(int(r["centroid_id"]), [float(x) for x in r["cvec"]]) for r in cent_rows],
-        vec_col,
-    )
+    src = centroid_src if centroid_src is not None else emb
+    best = centroid_argmin_col(seed_vectors(src, n_centroids, id_col, vec_col), vec_col)
     bucketed = emb.select(
         F.col(id_col),
         best["cid"].alias("centroid_id"),
@@ -316,6 +354,59 @@ def ivf_train_centroids(
     )
 
 
+def int_centroid_argmin_col(centroids: list[list[int]]) -> Column:
+    """Nearest of K integer centroids for the ``array<bigint>`` column ``q``:
+    ``struct(dist, cl)`` with dist the exact BIGINT squared L2 and ``cl``
+    the centroid's position; struct order breaks dist ties on the lower
+    ``cl``. One parsed SQL string instead of K×dim py4j ``F.lit`` calls
+    (literal building, not the data, dominated the wall clock)."""
+    structs = ",".join(
+        "struct(aggregate(zip_with(q, array("
+        + ",".join(f"CAST({int(v)} AS BIGINT)" for v in c)
+        + "), (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), "
+        f"(acc, x) -> acc + x) AS dist, {i} AS cl)"
+        for i, c in enumerate(centroids)
+    )
+    return F.expr(f"array_min(array({structs}))")
+
+
+def int_lloyd_centroids(q: DataFrame, k: int, rounds: int) -> list[list[int]]:
+    """Integer fixed-point Lloyd's k-means over ``(vec_id, q array<bigint>)``.
+
+    Round-0 centroids are the rows vec_id 0..k-1 (cluster id = position).
+    Each round assigns every row map-side (:func:`int_centroid_argmin_col`
+    over the inlined centroids, no join) and updates with one posexplode →
+    (cluster, dim) sum/count aggregate, whose exact floor-mean (``fdiv``)
+    is the new coordinate; a cluster that gets no rows keeps its previous
+    centroid. Integer arithmetic makes every round bit-exact in Spark and
+    in an unrolled SQL oracle. The driver sees only the K×dim centroid
+    matrix per round, never data rows."""
+    seeds = seed_vectors(q, k, "vec_id", "q")
+    if [i for i, _ in seeds] != list(range(k)):
+        raise ValueError(
+            f"Lloyd's seeds: expected vec_ids 0..{k - 1}, got {[i for i, _ in seeds]}"
+        )
+    centroids = [[int(v) for v in c] for _, c in seeds]
+    dim = len(centroids[0])
+    for _ in range(rounds):
+        sums = (
+            q.withColumn("cl", int_centroid_argmin_col(centroids)["cl"])
+            .select("cl", F.posexplode("q").alias("dim", "qv"))
+            .groupBy("cl", "dim")
+            .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
+            .withColumn("c", F.expr(fdiv("s", "n", "DIV")))
+            .collect()
+        )
+        bydim: dict[int, dict[int, int]] = {}
+        for r in sums:
+            bydim.setdefault(r["cl"], {})[r["dim"]] = r["c"]
+        centroids = [
+            [bydim.get(i, {}).get(d, centroids[i][d]) for d in range(dim)]
+            for i in range(k)
+        ]
+    return centroids
+
+
 # Above this centroid count the literal-inlined argmin plan is replaced by
 # the broadcast-join form: C = √N is data-sized, so at N = 10¹¹ vectors the
 # literal path would inline ~3×10⁵ vectors into the plan (plan-size/Janino
@@ -329,7 +420,6 @@ def ivf_assign_to(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_literal_centroids: int | None = None,
 ) -> DataFrame:
     """Assign vectors to the nearest of an ARBITRARY centroid table — the
     shared algebra behind seed-vector and k-means-trained IVF.
@@ -357,12 +447,15 @@ def ivf_assign_to(
     ``row_number() OVER (ORDER BY dist, centroid_id)`` applies — identical in
     both physical forms, so the switch can never change an answer.
     """
-    limit = LITERAL_CENTROID_MAX if max_literal_centroids is None else max_literal_centroids
-    # TakeOrdered of limit+1 rows: if the table fits, these ARE the sorted
-    # centroids (no second job); if not, we learned C > limit for the price
-    # of limit+1 rows on the driver rather than all C.
-    head = centroids.select("centroid_id", "cvec").orderBy("centroid_id").take(limit + 1)
-    if len(head) <= limit:
+    # TakeOrdered of LITERAL_CENTROID_MAX+1 rows: if the table fits, these
+    # ARE the sorted centroids (no second job); if not, we learned C is over
+    # the limit for the price of limit+1 rows on the driver rather than all C.
+    head = (
+        centroids.select("centroid_id", "cvec")
+        .orderBy("centroid_id")
+        .take(LITERAL_CENTROID_MAX + 1)
+    )
+    if len(head) <= LITERAL_CENTROID_MAX:
         best = centroid_argmin_col(
             [(int(r["centroid_id"]), [float(x) for x in r["cvec"]]) for r in head],
             vec_col,
@@ -412,14 +505,9 @@ def _ivf_assign_broadcast(
         ).alias("_cents"),
     )
     vec = F.col(vec_col)
-    scored = F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            pround(l2_sq(vec, c["cvec"]), 6).alias("dist"),
-            c["cid"].alias("cid"),
-        ),
+    best = F.array_min(
+        F.transform(F.col("_cents"), lambda c: _centroid_score(vec, c["cvec"], c["cid"]))
     )
-    best = F.array_min(scored)
     return emb.crossJoin(F.broadcast(packed)).select(
         F.col(id_col),
         best["cid"].alias("centroid_id"),
@@ -427,106 +515,78 @@ def _ivf_assign_broadcast(
     )
 
 
-def centroid_argmin_col(
+def _centroid_score(vec: Column, cvec: Column, cid: Column) -> Column:
+    """One nearest-centroid score ``struct(dist, cid)``: the rounded squared
+    L2, then the centroid id. Struct ordering is exactly the (min rounded
+    dist, lowest centroid_id) tie-break the oracles' ``row_number() OVER
+    (ORDER BY dist, centroid_id)`` applies."""
+    return F.struct(pround(l2_sq(vec, cvec), 6).alias("dist"), cid.alias("cid"))
+
+
+def _centroid_matrix_lit(cents: list[tuple[int, list[float]]]) -> Column:
+    """The array<array<double>> centroid literal, one :func:`_arr_lit` row
+    per centroid; residual computation indexes the SAME matrix by id."""
+    return F.array(*[_arr_lit(v) for _, v in cents])
+
+
+def _centroid_scores(
     cents: list[tuple[int, list[float]]], vec_col: str | Column
 ) -> Column:
-    """Map-side nearest-centroid struct column over driver-side centroids.
+    """Per-row array of :func:`_centroid_score` over driver-side centroids.
 
     The centroid matrix enters the plan as TWO array literals (an
     array<array<double>> and an array<int>) instead of a C·dim-node
     expression tree: the per-element ``F.array(F.lit(...))`` form made
     Janino compile multi-second generated methods, paid again for every
-    fresh plan. Each literal is built from ONE parsed SQL string — a
-    ``F.lit(nested_list)`` would itself issue C·dim py4j calls (~4 s at
-    C=44 measured), so the string form matters as much as the node count.
-    ``repr(float)`` is shortest-roundtrip, so the parsed doubles are
-    bit-identical to the collected centroids."""
+    fresh plan."""
     if not cents:
-        raise ValueError("centroid_argmin_col: centroid list is empty")
-    cvecs = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"CAST({x!r} AS DOUBLE)" for x in c[1]) + ")"
-            for c in cents
-        )
-        + ")"
-    )
-    cids = F.expr("array(" + ",".join(str(c[0]) for c in cents) + ")")
+        raise ValueError("centroid list is empty")
+    cvecs = _centroid_matrix_lit(cents)
+    cids = F.expr("array(" + ",".join(str(c) for c, _ in cents) + ")")
     vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    scored = F.transform(
+    return F.transform(
         F.sequence(F.lit(0), F.lit(len(cents) - 1)),
-        lambda i: F.struct(
-            pround(l2_sq(vec, cvecs[i]), 6).alias("dist"),
-            cids[i].alias("cid"),
-        ),
+        lambda i: _centroid_score(vec, cvecs[i], cids[i]),
     )
-    return F.array_min(scored)
+
+
+def centroid_argmin_col(
+    cents: list[tuple[int, list[float]]], vec_col: str | Column
+) -> Column:
+    """Map-side nearest-centroid ``struct(dist, cid)`` column over
+    driver-side centroids: ``array_min`` of :func:`_centroid_scores`."""
+    return F.array_min(_centroid_scores(cents, vec_col))
 
 
 def centroid_topn_col(
     cents: list[tuple[int, list[float]]], vec_col: str, nprobe: int
 ) -> Column:
     """Array of the ``nprobe`` nearest centroid ids for each row — the
-    multi-probe generalization of :func:`centroid_argmin_col` (same two
-    inlined literals, same (dist, cid) tie-break via struct sort), still
-    entirely map-side."""
-    if not cents:
-        raise ValueError("centroid_topn_col: centroid list is empty")
-    cvecs = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"CAST({x!r} AS DOUBLE)" for x in c[1]) + ")"
-            for c in cents
-        )
-        + ")"
-    )
-    cids = F.expr("array(" + ",".join(str(c[0]) for c in cents) + ")")
-    scored = F.transform(
-        F.sequence(F.lit(0), F.lit(len(cents) - 1)),
-        lambda i: F.struct(
-            pround(l2_sq(F.col(vec_col), cvecs[i]), 6).alias("dist"),
-            cids[i].alias("cid"),
-        ),
-    )
-    topn = F.slice(F.array_sort(scored), 1, nprobe)
+    multi-probe generalization of :func:`centroid_argmin_col` (the same
+    scores sorted by the same (dist, cid) order), still entirely map-side."""
+    topn = F.slice(F.array_sort(_centroid_scores(cents, vec_col)), 1, nprobe)
     return F.transform(topn, lambda s: s["cid"])
 
 
-def ivf_topk_multiprobe(
+def _probe_candidates(
     emb: DataFrame,
-    query_id: int = 0,
-    k: int = 5,
-    n_centroids: int = 8,
-    nprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    cents: list[tuple[int, list[float]]],
+    query_id: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
 ) -> DataFrame:
-    """ANN search probing the query's ``nprobe`` nearest IVF buckets.
-
-    The recall lever real IVF deployments turn: nprobe=1 is fastest,
-    nprobe=C degenerates to exact brute force (pinned by
-    ``test_multiprobe_full_probe_equals_bruteforce``). Work scales with
-    nprobe/C of the corpus; the probed-bucket set is a one-row broadcast,
-    so the candidate filter is map-side on the assignment table."""
-    assign = ivf_assign(emb, n_centroids, id_col, vec_col)
-    cents = emb.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec")
+    """Rows of ``emb`` (minus the query) in the query's ``nprobe`` nearest
+    IVF buckets: a map-side bucket expression matched against the query's
+    bucket array, which is a one-row broadcast — no assignment table, no
+    join back to ``emb``."""
+    qbuckets = emb.filter(F.col(id_col) == query_id).select(
+        centroid_topn_col(cents, vec_col, nprobe).alias("qbuckets")
     )
-    rows = cents.orderBy("centroid_id").collect()
-    topn = centroid_topn_col(
-        [(int(r["centroid_id"]), [float(x) for x in r["cvec"]]) for r in rows],
-        vec_col,
-        nprobe,
-    )
-    qbuckets = emb.filter(F.col(id_col) == query_id).select(topn.alias("qbuckets"))
-    candidates = (
-        assign.join(F.broadcast(qbuckets), F.expr("array_contains(qbuckets, centroid_id)"))
-        .select(id_col)
-        .join(emb, id_col)
-    )
-    qvec = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("qvec"))
-    return brute_force_topk(
-        candidates.filter(F.col(id_col) != query_id), qvec, k, id_col, vec_col
+    return (
+        emb.withColumn("_bkt", centroid_argmin_col(cents, vec_col)["cid"])
+        .join(F.broadcast(qbuckets), F.expr("array_contains(qbuckets, _bkt)"))
+        .filter(F.col(id_col) != query_id)
     )
 
 
@@ -563,13 +623,7 @@ def ivf_topk_batch(
     candidate reaches a query at most once — no dedup needed even when the
     query probes several buckets. Plan-gated: no cartesian product,
     WindowGroupLimit present (``test_ivf_topk_batch_plan``)."""
-    cent_rows = (
-        emb.filter(F.col(id_col) < n_centroids)
-        .select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec"))
-        .orderBy("centroid_id")
-        .collect()
-    )
-    cents = [(int(r["centroid_id"]), [float(x) for x in r["cvec"]]) for r in cent_rows]
+    cents = seed_vectors(emb, n_centroids, id_col, vec_col)
     best = centroid_argmin_col(cents, vec_col)
     corpus = emb.select(
         F.col(id_col),
@@ -648,23 +702,22 @@ def ivf_topk(
     query_id: int = 0,
     k: int = 5,
     n_centroids: int = 8,
+    nprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ANN search: probe only the query's IVF bucket, then cosine top-k."""
-    assign = ivf_assign(emb, n_centroids, id_col, vec_col)
-    qbucket = assign.filter(F.col(id_col) == query_id).select(
-        F.col("centroid_id").alias("qc")
-    )
-    candidates = (
-        assign.join(F.broadcast(qbucket), assign.centroid_id == F.col("qc"))
-        .select(id_col)
-        .join(emb, id_col)
-    )
-    qvec = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("qvec"))
-    return brute_force_topk(
-        candidates.filter(F.col(id_col) != query_id), qvec, k, id_col, vec_col
-    )
+    """ANN search: probe the query's ``nprobe`` nearest IVF buckets, then
+    cosine top-k.
+
+    nprobe is the recall lever real IVF deployments turn: nprobe=1 probes
+    the query's own bucket (the top-1 of the (dist, cid) sort is the
+    argmin), nprobe=C degenerates to exact brute force (both pinned by
+    ``test_multiprobe_full_probe_equals_bruteforce``). Work scales with
+    nprobe/C of the corpus; candidates come from :func:`_probe_candidates`
+    (map-side bucket expression + one-row broadcast)."""
+    cents = seed_vectors(emb, n_centroids, id_col, vec_col)
+    cands = _probe_candidates(emb, cents, query_id, nprobe, id_col, vec_col)
+    return _exact_rerank(cands, emb, query_id, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -817,33 +870,22 @@ def pq_codebooks(
     Returns ``books[m] = [(code_id, subvector), ...]`` — bounded at
     ``n_codes`` rows collected driver-side (same boundedness argument as the
     IVF centroid collect)."""
-    rows = (
-        emb.filter(F.col(id_col) < n_codes)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    )
-    if not rows:
+    seeds = seed_vectors(emb, n_codes, id_col, vec_col)
+    if not seeds:
         raise ValueError("pq_codebooks: no seed rows (need ids < n_codes)")
     # ADC lookup tables index literal arrays BY CODE ID (F.get(table, code)),
     # so seed ids must be exactly 0..n_codes-1 — a gap would silently
     # misalign code ids with array positions downstream. Fail loudly instead.
-    got = [int(r[id_col]) for r in rows]
+    got = [i for i, _ in seeds]
     if got != list(range(n_codes)):
         raise ValueError(
             f"pq_codebooks: seed ids must be contiguous 0..{n_codes - 1}, got {got}"
         )
-    dim = len(rows[0][vec_col])
+    dim = len(seeds[0][1])
     if dim % n_sub:
         raise ValueError(f"pq_codebooks: dim {dim} not divisible by n_sub {n_sub}")
     d = dim // n_sub
-    return [
-        [
-            (int(r[id_col]), [float(x) for x in r[vec_col][m * d : (m + 1) * d]])
-            for r in rows
-        ]
-        for m in range(n_sub)
-    ]
+    return [[(i, v[m * d : (m + 1) * d]) for i, v in seeds] for m in range(n_sub)]
 
 
 def _pq_code_cols(
@@ -943,6 +985,25 @@ def pq_encode(
     )
 
 
+def _adc_table(qsub: list[float], book: list[tuple[int, list[float]]]) -> Column:
+    """One subspace's ADC lookup table: the exact portable distance from the
+    query's subvector to every codeword, as a literal array indexed by code
+    id (seed ids are 0..n_codes-1 by construction, so index == code)."""
+    return _arr_lit([_portable_l2(qsub, cw) for _, cw in book])
+
+
+def _adc_dist(
+    q: list[float], books: list[list[tuple[int, list[float]]]], codes: list[Column]
+) -> Column:
+    """Σ_m table_m[code_m], summed left-associated over the subspaces."""
+    d = len(books[0][0][1])
+    terms = [
+        F.get(_adc_table(q[m * d : (m + 1) * d], book), codes[m])
+        for m, book in enumerate(books)
+    ]
+    return reduce(add, terms)
+
+
 def pq_adc_topk(
     emb: DataFrame,
     query_id: int = 0,
@@ -965,33 +1026,7 @@ def pq_adc_topk(
     if books is None:
         books = pq_codebooks(emb, n_sub, n_codes, id_col, vec_col)
     codes = _pq_code_cols(books, vec_col)
-    qrows = emb.filter(F.col(id_col) == query_id).select(vec_col).collect()
-    if not qrows:
-        raise ValueError(f"pq_adc_topk: query id {query_id} not found")
-    q = [float(x) for x in qrows[0][vec_col]]
-    d = len(books[0][0][1])
-
-    def _sub_dist(m: int, cw: list[float]) -> float:
-        # Sequential left-fold, identical to l2_sq's aggregate() order and
-        # the oracle's list_sum — then the same portable round.
-        acc = 0.0
-        for i in range(d):
-            acc += (q[m * d + i] - cw[i]) ** 2
-        import math
-
-        return math.floor(acc * 1e6 + (0.5 + _EPS)) / 1e6
-
-    adc: Column | None = None
-    for m, book in enumerate(books):
-        # Lookup table for subspace m as a literal array indexed by code id
-        # (seed ids are 0..n_codes-1 by construction, so index == code).
-        table = F.expr(
-            "array("
-            + ",".join(f"CAST({_sub_dist(m, cw)!r} AS DOUBLE)" for _, cw in book)
-            + ")"
-        )
-        term = F.get(table, codes[m])
-        adc = term if adc is None else adc + term
+    adc = _adc_dist(_query_vector(emb, query_id, id_col, vec_col), books, codes)
     return (
         emb.filter(F.col(id_col) != query_id)
         .select(F.col(id_col), pround(adc, 6).alias("adc_dist"))
@@ -1017,8 +1052,9 @@ def ivfpq_topk(
 
     Three refinement stages, each cutting the candidate set before the next
     touches anything bigger: (1) probe the query's ``nprobe`` nearest IVF
-    buckets — map-side bucket expression + a one-row broadcast, so the scan
-    reads ~nprobe/C of the corpus; (2) rank survivors by ADC over their PQ
+    buckets — map-side bucket expression + a one-row broadcast
+    (:func:`_probe_candidates`, the same candidate form as :func:`ivf_topk`),
+    so the scan reads ~nprobe/C of the corpus; (2) rank survivors by ADC over their PQ
     codes (literal-lookup sum — 8-byte codes, not 256-byte vectors) and keep
     a ``shortlist``; (3) exact-cosine rerank of the shortlist against the
     full vectors, TakeOrderedAndProject top-k. Degenerate settings recover
@@ -1028,63 +1064,17 @@ def ivfpq_topk(
     oracle-checkable in DuckDB."""
     if books is None:
         books = pq_codebooks(emb, n_sub, n_codes, id_col, vec_col)
-    cent_rows = (
-        emb.filter(F.col(id_col) < n_centroids)
-        .select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec"))
-        .orderBy("centroid_id")
-        .collect()
+    cents = seed_vectors(emb, n_centroids, id_col, vec_col)
+    candidates = _probe_candidates(emb, cents, query_id, nprobe, id_col, vec_col)
+    adc = _adc_dist(
+        _query_vector(emb, query_id, id_col, vec_col), books, _pq_code_cols(books, vec_col)
     )
-    cents = [(int(r["centroid_id"]), [float(x) for x in r["cvec"]]) for r in cent_rows]
-    bkt = centroid_argmin_col(cents, vec_col)["cid"]
-    qbuckets = emb.filter(F.col(id_col) == query_id).select(
-        centroid_topn_col(cents, vec_col, nprobe).alias("qbuckets")
-    )
-    candidates = (
-        emb.withColumn("_bkt", bkt)
-        .join(F.broadcast(qbuckets), F.expr("array_contains(qbuckets, _bkt)"))
-        .filter(F.col(id_col) != query_id)
-    )
-    codes = _pq_code_cols(books, vec_col)
-    qrows = emb.filter(F.col(id_col) == query_id).select(vec_col).collect()
-    if not qrows:
-        raise ValueError(f"ivfpq_topk: query id {query_id} not found")
-    q = [float(x) for x in qrows[0][vec_col]]
-    d = len(books[0][0][1])
-    import math
-
-    adc: Column | None = None
-    for m, book in enumerate(books):
-        vals = []
-        for _, cw in book:
-            acc = 0.0
-            for i in range(d):
-                acc += (q[m * d + i] - cw[i]) ** 2
-            vals.append(math.floor(acc * 1e6 + (0.5 + _EPS)) / 1e6)
-        table = F.expr(
-            "array(" + ",".join(f"CAST({v!r} AS DOUBLE)" for v in vals) + ")"
-        )
-        term = F.get(table, codes[m])
-        adc = term if adc is None else adc + term
     short = (
         candidates.select(F.col(id_col), F.col(vec_col), pround(adc, 6).alias("adc_dist"))
         .orderBy(F.asc("adc_dist"), F.asc(id_col))
         .limit(shortlist)
     )
-    qvec = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("qvec"))
-    return brute_force_topk(short, qvec, k, id_col, vec_col)
-
-
-def _centroid_matrix_lit(cents: list[tuple[int, list[float]]]) -> Column:
-    """The array<array<double>> literal used by the argmin helpers, exposed
-    so residual computation can index the SAME matrix by bucket id."""
-    return F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"CAST({x!r} AS DOUBLE)" for x in c[1]) + ")"
-            for c in cents
-        )
-        + ")"
-    )
+    return _exact_rerank(short, emb, query_id, k, id_col, vec_col)
 
 
 def ivfpq_residual_topk(
@@ -1115,47 +1105,24 @@ def ivfpq_residual_topk(
     rounded-distance/tie-break discipline as the PQ family, so the whole
     composition stays hash-checkable in DuckDB. Reference parity: the
     reference has no ANN surface; this extends the engine charter."""
-    import math
-
-    cent_rows = (
-        emb.filter(F.col(id_col) < n_centroids)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        .orderBy("cid")
-        .collect()
-    )
-    cents = [(int(r["cid"]), [float(x) for x in r["cvec"]]) for r in cent_rows]
+    cents = seed_vectors(emb, n_centroids, id_col, vec_col)
     if [c[0] for c in cents] != list(range(n_centroids)):
         raise ValueError(
             "ivfpq_residual_topk: seed centroid ids must be contiguous 0..C-1"
         )
-    cmat = {cid: v for cid, v in cents}
+    cmat = dict(cents)
 
-    # Driver-side replicas of the plan's rounded argmin (same Σ(x−y)² fold
-    # order, same portable half-up rounding) — applied only to the bounded
-    # model parameters: 16 seed vectors and 1 query vector.
-    def _pl2(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += (x - y) ** 2
-        return acc
-
-    def _p6(x: float) -> float:
-        return math.floor(x * 1e6 + (0.5 + _EPS)) / 1e6
-
+    # Driver-side replica of the plan's rounded argmin (_portable_l2) —
+    # applied only to the bounded model parameters: 16 seed vectors and 1
+    # query vector.
     def _bucket_of(v: list[float]) -> int:
-        return min((_p6(_pl2(v, c)), cid) for cid, c in cents)[1]
+        return min((_portable_l2(v, c), cid) for cid, c in cents)[1]
 
     def _residual(v: list[float]) -> list[float]:
         c = cmat[_bucket_of(v)]
         return [x - y for x, y in zip(v, c)]
 
-    seed_rows = (
-        emb.filter(F.col(id_col) < n_codes)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    )
-    seeds = [(int(r[id_col]), [float(x) for x in r[vec_col]]) for r in seed_rows]
+    seeds = seed_vectors(emb, n_codes, id_col, vec_col)
     if [s[0] for s in seeds] != list(range(n_codes)):
         raise ValueError("ivfpq_residual_topk: seed code ids must be 0..n_codes-1")
     dim = len(seeds[0][1])
@@ -1193,13 +1160,8 @@ def ivfpq_residual_topk(
         )
     codes = [F.col(f"_c{m}") for m in range(n_sub)]
 
-    qrows = emb.filter(F.col(id_col) == query_id).select(vec_col).collect()
-    if not qrows:
-        raise ValueError(f"ivfpq_residual_topk: query id {query_id} not found")
-    q = [float(x) for x in qrows[0][vec_col]]
-    probed = [
-        cid for _, cid in sorted((_p6(_pl2(q, c)), cid) for cid, c in cents)[:nprobe]
-    ]
+    q = _query_vector(emb, query_id, id_col, vec_col)
+    probed = [cid for _, cid in sorted((_portable_l2(q, c), cid) for cid, c in cents)[:nprobe]]
     qres = {b: [x - y for x, y in zip(q, cmat[b])] for b in probed}
 
     # Per-(bucket, subspace) ADC tables: query-residual-to-code distances as
@@ -1208,11 +1170,7 @@ def ivfpq_residual_topk(
     for m, book in enumerate(books):
         term: Column | None = None
         for b in probed:
-            vals = [_p6(_pl2(qres[b][m * d : (m + 1) * d], cw)) for _, cw in book]
-            table = F.expr(
-                "array(" + ",".join(f"CAST({v!r} AS DOUBLE)" for v in vals) + ")"
-            )
-            picked = F.get(table, codes[m])
+            picked = F.get(_adc_table(qres[b][m * d : (m + 1) * d], book), codes[m])
             term = (
                 picked
                 if term is None
@@ -1229,8 +1187,7 @@ def ivfpq_residual_topk(
         .orderBy(F.asc("adc_dist"), F.asc(id_col))
         .limit(shortlist)
     )
-    qvec = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("qvec"))
-    return brute_force_topk(short, qvec, k, id_col, vec_col)
+    return _exact_rerank(short, emb, query_id, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1245,11 +1202,6 @@ def ivfpq_residual_topk(
 # asymmetric-distance scoring are pure per-row projections: the only
 # shuffle in the top-k is TakeOrderedAndProject's heap merge.
 # ---------------------------------------------------------------------------
-
-
-def _arr_lit(vals: list[float]) -> Column:
-    """A literal array<double> column (plan-inlined, no join)."""
-    return F.expr("array(" + ",".join(f"CAST({v!r} AS DOUBLE)" for v in vals) + ")")
 
 
 def sq8_bounds(
@@ -1329,10 +1281,7 @@ def sq8_adc_topk(
     exactly. Bounds and the query enter the plan as literals: scoring is a
     pure projection (no join, no Exchange before the top-k heap)."""
     mins, spans = bounds if bounds is not None else sq8_bounds(emb, dim, vec_col)
-    qrows = emb.filter(F.col(id_col) == query_id).select(vec_col).collect()
-    if not qrows:
-        raise ValueError(f"sq8_adc_topk: query id {query_id} not found")
-    q = [float(x) for x in qrows[0][vec_col]]
+    q = _query_vector(emb, query_id, id_col, vec_col)
     mins_l, spans_l, q_l = _arr_lit(mins), _arr_lit(spans), _arr_lit(q)
 
     def sq_diff(i: Column) -> Column:

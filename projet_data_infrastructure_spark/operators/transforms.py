@@ -22,11 +22,6 @@ def project(df: DataFrame, cols: Sequence[str]) -> Column | DataFrame:
     return df.select(*cols)
 
 
-def reject_nulls(df: DataFrame, key: str) -> DataFrame:
-    """P3: tombstone/malformed-row filter (``spark/SaveDelta.scala:149``)."""
-    return df.filter(F.col(key).isNotNull())
-
-
 def align_key_type(df: DataFrame, key: str, ref_df: DataFrame) -> DataFrame:
     """P5: runtime join-key type alignment (``read_delta.py:130-161``).
 
@@ -38,21 +33,6 @@ def align_key_type(df: DataFrame, key: str, ref_df: DataFrame) -> DataFrame:
     if dict(df.dtypes)[key] != ref_type:
         df = df.withColumn(key, F.col(key).cast(ref_type))
     return df
-
-
-def membership_validity(
-    col: Column, allowed: Sequence[str], limit_map: dict[str, float]
-) -> tuple[Column, Column]:
-    """P7: transport-mode validity (``commute_validation.py:84-92``).
-
-    Returns ``(is_known, limit_km)``; unknown modes get NULL limit and an
-    error downstream — identical to the reference's TRANSPORT_LIMITS check.
-    """
-    is_known = col.isin(list(allowed))
-    limit = F.lit(None).cast("double")
-    for mode, lim in limit_map.items():
-        limit = F.when(col == mode, F.lit(lim)).otherwise(limit)
-    return is_known, limit
 
 
 def mask_columns(

@@ -852,8 +852,8 @@ def q_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim ≥ 0.25 — the semantic analog of n-gram
     ``benchmark_decontamination`` (SemDeDup applied across the split
     boundary instead of within the corpus). Candidates come ONLY from the
-    shared IVF bucket (the house seed-centroid assignment, identical
-    algebra to ``ivf_topk``): eval×train work is Σ_b |eval_b|·|train_b|,
+    shared IVF bucket (the house seed-centroid assignment,
+    ``similarity.ivf_assign``): eval×train work is Σ_b |eval_b|·|train_b|,
     never |eval|·|train|; at warehouse scale the centroid count grows √N
     and the same plan holds (``ivf_assign_to``'s size switch).
 

@@ -1018,8 +1018,9 @@ _IVF_TR_SCALE = 1000  # milli-units: keeps L2 dists ≤ ~2.6e8, exact through
 def q_ivf_trained_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF assignment under TRAINED centroids — now fully oracled
     (verdict r4 item 4): training is the deterministic integer fixed-point
-    Lloyd's of ``kmeans_fixed_point`` (coordinates floored to milli-units,
-    seeds = vec_id 0..K-1, 2 rounds of exact integer floor-mean updates),
+    Lloyd's ``similarity.int_lloyd_centroids`` that ``kmeans_fixed_point``
+    also runs (coordinates floored to milli-units, seeds = vec_id 0..K-1,
+    2 rounds of exact integer floor-mean updates),
     and the learned centroids drop into the SAME size-switched
     broadcast+argmin algebra every IVF spec uses
     (`operators/similarity.py:ivf_assign_to`). The DuckDB oracle unrolls
@@ -1033,8 +1034,10 @@ def q_ivf_trained_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (64·K keys) and a K×64 integer collect (model-parameter
     class, never data-sized); assignment is the ivf_assign_to map-side
     argmin."""
-    from projet_data_infrastructure_spark.operators.similarity import ivf_assign_to
-    from projet_data_infrastructure_spark.plans.mining import _km_floordiv
+    from projet_data_infrastructure_spark.operators.similarity import (
+        int_lloyd_centroids,
+        ivf_assign_to,
+    )
 
     emb = (
         read_table(spark, sf_dir, "embeddings")
@@ -1046,47 +1049,7 @@ def q_ivf_trained_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    cents = [
-        (int(r["vec_id"]), [int(v) for v in r["q"]])
-        for r in emb.filter(F.col("vec_id") < _IVF_TR_K).collect()
-    ]
-    cents.sort()
-    assert [i for i, _ in cents] == list(range(_IVF_TR_K)), (
-        f"ivf seeds: expected vec_ids 0..{_IVF_TR_K - 1}, got {[i for i, _ in cents]}"
-    )
-    centroids = [c for _, c in cents]
-    dim = len(centroids[0])
-
-    def assign_cl(df: DataFrame) -> DataFrame:
-        # One parsed SQL string per round instead of K×dim py4j F.lit calls
-        # (the centroid_argmin_col lesson — literal-building dominated the
-        # wall clock, not the data).
-        structs = ",".join(
-            "struct(aggregate(zip_with(q, array("
-            + ",".join(f"CAST({int(v)} AS BIGINT)" for v in c)
-            + "), (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), "
-            f"(acc, x) -> acc + x) AS dist, {i} AS cl)"
-            for i, c in enumerate(centroids)
-        )
-        return df.withColumn("cl", F.expr(f"array_min(array({structs})).cl"))
-
-    for _ in range(_IVF_TR_ROUNDS):
-        sums = (
-            assign_cl(emb)
-            .select("cl", F.posexplode("q").alias("dim", "qv"))
-            .groupBy("cl", "dim")
-            .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
-            .withColumn("c", F.expr(_km_floordiv("s", "n", "DIV")))
-            .collect()
-        )
-        bydim: dict[int, dict[int, int]] = {}
-        for r in sums:
-            bydim.setdefault(r["cl"], {})[r["dim"]] = r["c"]
-        centroids = [
-            [bydim.get(i, {}).get(d, centroids[i][d]) for d in range(dim)]
-            for i in range(_IVF_TR_K)
-        ]
-
+    centroids = int_lloyd_centroids(emb, _IVF_TR_K, _IVF_TR_ROUNDS)
     trained = spark.createDataFrame(
         [(i, [float(v) for v in c]) for i, c in enumerate(centroids)],
         "centroid_id int, cvec array<double>",
@@ -1095,9 +1058,9 @@ def q_ivf_trained_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_trained_oracle() -> str:
-    from projet_data_infrastructure_spark.plans.mining import _km_floordiv
+    from projet_data_infrastructure_spark.plans._portable import fdiv
 
-    fd = _km_floordiv("sum(e.qv)", "count(*)", "//")
+    fd = fdiv("sum(e.qv)", "count(*)", "//")
     head = f"""
 WITH pts AS (
     SELECT vec_id, unnest(embedding) AS x,

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
 from projet_data_infrastructure_spark.operators.text import tokens
-from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
+from projet_data_infrastructure_spark.plans._portable import fdiv, pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
 from projet_data_infrastructure_spark.sources.readers import read_table, read_table_balanced
@@ -1372,14 +1372,6 @@ _PCA_D = 8  # leading embedding dims (algebra is dim-agnostic; 8 keeps the
 _PCA_UNIT = 1_000_000
 
 
-def _pca_floordiv(s: str, n: str, floordiv_op: str) -> str:
-    """Exact floor division for possibly-negative sums (see
-    ``mining._km_floordiv`` — same remainder-correction trick; duplicated
-    to keep the module importable standalone)."""
-    rem = f"((({s}) % ({n}) + ({n})) % ({n}))"
-    return f"((({s}) - {rem}) {floordiv_op} ({n}))"
-
-
 def _pca_exprs(floordiv_op: str, idx_base: int, big: str) -> dict[str, str]:
     """Shared expression text for both engines (Spark arrays are 0-based,
     DuckDB 1-based; Spark integer floor-div is ``DIV`` after remainder
@@ -1407,16 +1399,16 @@ def _pca_exprs(floordiv_op: str, idx_base: int, big: str) -> dict[str, str]:
         f"abs({cell(i, j)})" for i in range(D) for j in range(i, D)
     ) + ", 1)"
     cunit = {
-        f"c{i}_{j}": _pca_floordiv(f"{cell(i, j)} * {_PCA_UNIT}", "maxcov", floordiv_op)
+        f"c{i}_{j}": fdiv(f"{cell(i, j)} * {_PCA_UNIT}", "maxcov", floordiv_op)
         for i in range(D)
         for j in range(D)
     }
     u1 = {f"u1_{i}": " + ".join(f"c{i}_{j} * {_PCA_UNIT}" for j in range(D)) for i in range(D)}
     m1 = "greatest(" + ", ".join(f"abs(u1_{i})" for i in range(D)) + ", 1)"
-    v1 = {f"v1_{i}": _pca_floordiv(f"u1_{i} * {_PCA_UNIT}", "m1", floordiv_op) for i in range(D)}
+    v1 = {f"v1_{i}": fdiv(f"u1_{i} * {_PCA_UNIT}", "m1", floordiv_op) for i in range(D)}
     u2 = {f"u2_{i}": " + ".join(f"c{i}_{j} * v1_{j}" for j in range(D)) for i in range(D)}
     m2 = "greatest(" + ", ".join(f"abs(u2_{i})" for i in range(D)) + ", 1)"
-    v2 = {f"v2_{i}": _pca_floordiv(f"u2_{i} * {_PCA_UNIT}", "m2", floordiv_op) for i in range(D)}
+    v2 = {f"v2_{i}": fdiv(f"u2_{i} * {_PCA_UNIT}", "m2", floordiv_op) for i in range(D)}
     return {"mom": mom, "maxcov": maxcov, "cunit": cunit, "u1": u1, "m1": m1,
             "v1": v1, "u2": u2, "m2": m2, "v2": v2}
 

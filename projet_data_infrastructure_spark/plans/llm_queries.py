@@ -23,7 +23,7 @@ from projet_data_infrastructure_spark.operators.text import (
     predict_lang,
     tokens,
 )
-from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
+from projet_data_infrastructure_spark.plans._portable import fdiv, pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import read_table, read_table_balanced
 
@@ -518,7 +518,7 @@ ORDER BY sim DESC, e.vec_id LIMIT 5
 
 def q_ivf_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk_multiprobe(emb, query_id=0, k=5, n_centroids=8, nprobe=3)
+    return similarity.ivf_topk(emb, query_id=0, k=5, n_centroids=8, nprobe=3)
 
 
 _IVF_MULTIPROBE_SQL = f"""
@@ -2997,7 +2997,7 @@ def q_pq_trained_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cnt[j] += 1
                 for t in range(d):
                     sums[j][t] += x[t]
-            # Python // floors like DuckDB's // and the _km_floordiv Spark
+            # Python // floors like DuckDB's // and the _portable.fdiv Spark
             # form — exact integer floor-means, empty codes unchanged.
             cents = [
                 [sums[j][t] // cnt[j] if cnt[j] else cents[j][t] for t in range(d)]
@@ -3008,9 +3008,7 @@ def q_pq_trained_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_trained_oracle() -> str:
-    from projet_data_infrastructure_spark.plans.mining import _km_floordiv
-
-    fd = _km_floordiv("sum(t.qv)", "count(*)", "//")
+    fd = fdiv("sum(t.qv)", "count(*)", "//")
     head = f"""
 WITH pts AS (
     SELECT vec_id, unnest(embedding) AS x,

@@ -102,7 +102,11 @@ from pyspark.sql.window import Window
 
 from projet_data_infrastructure_spark.operators.asof import asof_join
 from projet_data_infrastructure_spark.operators.joins import vertex_side
-from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
+from projet_data_infrastructure_spark.operators.similarity import (
+    int_centroid_argmin_col,
+    int_lloyd_centroids,
+)
+from projet_data_infrastructure_spark.plans._portable import fdiv, pround, pround_sql
 from projet_data_infrastructure_spark.plans.graph_geo import (
     _node_label,
     _trade_edges,
@@ -1848,19 +1852,6 @@ _KM_MAX_ID = 2000
 _KM_SCALE = 1_000_000  # float coords → integer micro-units
 
 
-def _km_floordiv(s: str, n: str, floordiv_op: str) -> str:
-    """Exact floor division for possibly-negative integer sums.
-
-    Spark's ``DIV`` truncates toward zero while DuckDB's ``//`` floors, so
-    raw integer division diverges on negative sums. Both engines' ``%``
-    truncate identically, so subtracting the canonical non-negative
-    remainder first makes the quotient exact — the division then has no
-    remainder and truncate == floor in both engines.
-    """
-    rem = f"((({s}) % ({n}) + ({n})) % ({n}))"
-    return f"((({s}) - {rem}) {floordiv_op} ({n}))"
-
-
 def q_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-round Lloyd's k-means over 2 000 embeddings, bit-exact in both
     engines — iterative ML as a deterministic DataFrame program.
@@ -1880,7 +1871,8 @@ def q_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one posexplode → (cluster, dim) aggregate: a 64·K-key map-side-
     combined shuffle, linear in rows. Empty clusters keep their previous
     centroid. The driver never sees data rows — only the K×64 centroid
-    matrix per round.
+    matrix per round. The loop is ``similarity.int_lloyd_centroids``, shared
+    with ``ivf_trained_assign``.
     """
     emb = (
         read_table(spark, sf_dir, "embeddings")
@@ -1893,54 +1885,8 @@ def q_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     emb = emb.localCheckpoint(eager=True)  # scanned K+1 times; decode once
-
-    # round-0 centroids: the first K vectors (deterministic seed)
-    cents = [
-        (int(r["vec_id"]), list(r["q"]))
-        for r in emb.filter(F.col("vec_id") < _KM_K).collect()
-    ]
-    cents.sort()
-    # Cluster ids are POSITIONAL (0.._KM_K-1) on both sides: the oracle
-    # labels clusters by seed vec_id, so the fixture must contain every
-    # seed id — fail loudly instead of silently relabeling (ADVICE r4).
-    assert [i for i, _ in cents] == list(range(_KM_K)), (
-        f"kmeans seeds: expected vec_ids 0..{_KM_K - 1}, got {[i for i, _ in cents]}"
-    )
-    centroids = [c for _, c in cents]
-    dim = len(centroids[0])
-
-    def assign(df):
-        # One parsed SQL string instead of K×dim py4j F.lit calls per round
-        # (the centroid_argmin_col lesson — literal construction, not the
-        # data, dominated the wall clock).
-        structs = ",".join(
-            "struct(aggregate(zip_with(q, array("
-            + ",".join(f"CAST({int(v)} AS BIGINT)" for v in c)
-            + "), (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), "
-            f"(acc, x) -> acc + x) AS dist, {i} AS cl)"
-            for i, c in enumerate(centroids)
-        )
-        pick = F.expr(f"array_min(array({structs}))")
-        return df.withColumn("dist", pick["dist"]).withColumn("cl", pick["cl"])
-
-    for _ in range(_KM_ROUNDS):
-        assigned = assign(emb)
-        sums = (
-            assigned.select("cl", F.posexplode("q").alias("dim", "qv"))
-            .groupBy("cl", "dim")
-            .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
-            .withColumn("c", F.expr(_km_floordiv("s", "n", "DIV")))
-            .collect()
-        )
-        bydim: dict[int, dict[int, int]] = {}
-        for r in sums:
-            bydim.setdefault(r["cl"], {})[r["dim"]] = r["c"]
-        centroids = [
-            [bydim.get(i, {}).get(d, centroids[i][d]) for d in range(dim)]
-            for i in range(_KM_K)
-        ]
-
-    final = assign(emb)
+    pick = int_centroid_argmin_col(int_lloyd_centroids(emb, _KM_K, _KM_ROUNDS))
+    final = emb.withColumn("dist", pick["dist"]).withColumn("cl", pick["cl"])
     return (
         final.groupBy("cl")
         .agg(
@@ -1953,7 +1899,7 @@ def q_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _km_oracle() -> str:
-    fd = _km_floordiv("sum(e.qv)", "count(*)", "//")
+    fd = fdiv("sum(e.qv)", "count(*)", "//")
     head = f"""
 WITH pts AS (
     SELECT vec_id, unnest(embedding) AS x,

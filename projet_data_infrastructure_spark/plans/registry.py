@@ -28,23 +28,10 @@ class QuerySpec:
     doc: str = ""
 
 
-# Round-14 driver window — the first 50 names fill the driver's 50-slot
-# window; everything after position 50 is the round-15 rotation queue.
-# Composition (verdict r13 item 1 — the staleness rotation continues):
-# (a) the 31 remaining round-4-era proofs staged behind the r13 window —
-#     every name whose last green CORRECTNESS row is round 4, re-proven
-#     on current code (r11 refreshed the round-1 era, r12 the round-2
-#     era, r13 the round-3 era; this window finishes the round-4 stratum);
-# (b) the first 19 round-5-era names to fill the window (registry order).
-# Behind the window: the r15 queue — the remaining 30 round-5-era names,
-# then the 33 round-7-era names (there was no round-6 artifact; round 7
-# is the next-stalest stratum), in staleness-then-registry order, so the
-# round-15 window rotates on with a one-line comment edit.
-# The ~295 specs with fresher proofs keep their module order behind and
-# stay locally re-proven each round (LOCAL_ORACLE_sf*.json, three SFs +
-# the 7-partition sweep + the full-registry hostile sweep). Rows-only
-# specs would sink behind every oracled spec, but since round 10 there
-# are none. Unknown names are rejected by
+# Driver-window priority: these names run first, in this order. The first
+# 50 fill the driver's 50-slot window; the rest queue behind it, stalest
+# oracle proof first. Every other spec keeps its module order behind them.
+# Unknown names are rejected by
 # tests/test_registry.py::test_driver_priority_names_resolve.
 _DRIVER_PRIORITY: tuple[str, ...] = (
     # (a) round-4-era proofs (31), staged in round 13

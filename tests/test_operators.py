@@ -311,19 +311,41 @@ def test_trained_ivf_recall_floor(spark):
 
 
 def test_multiprobe_full_probe_equals_bruteforce(spark):
-    """nprobe = C probes every bucket, so multi-probe IVF must return
-    exactly the brute-force top-k; nprobe=1 must match single-bucket IVF."""
+    """nprobe = C probes every bucket, so IVF search must return exactly the
+    brute-force top-k; nprobe=1 must equal brute force restricted to the
+    query's own ``ivf_assign`` bucket, and the ``ivf_topk_multiprobe`` spec
+    (nprobe=3) brute force restricted to the query's 3 nearest buckets,
+    ranked here in Python."""
     from projet_data_infrastructure_spark.operators import similarity
+    from projet_data_infrastructure_spark.plans.llm_queries import q_ivf_topk_multiprobe
     from projet_data_infrastructure_spark.sources.readers import read_table
+    from tests.conftest import SF_SMOKE
 
-    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    full = similarity.ivf_topk_multiprobe(emb, query_id=0, k=5, n_centroids=8, nprobe=8)
+    emb = read_table(spark, SF_SMOKE, "embeddings")
+    full = similarity.ivf_topk(emb, query_id=0, k=5, n_centroids=8, nprobe=8)
     qvec = emb.filter("vec_id = 0").selectExpr("embedding AS qvec")
     brute = similarity.brute_force_topk(emb.filter("vec_id != 0"), qvec, k=5)
     assert [tuple(r) for r in full.collect()] == [tuple(r) for r in brute.collect()]
-    one = similarity.ivf_topk_multiprobe(emb, query_id=0, k=5, n_centroids=8, nprobe=1)
-    single = similarity.ivf_topk(emb, query_id=0, k=5, n_centroids=8)
-    assert [tuple(r) for r in one.collect()] == [tuple(r) for r in single.collect()]
+
+    assign = {r.vec_id: r.centroid_id for r in similarity.ivf_assign(emb, 8).collect()}
+
+    def in_buckets(buckets):
+        ids = [v for v, c in assign.items() if c in buckets and v != 0]
+        cands = emb.filter(F.col("vec_id").isin(ids))
+        return [tuple(r) for r in similarity.brute_force_topk(cands, qvec, k=5).collect()]
+
+    one = similarity.ivf_topk(emb, query_id=0, k=5, n_centroids=8, nprobe=1)
+    assert [tuple(r) for r in one.collect()] == in_buckets({assign[0]})
+    cents = similarity.seed_vectors(emb, 8)
+    q = dict(cents)[0]
+    nearest3 = {
+        cid
+        for _, cid in sorted(
+            (sum((x - y) ** 2 for x, y in zip(q, c)), cid) for cid, c in cents
+        )[:3]
+    }
+    three = q_ivf_topk_multiprobe(spark, SF_SMOKE)
+    assert [tuple(r) for r in three.collect()] == in_buckets(nearest3)
 
 
 def test_resize_assets_aspect_and_bounds(spark):
@@ -758,7 +780,7 @@ def test_remove_duplicated_spans_crafted(spark):
     }
 
 
-def test_ivf_assign_broadcast_form_matches_literal(spark):
+def test_ivf_assign_broadcast_form_matches_literal(spark, monkeypatch):
     # The size-switched large-C assignment (broadcast centroid table +
     # runtime array_min) must produce row-identical output to the
     # literal-inline form — same distances, same (dist, cid) tie-break —
@@ -773,13 +795,94 @@ def test_ivf_assign_broadcast_form_matches_literal(spark):
     lit_rows = sorted(
         ivf_assign_to(emb, cents).collect(), key=lambda r: r.vec_id
     )
-    bc_rows = sorted(
-        ivf_assign_to(emb, cents, max_literal_centroids=0).collect(),
-        key=lambda r: r.vec_id,
-    )
+    monkeypatch.setattr(similarity, "LITERAL_CENTROID_MAX", 0)
+    bc_rows = sorted(ivf_assign_to(emb, cents).collect(), key=lambda r: r.vec_id)
     assert len(lit_rows) == len(bc_rows) > 0
     for a, b in zip(lit_rows, bc_rows):
         assert (a.vec_id, a.centroid_id, a.dist) == (b.vec_id, b.centroid_id, b.dist)
+
+
+def _lloyd_reference(points: dict[int, list[int]], k: int, rounds: int):
+    """Plain-Python integer Lloyd's: seeds = ids 0..k-1, argmin on (dist,
+    cluster), Python // floor-means, an empty cluster keeps its centroid."""
+
+    def nearest(p, cents):
+        return min((sum((a - b) ** 2 for a, b in zip(p, c)), i) for i, c in enumerate(cents))
+
+    cents = [points[i] for i in range(k)]
+    sizes_per_round = []
+    for _ in range(rounds):
+        members: dict[int, list[list[int]]] = {}
+        for p in points.values():
+            members.setdefault(nearest(p, cents)[1], []).append(p)
+        sizes_per_round.append([len(members.get(i, [])) for i in range(k)])
+        cents = [
+            [sum(col) // len(col) for col in zip(*members[i])] if i in members else cents[i]
+            for i in range(k)
+        ]
+    final = {vid: nearest(p, cents) for vid, p in points.items()}
+    return cents, sizes_per_round, final
+
+
+def test_int_lloyd_matches_python_reference(spark):
+    # Seed 2 duplicates seed 0, so every round-1 distance to it ties with
+    # cluster 0 and the lower id wins: cluster 2 is empty in round 1 and
+    # must keep its centroid. vec_id 3 is equidistant (65) from all three
+    # seeds. Cluster 0's sums are negative and inexact (-18/4, -15/4, -1/2),
+    # where truncating division would differ from the floor-mean.
+    from projet_data_infrastructure_spark.operators.similarity import (
+        int_centroid_argmin_col,
+        int_lloyd_centroids,
+    )
+
+    points = {
+        0: [-3, -7],
+        1: [4, 2],
+        2: [-3, -7],
+        3: [-4, 1],
+        4: [-8, -2],
+        5: [6, 5],
+        6: [5, -1],
+    }
+    want, sizes, want_final = _lloyd_reference(points, k=3, rounds=2)
+    assert sizes[0][2] == 0  # the fixture really empties cluster 2 in round 1
+    q = spark.createDataFrame(list(points.items()), "vec_id int, q array<bigint>")
+    got = int_lloyd_centroids(q, k=3, rounds=2)
+    assert got == want == [[-6, -1], [5, 2], [-3, -7]]
+    pick = int_centroid_argmin_col(got)
+    final = {
+        r.vec_id: (r.dist, r.cl)
+        for r in q.select("vec_id", pick["dist"].alias("dist"), pick["cl"].alias("cl")).collect()
+    }
+    assert final == want_final
+
+
+def test_portable_l2_is_bit_identical_to_plan_distance(spark):
+    # Every ADC table and probed-bucket choice is computed on the driver by
+    # _portable_l2 and compared against distances the executors compute
+    # with pround(l2_sq(...), 6); the two must agree to the last bit.
+    from projet_data_infrastructure_spark.operators.similarity import (
+        _portable_l2,
+        l2_sq,
+        seed_vectors,
+    )
+    from projet_data_infrastructure_spark.plans._portable import pround
+    from projet_data_infrastructure_spark.sources.readers import read_table
+    from tests.conftest import SF_SMOKE
+
+    emb = read_table(spark, SF_SMOKE, "embeddings")
+    cents = seed_vectors(emb, 8)
+    cdf = spark.createDataFrame(cents, "cid int, cvec array<double>")
+    rows = (
+        emb.crossJoin(cdf)
+        .select("embedding", "cvec", pround(l2_sq("embedding", "cvec"), 6).alias("d"))
+        .collect()
+    )
+    assert len(rows) == 8 * emb.count()
+    mismatches = [
+        r.d for r in rows if _portable_l2([float(x) for x in r.embedding], r.cvec) != r.d
+    ]
+    assert mismatches == []
 
 
 def test_multimodal_phash_neardup_complete_vs_bruteforce(spark):

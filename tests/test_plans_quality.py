@@ -762,7 +762,7 @@ def test_dup_span_removal_plan_no_cartesian_digest_joins(spark):
     assert "HashAggregate" in plan
 
 
-def test_ivf_assign_large_c_uses_broadcast_join(spark):
+def test_ivf_assign_large_c_uses_broadcast_join(spark, monkeypatch):
     # Above LITERAL_CENTROID_MAX the centroid matrix must NOT enter the plan
     # as a literal (C = sqrt(N) is data-sized — a 3x10^5-vector literal is a
     # plan/codegen bomb). The large-C form packs the centroid table into ONE
@@ -773,14 +773,15 @@ def test_ivf_assign_large_c_uses_broadcast_join(spark):
     # alternative would shuffle N rows for its group-by). The embedding side
     # must never shuffle: the C-row single-partition centroid pre-aggregate
     # is the only Exchange allowed.
-    from projet_data_infrastructure_spark.operators.similarity import ivf_assign_to
+    from projet_data_infrastructure_spark.operators import similarity
     from projet_data_infrastructure_spark.sources.readers import read_table
 
     emb = read_table(spark, SF, "embeddings")
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
-    df = ivf_assign_to(emb, cents, max_literal_centroids=0)
+    monkeypatch.setattr(similarity, "LITERAL_CENTROID_MAX", 0)
+    df = similarity.ivf_assign_to(emb, cents)
     assert len(df.collect()) == emb.count()  # finalize AQE on THIS plan
     final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     assert "BroadcastNestedLoopJoin BuildRight" in final
