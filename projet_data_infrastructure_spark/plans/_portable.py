@@ -16,7 +16,7 @@ large sums (absolute noise ~1e-4 at sf0.01 ≪ the 0.5 boundary).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -35,6 +35,33 @@ def pround(col: Column, n: int = 2) -> Column:
     """Portable round-half-up, identical in Spark and DuckDB (see module doc)."""
     scale = float(10**n)
     return (F.floor(col * F.lit(scale) + F.lit(0.5 + _EPS)) / F.lit(scale)).alias("pround")
+
+
+def value_cents() -> Column:
+    """The ``events`` value in integer cents, rounded half-up:
+    ``floor(value * 100 + 0.5)`` as BIGINT (the oracles' ``CAST(floor(value
+    * 100 + 0.5) AS BIGINT)``). Exact integers from here on, so every sum
+    over them is order-insensitive in both engines."""
+    return F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+
+
+def epoch_day() -> Column:
+    """The ``events`` row's day index: whole days from 1970-01-01 to the
+    date of ``ts`` (the oracles' ``datediff('day', DATE '1970-01-01',
+    CAST(ts AS DATE))``)."""
+    return F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01")))
+
+
+def daily_cents(ev: DataFrame, *keys: str) -> DataFrame:
+    """``(*keys, d, cents)``: the events frame ``ev`` summed to one row per
+    key and :func:`epoch_day`, ``cents`` the BIGINT sum of
+    :func:`value_cents`. Callers rename, cast or checkpoint on top; those
+    projections collapse into this aggregate."""
+    return (
+        ev.select(*keys, epoch_day().alias("d"), value_cents().alias("cents"))
+        .groupBy(*keys, "d")
+        .agg(F.sum("cents").alias("cents"))
+    )
 
 
 def pround_sql(expr: str, n: int = 2) -> str:

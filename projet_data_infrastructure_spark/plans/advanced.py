@@ -15,7 +15,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from projet_data_infrastructure_spark.operators.asof import asof_join, carry_forward
-from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
+from projet_data_infrastructure_spark.plans._portable import (
+    pround,
+    pround_sql,
+    value_cents,
+)
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
 from projet_data_infrastructure_spark.sources.readers import read_table, read_table_balanced
@@ -578,7 +582,7 @@ def q_max_drawdown_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SCD2 single-exchange discipline). Values are integer cents with a
     deterministic (ts, event_id) order, so every intermediate is exact."""
     ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = value_cents()
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     run = F.sum(cents).over(w.rowsBetween(Window.unboundedPreceding, 0))
     series = ev.select("user_id", "ts", "event_id", run.alias("run_sum"))
@@ -1864,7 +1868,7 @@ GROUP BY event_type
 def q_regression_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     x_abs = F.expr("unix_micros(cast(ts as timestamp)) div 1000000")
-    y = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    y = value_cents()
     w = Window.partitionBy("user_id")
     base = ev.select(
         "user_id",
@@ -2116,7 +2120,7 @@ def q_spend_percentile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from projet_data_infrastructure_spark.operators.ranks import global_rank
 
     ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = value_cents()
     per_user = (
         ev.filter(F.col("event_type") == "purchase")
         .select("user_id", cents.alias("cents"))
@@ -2198,7 +2202,7 @@ def q_rolling_7day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact; one shuffle (the user partition), per-row frame scan is
     bounded by the 7-day horizon however long the history grows."""
     ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = value_cents()
     sec = F.expr("unix_micros(cast(ts as timestamp)) div 1000000")
     p = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "event_id", sec.alias("sec"), cents.alias("cents")
@@ -2284,7 +2288,7 @@ def q_revenue_decile_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from projet_data_infrastructure_spark.operators.ranks import exact_ntile
 
     ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = value_cents()
     per_user = (
         ev.filter(F.col("event_type") == "purchase")
         .select("user_id", cents.alias("cents"))
@@ -2398,7 +2402,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from projet_data_infrastructure_spark.operators.ranks import exact_ntile
 
     ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = value_cents()
     p = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.to_date("ts").alias("d"), cents.alias("cents")
     )
@@ -2475,7 +2479,7 @@ def q_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     anomaly monitor shape. Users whose MAD is 0 (constant spend) flag
     nothing, by definition."""
     ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = value_cents()
     p = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "event_id", cents.alias("cents")
     )
@@ -3345,7 +3349,7 @@ SPECS.extend(
 
 def q_pit_regime_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = value_cents()
     # Regime source: every non-purchase event. SCD2 change-detection (drop
     # rows equal to their predecessor) is deliberately OMITTED: last(attr)
     # over the merged stream returns the latest state's value either way

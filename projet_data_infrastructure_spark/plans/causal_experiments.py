@@ -22,6 +22,7 @@ from projet_data_infrastructure_spark.plans._portable import (
     fdiv as _fdiv,
     pround,
     pround_sql,
+    value_cents,
 )
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import read_table
@@ -54,7 +55,7 @@ def q_cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
         ev.select(
             "user_id",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+            value_cents().alias("cents"),
             (F.to_date("ts") < mid).cast("int").alias("pre"),
         )
         .groupBy("user_id")
@@ -247,7 +248,7 @@ def q_qte_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = (
         ev.select(
             "user_id",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+            value_cents().alias("cents"),
         )
         .groupBy("user_id")
         .agg(F.sum("cents").alias("total"))
@@ -320,7 +321,7 @@ def q_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             F.pmod(hash64(F.col("user_id")), F.lit(2)).cast("int").alias("arm"),
             (F.to_date("ts") >= mid).cast("int").alias("post"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+            value_cents().alias("cents"),
         )
         .groupBy("arm", "post")
         .agg(

@@ -21,7 +21,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
+from projet_data_infrastructure_spark.plans._portable import (
+    pround,
+    pround_sql,
+    value_cents,
+)
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
 from projet_data_infrastructure_spark.sources.readers import read_table, read_table_balanced
@@ -62,7 +66,6 @@ _ENVELOPE_SCHEMA = (
 
 def q_cdc_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table_balanced(spark, sf_dir, "events")
-    value_cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     ts_ms = F.unix_millis(F.col("ts").cast("timestamp"))  # UTC pinned by read_table
     envelope = F.concat(
         F.lit('{"payload":{"after":{"id":'),
@@ -70,7 +73,7 @@ def q_cdc_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(',"user_id":'),
         F.col("user_id").cast("string"),
         F.lit(',"value_cents":'),
-        value_cents.cast("string"),
+        value_cents().cast("string"),
         F.lit('},"op":"c","ts_ms":'),
         ts_ms.cast("string"),
         F.lit("}}"),
@@ -87,17 +90,10 @@ def q_cdc_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("id").isNotNull())
 
 
-def q_xml_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 native XML surface (`from_xml`, SPARK-44751): the CDC
-    envelope exercise re-run over XML — build a deterministic XML document
-    per event, parse it back with a typed schema, extract and filter.
-    Element-only layout (attribute handling is prefix-configurable and adds
-    nothing here). DuckDB has no XML type, so the oracle builds the SAME
-    string and extracts the fields with anchored regexes — both engines
-    genuinely parse the document they were handed. Purchase-only filter
-    proves predicate pushdown through the parse projection."""
-    ev = read_table_balanced(spark, sf_dir, "events")
-    value_cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+def _xml_envelope(ev: DataFrame) -> DataFrame:
+    """The XML envelope round-trip over an events frame, batch or stream:
+    render each event as ``<event><id/><user/><type/><cents/></event>``,
+    parse it back with ``from_xml`` and a typed schema, keep purchases."""
     xml = F.concat(
         F.lit("<event><id>"),
         F.col("event_id").cast("string"),
@@ -106,7 +102,7 @@ def q_xml_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</user><type>"),
         F.col("event_type"),
         F.lit("</type><cents>"),
-        value_cents.cast("string"),
+        value_cents().cast("string"),
         F.lit("</cents></event>"),
     )
     parsed = ev.select(xml.alias("doc")).select(
@@ -123,6 +119,18 @@ def q_xml_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("event_type") == "purchase")
     )
+
+
+def q_xml_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark 4 native XML surface (`from_xml`, SPARK-44751): the CDC
+    envelope exercise re-run over XML — build a deterministic XML document
+    per event, parse it back with a typed schema, extract and filter.
+    Element-only layout (attribute handling is prefix-configurable and adds
+    nothing here). DuckDB has no XML type, so the oracle builds the SAME
+    string and extracts the fields with anchored regexes — both engines
+    genuinely parse the document they were handed. Purchase-only filter
+    proves predicate pushdown through the parse projection."""
+    return _xml_envelope(read_table_balanced(spark, sf_dir, "events"))
 
 
 _XML_ENVELOPE_SQL = """
@@ -415,34 +423,7 @@ def q_stream_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged (append mode, no state); the value is pinning that the typed
     XML path produces byte-identical output batch vs stream. Oracle: the
     batch XML SQL."""
-    stream = _events_stream(spark, sf_dir)
-    value_cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    xml = F.concat(
-        F.lit("<event><id>"),
-        F.col("event_id").cast("string"),
-        F.lit("</id><user>"),
-        F.col("user_id").cast("string"),
-        F.lit("</user><type>"),
-        F.col("event_type"),
-        F.lit("</type><cents>"),
-        value_cents.cast("string"),
-        F.lit("</cents></event>"),
-    )
-    parsed = (
-        stream.select(xml.alias("doc"))
-        .select(
-            F.from_xml(
-                "doc", "id BIGINT, user BIGINT, type STRING, cents BIGINT"
-            ).alias("x")
-        )
-        .select(
-            F.col("x.id").alias("id"),
-            F.col("x.user").alias("user_id"),
-            F.col("x.type").alias("event_type"),
-            F.col("x.cents").alias("value_cents"),
-        )
-        .filter(F.col("event_type") == "purchase")
-    )
+    parsed = _xml_envelope(_events_stream(spark, sf_dir))
     return _run_stream(
         parsed.writeStream.outputMode("append"), spark, "stream_xml_sink", sf_dir)
 
@@ -585,15 +566,12 @@ GROUP BY c_mktsegment
 """
 
 
-def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live stream-stream interval join: purchases joined to the view that
-    preceded them (same user, ≤ 2 h gap), both sides watermarked — the
-    attribution join every event pipeline runs. State is bounded by the
-    watermark: each side buffers only 2 h + 1 h of events, however long the
-    streams run. availableNow delivers the file as one batch, so the append
-    output is the complete match set — oracle-checkable against the batch
-    self-join. gap_sec counts second-boundary crossings (µs epochs divided
-    to seconds BEFORE subtracting) to match DuckDB's date_diff semantics."""
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The attribution interval join over the event stream: each view
+    ``(view_id, v_user, view_ts)`` joined with ``how`` to the same user's
+    purchases ``(purchase_id, p_user, purchase_ts)`` at most 2 h later.
+    Both sides carry a 1-hour watermark, so join state stays bounded by
+    2 h + 1 h of events however long the stream runs."""
     s = _events_stream(spark, sf_dir)
     views = (
         s.filter(F.col("event_type") == "view")
@@ -613,12 +591,25 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "1 hour")
     )
-    j = views.join(
+    return views.join(
         purchases,
         (F.col("v_user") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("view_ts"))
         & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
+        how,
     )
+
+
+def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Live stream-stream interval join: purchases joined to the view that
+    preceded them (same user, ≤ 2 h gap), both sides watermarked — the
+    attribution join every event pipeline runs. State is bounded by the
+    watermark: each side buffers only 2 h + 1 h of events, however long the
+    streams run. availableNow delivers the file as one batch, so the append
+    output is the complete match set — oracle-checkable against the batch
+    self-join. gap_sec counts second-boundary crossings (µs epochs divided
+    to seconds BEFORE subtracting) to match DuckDB's date_diff semantics."""
+    j = _view_purchase_join(spark, sf_dir, "inner")
     out = j.select(
         "view_id",
         "purchase_id",
@@ -650,32 +641,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     that trailing window are withheld — the oracle reproduces exactly that
     cutoff, so the result is deterministic and hash-checkable, not
     "whatever happened to flush"."""
-    s = _events_stream(spark, sf_dir)
-    views = (
-        s.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        s.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    j = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
-        "leftOuter",
-    )
+    j = _view_purchase_join(spark, sf_dir, "leftOuter")
     out = j.select(
         "view_id",
         "purchase_id",
@@ -720,32 +686,7 @@ def q_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     trimmed result came out of the real streaming join, and the result is
     deterministic and hash-checkable instead of depending on emission
     timing."""
-    s = _events_stream(spark, sf_dir)
-    views = (
-        s.filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        s.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    j = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
-        "fullOuter",
-    )
+    j = _view_purchase_join(spark, sf_dir, "fullOuter")
     out = j.select(
         "view_id",
         "purchase_id",
@@ -814,17 +755,19 @@ WHERE p.event_type = 'purchase'
 # --------------------------------------------------------------------------
 
 
-def q_resample_hourly_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _hourly_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(user_id, hr, cents)``: every hour from each user's first to last
+    active hour, ``cents`` the last event's (by ts, event_id) value in that
+    hour and NULL in silent hours — the gap-filling input of both resample
+    specs."""
     from pyspark.sql.window import Window
 
-    ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    ev2 = ev.select(
+    ev2 = read_table(spark, sf_dir, "events").select(
         "user_id",
         F.date_trunc("hour", F.col("ts")).alias("hr"),
         "ts",
         "event_id",
-        cents.alias("cents"),
+        value_cents().alias("cents"),
     )
     rn = F.row_number().over(
         Window.partitionBy("user_id", "hr").orderBy(F.desc("ts"), F.desc("event_id"))
@@ -837,16 +780,18 @@ def q_resample_hourly_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on those same tasks (64% of this spec's executor time on ONE task,
     # measured). A user-specified hash repartition is AQE-exempt and keys
     # the grid by user_id, which the downstream join/windows reuse.
-    from projet_data_infrastructure_spark.session import default_parallelism
-
     grid = bounds.repartition(default_parallelism(), "user_id").select(
         "user_id",
         F.explode(F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))).alias("hr"),
     )
+    return grid.join(hourly, ["user_id", "hr"], "left")
+
+
+def q_resample_hourly_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from projet_data_infrastructure_spark.operators.asof import carry_forward
 
     return carry_forward(
-        grid.join(hourly, ["user_id", "hr"], "left"),
+        _hourly_grid(spark, sf_dir),
         key="user_id",
         order=("hr",),
         carry={"filled_cents": "cents"},
@@ -861,37 +806,9 @@ def q_resample_hourly_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; grid spans min..max observed, so both neighbors always
     exist). Same scale shape as the ffill form: per-user windows over the
     hourly aggregate, grid via sequence+explode, no global sort."""
-    from pyspark.sql.window import Window
-
-    ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    ev2 = ev.select(
-        "user_id",
-        F.date_trunc("hour", F.col("ts")).alias("hr"),
-        "ts",
-        "event_id",
-        cents.alias("cents"),
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("user_id", "hr").orderBy(F.desc("ts"), F.desc("event_id"))
-    )
-    hourly = ev2.withColumn("rn", rn).filter(F.col("rn") == 1).select("user_id", "hr", "cents")
-    bounds = ev2.groupBy("user_id").agg(F.min("hr").alias("h0"), F.max("hr").alias("h1"))
-    # AQE-coalesce fan-out trap (round-13 full sweep): the per-user bounds
-    # aggregate is tiny in BYTES, so AQE coalesces it to 1-2 partitions —
-    # and the sequence+explode below then fans out ~|hours| rows per user
-    # on those same tasks (64% of this spec's executor time on ONE task,
-    # measured). A user-specified hash repartition is AQE-exempt and keys
-    # the grid by user_id, which the downstream join/windows reuse.
-    from projet_data_infrastructure_spark.session import default_parallelism
-
-    grid = bounds.repartition(default_parallelism(), "user_id").select(
-        "user_id",
-        F.explode(F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))).alias("hr"),
-    )
     from projet_data_infrastructure_spark.operators.asof import carry_forward
 
-    joined = grid.join(hourly, ["user_id", "hr"], "left")
+    joined = _hourly_grid(spark, sf_dir)
     obs_hr = F.when(F.col("cents").isNotNull(), F.col("hr"))
     # Backward carry (previous observation) + forward carry (next) via the
     # registered PIT core — one window sort per direction, same key shuffle.

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from projet_data_infrastructure_spark.plans._portable import value_cents
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import read_table
 from projet_data_infrastructure_spark.streaming.sinks import drain
@@ -715,7 +716,7 @@ def q_variant_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round-trip must preserve, so the whole variant encode/decode is
     hash-checked."""
     ev = read_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = value_cents()
     j = F.to_json(
         F.struct(
             F.col("user_id").alias("u"),

@@ -2964,22 +2964,22 @@ def q_pq_trained_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     The FP/numpy trainer (`pq_train_codebooks`) remains the
     quality-comparison path (trained-vs-seed quantization-error test).
 
-    Scale shape: one TakeOrdered 256-row collect (model-parameter class),
-    then a map-side 8×16-literal argmin per vector — zero shuffle."""
+    Scale shape: one 256-row scan-job collect sorted on the driver
+    (model-parameter class), then a map-side 8×16-literal argmin per
+    vector — zero shuffle."""
     emb = read_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(
             f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {_PQ_TR_SCALE}) AS BIGINT))"
         ).alias("q"),
     )
-    sample = (
-        emb.filter(F.col("vec_id") < _PQ_TR_SAMPLE).orderBy("vec_id").collect()
-    )
+    # Milli-unit integers are far below 2^53: exact through the float list.
+    sample = similarity.seed_vectors(emb, _PQ_TR_SAMPLE, vec_col="q")
     assert len(sample) >= _PQ_TR_CODES, f"pq training sample too small: {len(sample)}"
-    assert [int(r["vec_id"]) for r in sample[: _PQ_TR_CODES]] == list(
+    assert [vid for vid, _ in sample[: _PQ_TR_CODES]] == list(
         range(_PQ_TR_CODES)
     ), "pq init: sample must contain vec_ids 0..15 (code ids are positional)"
-    X = [[int(v) for v in r["q"]] for r in sample]
+    X = [[int(v) for v in q] for _, q in sample]
     dim = len(X[0])
     d = dim // _PQ_TR_SUB
     books: list[list[tuple[int, list[float]]]] = []

@@ -22,6 +22,7 @@ from projet_data_infrastructure_spark.plans._portable import (
     fdiv as _fdiv,
     pround,
     pround_sql,
+    value_cents,
 )
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import (
@@ -631,7 +632,7 @@ def q_precision_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 5× literal map-side explode → one combinable aggregate; no rescans.
     tall = ev.select(
         (F.col("event_type") == "purchase").cast("int").alias("y"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        value_cents().alias("cents"),
         F.explode(F.expr(f"array({thr_list})")).alias("thr"),
     ).withColumn("pred", (F.col("cents") >= F.col("thr")).cast("int"))
     conf = tall.groupBy("thr").agg(
@@ -816,14 +817,7 @@ def q_als_rank1_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     from projet_data_infrastructure_spark.functions.hashing import hash64
 
     ev = read_table(spark, sf_dir, "events")
-    r = (
-        ev.groupBy("user_id", "event_type")
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-                "r"
-            )
-        )
-    )
+    r = ev.groupBy("user_id", "event_type").agg(F.sum(value_cents()).alias("r"))
     v0 = r.select("event_type").distinct().select(
         "event_type",
         (F.pmod(hash64(F.col("event_type")), F.lit(100)) + 1).alias("v0"),

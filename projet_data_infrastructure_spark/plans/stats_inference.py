@@ -31,9 +31,12 @@ from projet_data_infrastructure_spark.operators.ranks import (
     value_grid_ranks,
 )
 from projet_data_infrastructure_spark.plans._portable import (
+    daily_cents,
+    epoch_day,
     fdiv as _fdiv,
     pround,
     pround_sql,
+    value_cents,
 )
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
@@ -265,12 +268,7 @@ def q_grubbs_outlier_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax is a bounded TakeOrdered over the day grid."""
     ev = read_table(spark, sf_dir, "events")
     daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
+        daily_cents(ev).withColumnRenamed("cents", "y")
         .localCheckpoint(eager=True)  # calendar frame, consumed twice
     )
     tot = daily.groupBy().agg(
@@ -705,7 +703,7 @@ def q_welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = value_cents()
     obs = ev.select(
         cents.alias("c"),
         F.pmod(hash64(F.col("event_id")), F.lit(2)).cast("int").alias("arm"),
@@ -1904,6 +1902,19 @@ _LLR = (
 )
 
 
+def _sprt_daily(ev: DataFrame) -> DataFrame:
+    """The (d, ne, nconv) day grid of an events frame, batch or stream:
+    events and purchases per :func:`epoch_day`."""
+    return (
+        ev.select(
+            epoch_day().alias("d"),
+            (F.col("event_type") == "purchase").cast("long").alias("conv"),
+        )
+        .groupBy("d")
+        .agg(F.count(F.lit(1)).alias("ne"), F.sum("conv").alias("nconv"))
+    )
+
+
 def _sprt_from_daily(daily: DataFrame) -> DataFrame:
     """SPRT decision readout from a (d, ne, nconv) day grid — shared by the
     batch spec and its LIVE streaming-parity twin."""
@@ -1943,16 +1954,7 @@ def q_sprt_ab_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the day grid; cumulative (events, purchases) are exact BIGINTs, the
     llr is a shared-literal double tree (module constant), and the decision
     is the earliest day the llr leaves (B, A)."""
-    ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            (F.col("event_type") == "purchase").cast("long").alias("conv"),
-        )
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("ne"), F.sum("conv").alias("nconv"))
-    )
-    return _sprt_from_daily(daily)
+    return _sprt_from_daily(_sprt_daily(read_table(spark, sf_dir, "events")))
 
 
 def _sprt_sql() -> str:
@@ -3232,7 +3234,7 @@ def q_mode_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         ev.select(
             "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+            value_cents().alias("cents"),
         )
         .groupBy("event_type", "cents")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -3314,7 +3316,7 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(default_parallelism())
         .select(
             "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+            value_cents().alias("cents"),
             "event_id",
             F.explode(F.expr(f"sequence(0, {_BOOT_R - 1})")).alias("r"),
         )
@@ -3408,7 +3410,7 @@ def q_winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     vals = ev.select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        value_cents().alias("cents"),
     )
     wrnk = Window.partitionBy("event_type").orderBy("cents")
     wtot = Window.partitionBy("event_type")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
-from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
+from projet_data_infrastructure_spark.plans._portable import value_cents
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import (
     read_table,
@@ -34,7 +34,7 @@ SPECS: list[QuerySpec] = []
 def q_stream_event_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The row-pattern spec running LIVE: ``streaming/stateful.journey_state``
     accumulates each user's time-ordered event-initial string as ONE string
-    of per-user state (the ``funnel3_state`` shape with a string
+    of per-user state (the ``funnel_state`` shape with a string
     accumulator — the always-on ingest form the reference's streaming lake
     models, ``/root/reference/spark/SaveDelta.scala:157-163``); the clean-
     conversion regex is evaluated STATELESSLY at emission, so any
@@ -95,7 +95,7 @@ def q_stream_funnel_three_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The strict view→click→purchase funnel running LIVE: per-user state
     is THREE int64 timestamps (first view, first click at-or-after it,
     first purchase at-or-after that click) in
-    ``streaming/stateful.funnel3_state`` — streaming state stays bounded
+    ``streaming/stateful.funnel_state`` — streaming state stays bounded
     by the active-user set while the batch spec re-aggregates the lake
     per run. availableNow delivers events.parquet as one micro-batch, so
     the update-mode emission is the complete per-user funnel; the final
@@ -107,12 +107,12 @@ def q_stream_funnel_three_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events_stream,
         _run_stream,
     )
-    from projet_data_infrastructure_spark.streaming.stateful import funnel3_state
+    from projet_data_infrastructure_spark.streaming.stateful import funnel_state
 
     stream = _events_stream(spark, sf_dir).select(
         "user_id", F.unix_micros(F.col("ts")).alias("ts_us"), "event_type"
     )
-    out = funnel3_state(stream)
+    out = funnel_state(stream, ("view", "click", "purchase"))
     table = _run_stream(
         out.writeStream.outputMode("update"), spark, "stream_funnel3_sink", sf_dir)
     return table.groupBy().agg(
@@ -289,6 +289,7 @@ SPECS.append(
 # --------------------------------------------------------------------------
 
 from projet_data_infrastructure_spark.plans.stats_inference import (
+    _sprt_daily,
     _sprt_from_daily,
     _sprt_sql,
 )
@@ -314,15 +315,7 @@ def q_stream_sprt_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         _run_stream,
     )
 
-    stream = _events_stream(spark, sf_dir)
-    daily = (
-        stream.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            (F.col("event_type") == "purchase").cast("long").alias("conv"),
-        )
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("ne"), F.sum("conv").alias("nconv"))
-    )
+    daily = _sprt_daily(_events_stream(spark, sf_dir))
     table = _run_stream(
         daily.writeStream.outputMode("update"), spark, "stream_sprt_sink", sf_dir)
     return _sprt_from_daily(table)
@@ -344,7 +337,7 @@ def q_stream_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = _events_stream(spark, sf_dir).select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents")
+        value_cents().alias("cents")
     )
     counts = (
         stream.select(F.expr(_HDR_IDX).alias("idx"))
@@ -393,10 +386,10 @@ SPECS.extend(
 
 def q_stream_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-user view→purchase funnel running LIVE as a custom stateful
-    operator (``streaming/stateful.funnel_state``): state is two int64
-    timestamps per user, so streaming state is bounded by the active-user
-    set — the deployed form of ``funnel_conversion``, which re-sorts the
-    lake per run. availableNow delivers events.parquet as one micro-batch,
+    operator (``streaming/stateful.funnel_state`` over view→purchase):
+    state is two int64 timestamps per user, so streaming state is bounded
+    by the active-user set — the deployed form of ``funnel_conversion``,
+    which re-sorts the lake per run. availableNow delivers events.parquet as one micro-batch,
     so the update-mode emission is the complete funnel and hash-checks
     against the SAME oracle as the batch spec (stream == batch, pinned
     cross-engine AND cross-execution-mode — the stream_pit discipline).
@@ -411,7 +404,7 @@ def q_stream_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir).select(
         "user_id", F.unix_micros(F.col("ts")).alias("ts_us"), "event_type"
     )
-    out = funnel_state(stream)
+    out = funnel_state(stream, ("view", "purchase"))
     table = _run_stream(
         out.writeStream.outputMode("update"), spark, "stream_funnel_sink", sf_dir)
     return table.select(

@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.stats import two_sided_p_sql
 from projet_data_infrastructure_spark.plans._portable import (
+    daily_cents,
+    epoch_day,
     fdiv as _fdiv,
     pround,
     pround_sql,
@@ -41,7 +43,7 @@ def q_stl_weekly_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     daily = (
         ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
+            epoch_day().alias("d"),
             F.expr(_STL_CENTS).alias("cents"),
         )
         .groupBy("d")
@@ -142,12 +144,7 @@ def q_mann_kendall_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     values. One corpus aggregate; no corpus-sized window or join."""
     ev = read_table(spark, sf_dir, "events")
     daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
+        daily_cents(ev).withColumnRenamed("cents", "y")
         .localCheckpoint(eager=True)  # tiny calendar frame, consumed 3x
     )
     b = daily.select(F.col("d").alias("d2"), F.col("y").alias("y2"))
@@ -230,14 +227,7 @@ def q_changepoint_cusum_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus aggregate to the ≤ ~366-row day grid; the cumulative window
     runs on the grid (the bounded-window class)."""
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_cents(ev).withColumnRenamed("cents", "y")
     wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = daily.select(
         "d",
@@ -339,14 +329,7 @@ def q_segmented_regression_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded TakeOrdered (ties → earliest k). Both segments need ≥ 2 points
     (2 ≤ k ≤ n−2). Identical doubles on both engines → identical argmin."""
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_cents(ev).withColumnRenamed("cents", "y")
     wd = Window.orderBy("d")
     wcum = wd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     idx = daily.select("d", "y", F.row_number().over(wd).alias("t"))
@@ -485,14 +468,7 @@ def q_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure scalar arithmetic on the 1-row frame, generated ONCE as SQL text
     shared verbatim by both engines. One data-sized day aggregate."""
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").cast("double").alias("y"))
-    )
+    daily = daily_cents(ev).select("d", F.col("cents").cast("double").alias("y"))
     rows = daily.agg(
         F.expr("transform(array_sort(collect_list(struct(d, y))), r -> r.y)").alias(
             "ys"
@@ -599,14 +575,7 @@ def q_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     every m_t, the prefix min and the argmax day are integer-exact; only
     the reported magnitude converts to dollars."""
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("x"))
-    )
+    daily = daily_cents(ev).withColumnRenamed("cents", "x")
     wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     pre = daily.select(
         "d",
@@ -713,14 +682,7 @@ def q_matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivial matches out. Zero-variance windows are excluded (undefined
     z-normalized distance)."""
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.expr("CAST(sum(cents) AS BIGINT) DIV 100").alias("x"))
-    )
+    daily = daily_cents(ev).select("d", F.expr("cents DIV 100").alias("x"))
     grid = daily.select(
         F.row_number().over(Window.orderBy("d")).alias("ts_i"), "x"
     )
@@ -859,14 +821,7 @@ def q_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard convention). Doubled-median comparison keeps the sign an
     integer decision; runs counted by one lag on the day grid."""
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("x"))
-    )
+    daily = daily_cents(ev).withColumnRenamed("cents", "x")
     byval = daily.select("d", "x", F.row_number().over(Window.orderBy("x", "d")).alias("rk"))
     nn = daily.groupBy().agg(F.count(F.lit(1)).alias("n"))
     med = (
@@ -954,14 +909,7 @@ def q_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     differences on the day grid, numerator/denominator terms micro-
     quantized before the grid sums. DW ~ 2(1 - rho1)."""
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.expr("CAST(sum(cents) AS BIGINT) DIV 100").alias("x"))
-    )
+    daily = daily_cents(ev).select("d", F.expr("cents DIV 100").alias("x"))
     seq = daily.select(
         "x", F.row_number().over(Window.orderBy("d")).alias("t")
     )
@@ -1040,14 +988,7 @@ def q_ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cancel — accumulated DECIMAL(38,0)/HUGEINT; each r_k^2/(n-k) term is
     micro-quantized before the 7-term fold. Q ~ chi2(7) under the null."""
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.expr("CAST(sum(cents) AS BIGINT) DIV 100").alias("x"))
-    )
+    daily = daily_cents(ev).select("d", F.expr("cents DIV 100").alias("x"))
     seq = daily.select("x", F.row_number().over(Window.orderBy("d")).alias("t"))
     mom = seq.groupBy().agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
     dev = seq.crossJoin(F.broadcast(mom)).select(
@@ -1205,14 +1146,8 @@ def q_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("event_type", "d")
-        .agg(F.sum("cents").cast("double").alias("y"))
+    daily = daily_cents(ev, "event_type").select(
+        "event_type", "d", F.col("cents").cast("double").alias("y")
     )
 
     schema = (
@@ -1307,14 +1242,7 @@ def q_fourier_weekly_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression tree. One data-sized day aggregate; everything else is the
     ≤|days| frame."""
     ev = read_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").cast("double").alias("y"))
-    )
+    daily = daily_cents(ev).select("d", F.col("cents").cast("double").alias("y"))
     # Order-pinned folds: sort the (d, y) pairs, then fold left to right.
     rows = daily.agg(
         F.expr("array_sort(collect_list(struct(d, y)))").alias("arr")
@@ -1392,12 +1320,7 @@ def q_mann_kendall_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable kernel."""
     ev = read_table(spark, sf_dir, "events")
     daily = (
-        ev.select(
-            F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
+        daily_cents(ev).withColumnRenamed("cents", "y")
         .localCheckpoint()  # tiny calendar frame, self-joined twice below
     )
     b = daily.select(F.col("d").alias("d2"), F.col("y").alias("y2"))

@@ -177,132 +177,57 @@ def pit_regimes(events: DataFrame) -> DataFrame:
     )
 
 
-FUNNEL_SCHEMA = "user_id BIGINT, first_view_us BIGINT, first_purchase_us BIGINT"
-_FUNNEL_STATE_SCHEMA = "first_view_us BIGINT, first_purchase_us BIGINT"
 _NO_TS = -1  # sentinel: state tuples can't carry NULLs portably
 
 
-def funnel_state(events: DataFrame) -> DataFrame:
-    """Per-user view→purchase funnel as a LIVE stateful operator: state is
-    TWO int64 timestamps (first view, first qualifying purchase) per user —
-    bounded by the active-user set, never by history. Each batch folds its
-    events into the state; users with at least one view emit their current
-    funnel row (update mode).
+def funnel_state(events: DataFrame, steps: tuple[str, ...]) -> DataFrame:
+    """Strict N-step funnel (first ``steps[0]`` → first ``steps[1]``
+    at-or-after it → … → first ``steps[-1]`` at-or-after the step before)
+    as a LIVE stateful operator: state is one int64 timestamp per step per
+    user, bounded by the active-user set, never by history. Each batch
+    folds its events into the state step by step; users who reached the
+    first step emit their current funnel row (update mode) as ``user_id``
+    plus ``first_{step}_us`` per step, the first non-null and the rest NULL
+    until reached.
 
     Input contract: ``events`` carries (user_id, ts_us BIGINT, event_type).
     Same delivery caveat as ``pit_regimes``: exactly correct under per-user
-    event-time-ordered delivery or a single availableNow replay (a view
-    arriving LATE, before already-seen purchases, would need those
-    purchases re-examined — the batch spec re-sorts the lake instead).
+    event-time-ordered delivery or a single availableNow replay (an
+    earlier-step event arriving LATE, before already-seen later-step
+    events, would need those re-examined — the batch specs re-aggregate
+    the lake instead).
     """
     import pandas as pd
 
+    cols = [f"first_{step}_us" for step in steps]
+    state_schema = ", ".join(f"{c} BIGINT" for c in cols)
+
     def update(key, pdfs: Iterator["pd.DataFrame"], state: GroupState):
-        fv, fp = state.get if state.exists else (_NO_TS, _NO_TS)
+        firsts = list(state.get) if state.exists else [_NO_TS] * len(steps)
         pdf = pd.concat(list(pdfs), ignore_index=True)
-        views = pdf.loc[pdf["event_type"] == "view", "ts_us"]
-        if len(views):
-            mv = int(views.min())
-            if fv == _NO_TS or mv < fv:
-                fv = mv
-        if fv != _NO_TS:
-            purch = pdf.loc[
-                (pdf["event_type"] == "purchase") & (pdf["ts_us"] >= fv), "ts_us"
-            ]
-            if len(purch):
-                mp = int(purch.min())
-                if fp == _NO_TS or mp < fp:
-                    fp = mp
-        state.update((fv, fp))
-        if fv == _NO_TS:
+        for i, step in enumerate(steps):
+            hit = pdf["event_type"] == step
+            if i:
+                if firsts[i - 1] == _NO_TS:
+                    break
+                hit &= pdf["ts_us"] >= firsts[i - 1]
+            ts = pdf.loc[hit, "ts_us"]
+            if len(ts):
+                m = int(ts.min())
+                if firsts[i] == _NO_TS or m < firsts[i]:
+                    firsts[i] = m
+        state.update(tuple(firsts))
+        if firsts[0] == _NO_TS:
             return
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "first_view_us": [fv],
-                "first_purchase_us": pd.array(
-                    [fp if fp != _NO_TS else None], dtype="Int64"
-                ),
-            }
-        )
+        row = {"user_id": [key[0]], cols[0]: [firsts[0]]}
+        for c, t in zip(cols[1:], firsts[1:]):
+            row[c] = pd.array([t if t != _NO_TS else None], dtype="Int64")
+        yield pd.DataFrame(row)
 
     return events.groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=FUNNEL_SCHEMA,
-        stateStructType=_FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-FUNNEL3_SCHEMA = (
-    "user_id BIGINT, first_view_us BIGINT, first_click_us BIGINT, "
-    "first_purchase_us BIGINT"
-)
-_FUNNEL3_STATE_SCHEMA = "fv BIGINT, fc BIGINT, fp BIGINT"
-
-
-def funnel3_state(events: DataFrame) -> DataFrame:
-    """Strict THREE-step funnel (first view → first click at-or-after it →
-    first purchase at-or-after that click) as a LIVE stateful operator —
-    the 3-step extension of :func:`funnel_state`: state is three int64
-    timestamps per user, bounded by the active-user set, never by history.
-    Each batch folds its events into the state; users with at least one
-    view emit their current funnel row (update mode).
-
-    Input contract: ``events`` carries (user_id, ts_us BIGINT, event_type).
-    Same delivery caveat as :func:`funnel_state`: exactly correct under
-    per-user event-time-ordered delivery or a single availableNow replay
-    (a view/click arriving LATE, before already-seen later-stage events,
-    would need those re-examined — the batch spec re-aggregates the lake
-    instead).
-    """
-    import pandas as pd
-
-    def update(key, pdfs: Iterator["pd.DataFrame"], state: GroupState):
-        fv, fc, fp = state.get if state.exists else (_NO_TS, _NO_TS, _NO_TS)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        views = pdf.loc[pdf["event_type"] == "view", "ts_us"]
-        if len(views):
-            mv = int(views.min())
-            if fv == _NO_TS or mv < fv:
-                fv = mv
-        if fv != _NO_TS:
-            clicks = pdf.loc[
-                (pdf["event_type"] == "click") & (pdf["ts_us"] >= fv), "ts_us"
-            ]
-            if len(clicks):
-                mc = int(clicks.min())
-                if fc == _NO_TS or mc < fc:
-                    fc = mc
-        if fc != _NO_TS:
-            purch = pdf.loc[
-                (pdf["event_type"] == "purchase") & (pdf["ts_us"] >= fc), "ts_us"
-            ]
-            if len(purch):
-                mp = int(purch.min())
-                if fp == _NO_TS or mp < fp:
-                    fp = mp
-        state.update((fv, fc, fp))
-        if fv == _NO_TS:
-            return
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "first_view_us": [fv],
-                "first_click_us": pd.array(
-                    [fc if fc != _NO_TS else None], dtype="Int64"
-                ),
-                "first_purchase_us": pd.array(
-                    [fp if fp != _NO_TS else None], dtype="Int64"
-                ),
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=FUNNEL3_SCHEMA,
-        stateStructType=_FUNNEL3_STATE_SCHEMA,
+        outputStructType=f"user_id BIGINT, {state_schema}",
+        stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -325,7 +250,7 @@ def journey_state(events: DataFrame) -> DataFrame:
     State per key is the user's own journey string (bounded by per-user
     history, the funnel specs' active-user working set — at 100 TB pair it
     with a session watermark or cap the string; the batch spec re-aggregates
-    the lake instead). Same delivery caveat as :func:`funnel3_state`:
+    the lake instead). Same delivery caveat as :func:`funnel_state`:
     exactly correct under per-user event-time-ordered delivery or a single
     availableNow replay; a late event would need the string re-spliced.
 

@@ -1,4 +1,4 @@
-"""Semantics tests for the round-9 specs: strict 3-step funnel state
+"""Semantics tests for the round-9 specs: strict N-step funnel state
 machine, streaming incremental dedup batch-split invariance, Mann-Whitney
 vs a hand computation, Spearman on constructed monotone data, and the
 journey-pattern regex."""
@@ -6,6 +6,7 @@ journey-pattern regex."""
 import math
 
 import pyspark.sql.functions as F
+import pytest
 
 import projet_data_infrastructure_spark.plans.corpus_lm as cl
 import projet_data_infrastructure_spark.plans.events_queries as evq
@@ -17,11 +18,14 @@ from projet_data_infrastructure_spark.streaming.sinks import drain
 SF = "/root/testdata/sf0.001"
 
 
-# ------------------------------------------------- funnel3 state machine
+# ------------------------------------------------- N-step funnel state machine
+
+_THREE = ("view", "click", "purchase")
+_TWO = ("view", "purchase")
 
 
-def _run_funnel3(spark, rows):
-    from projet_data_infrastructure_spark.streaming.stateful import funnel3_state
+def _run_funnel(spark, rows, steps):
+    from projet_data_infrastructure_spark.streaming.stateful import funnel_state
 
     src = spark.createDataFrame(
         rows, "user_id BIGINT, ts_us BIGINT, event_type STRING"
@@ -30,25 +34,36 @@ def _run_funnel3(spark, rows):
     # for a unit test; drive the update function through a one-batch stream.
     import tempfile
 
-    work = tempfile.mkdtemp(prefix="funnel3_unit_")
+    work = tempfile.mkdtemp(prefix="funnel_unit_")
     src.coalesce(1).write.parquet(f"{work}/in")
     stream = spark.readStream.schema(src.schema).format("parquet").load(f"{work}/in")
     drain(
-        funnel3_state(stream)
+        funnel_state(stream, steps)
         .writeStream.outputMode("update")
-        .queryName("funnel3_unit")
+        .queryName(f"funnel_unit_{len(steps)}")
         .trigger(availableNow=True)
         .format("memory")
         .start()
     )
     return {
-        r.user_id: (r.first_view_us, r.first_click_us, r.first_purchase_us)
-        for r in spark.table("funnel3_unit").collect()
+        r.user_id: tuple(r[f"first_{step}_us"] for step in steps)
+        for r in spark.table(f"funnel_unit_{len(steps)}").collect()
     }
 
 
-def test_funnel3_strict_sequencing(spark):
-    out = _run_funnel3(
+@pytest.mark.parametrize(
+    "steps, expected",
+    [
+        (
+            _THREE,
+            {1: (10, 20, 30), 2: (30, None, None), 3: (10, 20, None), 4: (10, 10, 10)},
+        ),
+        (_TWO, {1: (10, 30), 2: (30, None), 3: (10, 15), 4: (10, 10)}),
+    ],
+    ids=["three_step", "two_step"],
+)
+def test_funnel_strict_sequencing(spark, steps, expected):
+    out = _run_funnel(
         spark,
         [
             # user 1: clean v(10) -> c(20) -> p(30)
@@ -56,12 +71,14 @@ def test_funnel3_strict_sequencing(spark):
             (1, 20, "click"),
             (1, 30, "purchase"),
             # user 2: click BEFORE the first view must not count; the
-            # purchase precedes any qualifying click so it must not count.
+            # purchase precedes the view (and any qualifying click) so it
+            # must not count.
             (2, 20, "click"),
             (2, 25, "purchase"),
             (2, 30, "view"),
-            # user 3: purchase between view and click must not count
-            # (strict order: purchase must be at-or-after the click).
+            # user 3: with the click step, a purchase between view and
+            # click must not count (strict order: purchase at-or-after the
+            # click); without it the purchase follows the view and counts.
             (3, 10, "view"),
             (3, 15, "purchase"),
             (3, 20, "click"),
@@ -72,13 +89,61 @@ def test_funnel3_strict_sequencing(spark):
             # user 5: no view -> no emission at all.
             (5, 10, "click"),
         ],
+        steps,
     )
-    assert out[1] == (10, 20, 30)
-    assert out[2] == (30, None, None)
-    assert out[3] == (10, 20, None)
-    assert out[4] == (10, 10, 10)
-    assert 5 not in out
-    assert len(out) == 4
+    assert out == expected
+
+
+def test_funnel_state_carries_across_batches(spark):
+    # The per-step timestamps must survive a state round-trip: view, click
+    # and purchase arrive in three availableNow runs over one checkpoint,
+    # and each run sees only its own event — the click and the purchase can
+    # qualify only through the restored earlier steps.
+    import os
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from projet_data_infrastructure_spark.streaming.stateful import funnel_state
+
+    base = tempfile.mkdtemp(prefix="funnelstate_")
+    src = os.path.join(base, "src")
+    ckpt = os.path.join(base, "ckpt")
+    os.makedirs(src)
+
+    def run_batch(user_id, ts_us, event_type, fname):
+        # One flat file per batch: the file source discovers files under the
+        # monitored dir, not the part-file dirs df.write.parquet creates.
+        tbl = pa.table(
+            {
+                "user_id": pa.array([user_id], pa.int64()),
+                "ts_us": pa.array([ts_us], pa.int64()),
+                "event_type": pa.array([event_type], pa.string()),
+            }
+        )
+        pq.write_table(tbl, os.path.join(src, fname))
+        stream = spark.readStream.schema(
+            "user_id BIGINT, ts_us BIGINT, event_type STRING"
+        ).parquet(src)
+        collected = []
+        # memory sink cannot recover from a checkpoint; foreachBatch can.
+        drain(
+            funnel_state(stream, _THREE)
+            .writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(lambda df, _id: collected.extend(df.collect()))
+            .trigger(availableNow=True)
+            .start()
+        )
+        return [
+            (r.user_id, r.first_view_us, r.first_click_us, r.first_purchase_us)
+            for r in collected
+        ]
+
+    assert run_batch(7, 10, "view", "b1.parquet") == [(7, 10, None, None)]
+    assert run_batch(7, 20, "click", "b2.parquet") == [(7, 10, 20, None)]
+    assert run_batch(7, 30, "purchase", "b3.parquet") == [(7, 10, 20, 30)]
 
 
 def test_stream_funnel3_equals_batch(spark):

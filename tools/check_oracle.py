@@ -2,7 +2,10 @@
 
 Runs every registry query on Spark and its oracle on DuckDB at a given SF,
 compares row count, column names, and an order-insensitive value hash.
-Usage: python tools/check_oracle.py [sf_dir] [only_query ...]
+Usage: python tools/check_oracle.py [--record] [sf_dir] [only_query ...]
+
+``--record`` on a full-registry run writes the verdict and per-spec Spark
+timings to ``LOCAL_ORACLE_<sf>.json``; without it the run writes nothing.
 """
 
 from __future__ import annotations
@@ -83,6 +86,9 @@ def register_views(con, sf_dir: str) -> None:
 
 
 def main() -> int:
+    record = "--record" in sys.argv
+    if record:
+        sys.argv.remove("--record")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("oracle-check")
@@ -187,13 +193,12 @@ def main() -> int:
             }
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail / {len(specs)} total")
-    # Full-registry runs leave an evidence artifact next to the driver's
-    # CORRECTNESS_r{N}.json (the driver window covers ~50 specs/round; this
-    # records the local gate's verdict on every registered spec).
-    # SPARK_GRAFT_ORACLE_NO_ARTIFACT=1 suppresses the artifact write so
-    # variant sweeps (e.g. the 7-shuffle-partition invariance run) don't
-    # overwrite the canonical default-session record.
-    if not only and not os.environ.get("SPARK_GRAFT_ORACLE_NO_ARTIFACT"):
+    # A recorded full-registry run leaves an evidence artifact next to the
+    # driver's CORRECTNESS_r{N}.json (the driver window covers ~50
+    # specs/round; this records the local gate's verdict on every
+    # registered spec). Plain runs and variant sweeps (e.g. the
+    # 7-shuffle-partition invariance run) leave the tracked file alone.
+    if record and not only:
         import json
 
         out = {

@@ -5,7 +5,8 @@
 # the four results in COVERAGE.md's round section.
 #
 #   1. full local oracle at sf0.001 / sf0.01 / sf0.1
-#      (writes LOCAL_ORACLE_sf*.json — the committed evidence artifacts)
+#      (--record writes LOCAL_ORACLE_sf*.json — the committed evidence
+#       artifacts; the other gates write no tracked file)
 #   2. 7-shuffle-partition invariance sweep at sf0.01
 #      (plan-shape invariance: results must not depend on partitioning)
 #   3. full-registry hostile-session probe at sf0.01
@@ -25,10 +26,10 @@ run() {
 }
 
 for sf in sf0.001 sf0.01 sf0.1; do
-  run "local oracle $sf" python tools/check_oracle.py /root/testdata/$sf
+  run "local oracle $sf" python tools/check_oracle.py --record /root/testdata/$sf
 done
 run "7-partition sweep sf0.01" env SPARK_GRAFT_SHUFFLE_PARTITIONS=7 \
-    SPARK_GRAFT_ORACLE_NO_ARTIFACT=1 python tools/check_oracle.py /root/testdata/sf0.01
+    python tools/check_oracle.py /root/testdata/sf0.01
 run "hostile probe (full registry)" python tools/hostile_probe.py 408 /root/testdata/sf0.01
 run "pytest" python -m pytest tests/ -x -q
 exit $fail
