@@ -36,9 +36,12 @@ import urllib.request
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
-from projet_data_infrastructure_spark.plans import all_specs
 from projet_data_infrastructure_spark.session import default_parallelism, get_spark
-from projet_data_infrastructure_spark.sources.readers import TABLES, read_table
+from projet_data_infrastructure_spark.sources.readers import (
+    TABLES,
+    read_table,
+    schema_inferences,
+)
 
 #: Frozen benchmark core (VERDICT r7 item 5): these 30 specs must stay
 #: bench-tagged FOREVER so every round's BENCH_r{N}.json carries a directly
@@ -207,6 +210,10 @@ def _calibrate_membw(n: int = 3) -> list[float]:
 
 
 def main() -> None:
+    # Imported here, not at module level: the tools and perfbench's
+    # cdc_ingest import this module for its helpers and need no plan module.
+    from projet_data_infrastructure_spark.plans import all_specs
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     cpus = default_parallelism()
@@ -226,7 +233,9 @@ def main() -> None:
     missing_core = set(BENCH_CORE) - {s.name for s in specs}
     assert not missing_core, f"frozen bench core missing from selection: {missing_core}"
 
+    inferred0 = schema_inferences()
     warm_up(spark, sf_dir)
+    inferred_warm = schema_inferences()
     samples: dict[str, list[float]] = {s.name: [] for s in specs}
     for _ in range(REPS):
         for spec in specs:
@@ -282,6 +291,13 @@ def main() -> None:
         "calibration": {"before": cal_before, "after": cal_after, "median": cal_median,
                         "membw_before": membw_before, "membw_after": membw_after,
                         "membw_median": membw_median},
+    }
+    # Parquet schema inferences (one Spark job each): warm_up pays the cold
+    # reads of the star schema, so the timed passes should infer nothing but
+    # the files their specs write themselves.
+    out["schema_inferences"] = {
+        "warm_up": inferred_warm - inferred0,
+        "timed": schema_inferences() - inferred_warm,
     }
     if requeried:
         out["requeried"] = requeried

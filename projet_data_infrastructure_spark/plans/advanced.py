@@ -22,7 +22,12 @@ from projet_data_infrastructure_spark.plans._portable import (
 )
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
-from projet_data_infrastructure_spark.sources.readers import read_table, read_table_balanced
+from projet_data_infrastructure_spark.sources.readers import (
+    file_set,
+    read_parquet,
+    read_table,
+    read_table_balanced,
+)
 
 # --------------------------------------------------------------------------
 # As-of join: last 'view' event at-or-before each 'purchase' per user.
@@ -1720,21 +1725,15 @@ _EVENTS_LAKE_CACHE: dict[str, str] = {}
 
 
 def _events_fingerprint(sf_dir: str) -> str:
-    """Cache key for the partitioned copy: absolute source path + mtime/size
-    of every events.parquet part. Two sf_dirs sharing a leaf name get
+    """Cache key for the partitioned copy: absolute source path + the
+    ``file_set`` of events.parquet. Two sf_dirs sharing a leaf name get
     different keys, and regenerating the test data in place invalidates the
     cached copy (the old leaf-name key did neither)."""
     import hashlib
     import os
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    st = os.stat(src)
-    parts = [src, f"{st.st_mtime_ns}:{st.st_size}"]
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            s = os.stat(os.path.join(src, name))
-            parts.append(f"{name}:{s.st_mtime_ns}:{s.st_size}")
-    return hashlib.sha1("|".join(parts).encode()).hexdigest()[:16]
+    return hashlib.sha1(repr((src, file_set(src))).encode()).hexdigest()[:16]
 
 
 def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1769,7 +1768,7 @@ def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # identical by construction.
                 shutil.rmtree(tmp, ignore_errors=True)
         _EVENTS_LAKE_CACHE[fp] = lake
-    return spark.read.parquet(lake)
+    return read_parquet(spark, lake)
 
 
 def q_events_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1834,7 +1833,7 @@ def q_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             except OSError:
                 shutil.rmtree(tmp, ignore_errors=True)
         _EVENTS_ZORDER_CACHE[fp] = lake
-    ev = spark.read.parquet(lake)
+    ev = read_parquet(spark, lake)
     sel = ev.filter(
         (F.col("user_id").between(10, 40)) & (F.col("value") >= 50.0)
     )

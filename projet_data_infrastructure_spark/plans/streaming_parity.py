@@ -20,6 +20,7 @@ from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sq
 from projet_data_infrastructure_spark.plans._portable import value_cents
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import (
+    read_parquet,
     read_table,
     read_table_balanced,
 )
@@ -202,7 +203,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # drop it — the accumulated store equals the batch spec's output.
         # Materialize before the finally-cleanup deletes the backing files.
         return (
-            spark.read.parquet(out_dir)
+            read_parquet(spark, out_dir)
             .drop("batch_id")
             .orderBy("new_doc")
             .localCheckpoint(eager=True)

@@ -13,6 +13,14 @@ Readers therefore always see a complete snapshot (writers never touch a
 published directory). This is the classic snapshot-pointer scheme Delta/
 Iceberg formalize; swap in Delta transparently when available
 (``streaming/sinks.py`` already prefers it).
+
+The writer also records the schema it wrote in the process schema catalog
+(``sources/readers.record_schema``), as Delta writes ``metaData.schemaString``
+into its log. Every snapshot read goes through ``readers.read_parquet``, so
+a fold's read of the stored state, ``read_cdc_state``, time travel and
+``snapshot_diff`` start no schema-inference job for a snapshot this process
+wrote. A restarted process infers each snapshot's schema once, on its first
+read.
 """
 
 from __future__ import annotations
@@ -22,6 +30,8 @@ import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from projet_data_infrastructure_spark.sources.readers import read_parquet, record_schema
 
 _POINTER = "_LATEST"
 
@@ -39,11 +49,13 @@ def latest_version(table_path: str) -> int | None:
 
 
 def write_snapshot(df: DataFrame, table_path: str) -> int:
-    """Write a new immutable snapshot and atomically publish it."""
+    """Write a new immutable snapshot, record its schema and atomically
+    publish it."""
     os.makedirs(table_path, exist_ok=True)
     version = (latest_version(table_path) or 0) + 1
     snap_dir = os.path.join(table_path, f"v={version}")
     df.write.mode("overwrite").parquet(snap_dir)
+    record_schema(df.sparkSession, snap_dir, df.schema)
     # POSIX rename within the same directory is atomic: readers see either
     # the old pointer or the new one, never a torn write.
     fd, tmp = tempfile.mkstemp(dir=table_path, prefix="._latest_")
@@ -58,7 +70,7 @@ def read_snapshot(spark: SparkSession, table_path: str, version: int | None = No
     v = version if version is not None else latest_version(table_path)
     if v is None:
         raise FileNotFoundError(f"no published snapshot at {table_path}")
-    return spark.read.parquet(os.path.join(table_path, f"v={v}"))
+    return read_parquet(spark, os.path.join(table_path, f"v={v}"))
 
 
 def snapshot_exists(table_path: str) -> bool:

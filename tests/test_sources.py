@@ -133,3 +133,154 @@ def test_events_ts_ntz_invariant_to_session_confs(spark):
     finally:
         spark.conf.set(infer_key, old_infer)
         spark.conf.set(tz_key, old_tz)
+
+
+# --------------------------------------------------------------------------
+# Schema catalog: read_table / read_parquet infer once per file set + confs
+# --------------------------------------------------------------------------
+
+_group_ids = iter(range(1_000_000))
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"catalog-{next(_group_ids)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write(path, table):
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, str(path))
+
+
+def test_read_table_second_read_runs_no_job(spark, tmp_path):
+    import pyarrow as pa
+
+    _write(tmp_path / "nation.parquet", pa.table({"n_nationkey": [1, 2], "n_name": ["a", "b"]}))
+    first, n_first = _jobs(spark, lambda: read_table(spark, str(tmp_path), "nation"))
+    second, n_second = _jobs(spark, lambda: read_table(spark, str(tmp_path), "nation"))
+    assert n_first == 1 and n_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_catalog_sees_rewritten_file(spark, tmp_path):
+    """A rewrite of the same path with another column type misses the memo,
+    whether the mtime moved or (restored by hand) only the size did."""
+    import pyarrow as pa
+
+    path = tmp_path / "t.parquet"
+    _write(path, pa.table({"a": pa.array([1, 2], pa.int64())}))
+    assert dict(read_table(spark, str(tmp_path), "t").dtypes) == {"a": "bigint"}
+
+    _write(path, pa.table({"a": ["x", "y"]}))
+    assert dict(read_table(spark, str(tmp_path), "t").dtypes) == {"a": "string"}
+
+    mtime = os.stat(path).st_mtime_ns
+    _write(path, pa.table({"a": [1.5, 2.5, 3.5]}))
+    os.utime(path, ns=(mtime, mtime))
+    df = read_table(spark, str(tmp_path), "t")
+    assert dict(df.dtypes) == {"a": "double"}
+    assert sorted(r.a for r in df.collect()) == [1.5, 2.5, 3.5]
+
+
+def test_catalog_keys_on_inference_confs(spark, tmp_path):
+    """A tz-naive timestamp is TIMESTAMP_NTZ or TIMESTAMP depending on
+    inferTimestampNTZ: a memo hit under the other setting would be stale."""
+    import datetime
+
+    import pyarrow as pa
+
+    from projet_data_infrastructure_spark.sources.readers import read_parquet
+
+    path = tmp_path / "naive.parquet"
+    _write(path, pa.table({"t": pa.array([datetime.datetime(2024, 1, 2, 3, 4, 5)], pa.timestamp("us"))}))
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert dict(read_parquet(spark, str(path)).dtypes)["t"] == "timestamp_ntz"
+        spark.conf.set(key, "false")
+        assert dict(read_parquet(spark, str(path)).dtypes)["t"] == "timestamp"
+        spark.conf.set(key, "true")
+        assert dict(read_parquet(spark, str(path)).dtypes)["t"] == "timestamp_ntz"
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_events_nanos_ts_identical_on_memo_hit(spark, tmp_path):
+    """The memo holds the raw footer schema (ts as bigint under
+    nanosAsLong), so the ns → µs normalisation runs on every read."""
+    import pyarrow as pa
+
+    ns = [1_704_067_200_123_456_789, 1_704_153_600_000_000_999, 1_709_251_199_999_999_999]
+    _write(
+        tmp_path / "events.parquet",
+        pa.table({"event_id": [1, 2, 3], "ts": pa.array(ns, pa.timestamp("ns"))}),
+    )
+    keys = (
+        "spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.session.timeZone",
+        "spark.sql.parquet.inferTimestampNTZ.enabled",
+    )
+    old = {k: spark.conf.get(k) for k in keys}
+    try:
+        micros = F.unix_micros(F.col("ts").cast("timestamp"))
+
+        def ts_micros():
+            df = read_table(spark, str(tmp_path), "events")
+            assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+            return [r.us for r in df.orderBy("event_id").select(micros.alias("us")).collect()]
+
+        assert ts_micros() == ts_micros() == [n // 1000 for n in ns]
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_schema_memo_threads_keep_bound(monkeypatch):
+    """foreachBatch callbacks run on their own threads: concurrent records
+    and lookups must neither raise nor let the memo outgrow its bound."""
+    import sys
+    import threading
+    from collections import OrderedDict
+
+    from pyspark.sql import types as T
+
+    from projet_data_infrastructure_spark.sources import readers
+
+    monkeypatch.setattr(readers, "_schemas", OrderedDict())
+    monkeypatch.setattr(readers, "SCHEMA_MEMO_SIZE", 1)
+    schema = T.StructType([T.StructField("a", T.LongType())])
+    errors = []
+
+    def work():
+        # Every thread records and looks up the same three keys, so each
+        # record evicts a key another thread may be moving to the end.
+        try:
+            for i in range(20_000):
+                readers._remember(i % 3, schema)
+                readers._lookup((i + 1) % 3)
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(readers._schemas) == 1
