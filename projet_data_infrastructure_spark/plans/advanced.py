@@ -23,8 +23,7 @@ from projet_data_infrastructure_spark.plans._portable import (
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
 from projet_data_infrastructure_spark.sources.readers import (
-    file_set,
-    read_parquet,
+    derived_lake,
     read_table,
     read_table_balanced,
 )
@@ -1721,54 +1720,25 @@ LIMIT 20
 # stream_append_sink produces (SCALE.md's partition-layout argument, proven).
 # ---------------------------------------------------------------------------
 
-_EVENTS_LAKE_CACHE: dict[str, str] = {}
-
-
-def _events_fingerprint(sf_dir: str) -> str:
-    """Cache key for the partitioned copy: absolute source path + the
-    ``file_set`` of events.parquet. Two sf_dirs sharing a leaf name get
-    different keys, and regenerating the test data in place invalidates the
-    cached copy (the old leaf-name key did neither)."""
-    import hashlib
-    import os
-
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    return hashlib.sha1(repr((src, file_set(src))).encode()).hexdigest()[:16]
-
 
 def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events re-materialized partitioned by event_date (hive layout).
 
-    This is the layout the K1 streaming sink writes at scale; reused across
-    processes since the content is a pure function of the source. The copy
-    is published ATOMICALLY: written to a pid-suffixed temp dir, then
-    renamed into the fingerprint-keyed final path — a concurrent reader sees
-    either nothing or a complete table, never a half-written one. Losing a
-    publish race is fine: the winner wrote identical content (same
-    fingerprint ⇒ same source bytes)."""
+    This is the layout the K1 streaming sink writes at scale. The content
+    is a pure function of events.parquet, so the copy is a
+    ``readers.derived_lake``: built once per source fingerprint, published
+    atomically and shared by every process."""
     import os
-    import shutil
-    import tempfile
 
-    fp = _events_fingerprint(sf_dir)
-    lake = _EVENTS_LAKE_CACHE.get(fp)
-    if lake is None:
-        lake = os.path.join(tempfile.gettempdir(), f"spark_graft_events_bydate_{fp}")
-        if not os.path.exists(os.path.join(lake, "_SUCCESS")):
-            ev = read_table(spark, sf_dir, "events").withColumn(
-                "event_date", F.to_date("ts")
-            )
-            tmp = f"{lake}.tmp-{os.getpid()}"
-            ev.write.mode("overwrite").partitionBy("event_date").parquet(tmp)
-            shutil.rmtree(lake, ignore_errors=True)  # stale partial, if any
-            try:
-                os.rename(tmp, lake)
-            except OSError:
-                # A concurrent writer published first; its content is
-                # identical by construction.
-                shutil.rmtree(tmp, ignore_errors=True)
-        _EVENTS_LAKE_CACHE[fp] = lake
-    return read_parquet(spark, lake)
+    def write(tmp: str) -> None:
+        ev = read_table(spark, sf_dir, "events").withColumn(
+            "event_date", F.to_date("ts")
+        )
+        ev.write.mode("overwrite").partitionBy("event_date").parquet(tmp)
+
+    return derived_lake(
+        spark, os.path.join(sf_dir, "events.parquet"), "events_bydate", write
+    )
 
 
 def q_events_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1799,41 +1769,28 @@ GROUP BY event_type
 """
 
 
-_EVENTS_ZORDER_CACHE: dict[str, str] = {}
-
-
 def q_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-column data skipping via Z-order layout: events rewritten
     Morton-clustered on (user_id, value) — every parquet file covers a tight
     rectangle in BOTH keys (`operators/scale.py:zorder_layout`, tightness
     asserted in tests/test_plans_quality.py), so the min/max footer stats
     prune files for this two-sided predicate. The Delta ZORDER effect with
-    plain parquet; same atomic publish + fingerprint cache discipline as
-    `partitioned_events`."""
+    plain parquet; the layout is a ``readers.derived_lake`` of events.parquet,
+    like `partitioned_events`."""
     import os
-    import shutil
-    import tempfile
 
     from projet_data_infrastructure_spark.operators.scale import zorder_layout
 
-    fp = _events_fingerprint(sf_dir)
-    lake = _EVENTS_ZORDER_CACHE.get(fp)
-    if lake is None:
-        lake = os.path.join(tempfile.gettempdir(), f"spark_graft_events_zorder_{fp}")
-        if not os.path.exists(os.path.join(lake, "_SUCCESS")):
-            ev = read_table(spark, sf_dir, "events").select(
-                "event_id", "user_id", "event_type", "value"
-            )
-            laid = zorder_layout(ev, ["user_id", "value"], n_files=8)
-            tmp = f"{lake}.tmp-{os.getpid()}"
-            laid.write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(lake, ignore_errors=True)
-            try:
-                os.rename(tmp, lake)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-        _EVENTS_ZORDER_CACHE[fp] = lake
-    ev = read_parquet(spark, lake)
+    def write(tmp: str) -> None:
+        ev = read_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        laid = zorder_layout(ev, ["user_id", "value"], n_files=8)
+        laid.write.mode("overwrite").parquet(tmp)
+
+    ev = derived_lake(
+        spark, os.path.join(sf_dir, "events.parquet"), "events_zorder", write
+    )
     sel = ev.filter(
         (F.col("user_id").between(10, 40)) & (F.col("value") >= 50.0)
     )

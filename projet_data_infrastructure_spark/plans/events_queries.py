@@ -5,7 +5,7 @@ Batch and Structured Streaming share the same DataFrame algebra, so each
 operator here is defined once and exercised two ways:
 
 * as a batch query over ``events`` with a DuckDB oracle (this file), and
-* as a real ``readStream`` run in ``streaming/`` (tests + the two
+* as a real file-source stream run in ``streaming/`` (tests + the two
   ``stream_*`` specs below, which execute an actual availableNow streaming
   query inside the driver's session and return the sink table).
 
@@ -30,6 +30,10 @@ from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
 from projet_data_infrastructure_spark.sources.readers import read_table, read_table_balanced
 from projet_data_infrastructure_spark.streaming.sinks import drain
+from projet_data_infrastructure_spark.streaming.sources import (
+    epoch_us_divisor,
+    file_replay_stream,
+)
 
 # --------------------------------------------------------------------------
 # F1/P2: JSON field extraction (get_json_object ≈ SaveDelta.scala:140-147)
@@ -339,22 +343,12 @@ _EVENTS_STREAM_SCHEMA = (
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # FileStreamSource internally sets basePath to the load path, so a
-    # single-file glob fails ("basePath must be a directory"); monitor the
-    # directory and filter to the events file instead.
-    raw = (
-        spark.readStream.schema(_EVENTS_STREAM_SCHEMA)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    raw = file_replay_stream(spark, sf_dir, _EVENTS_STREAM_SCHEMA, glob="events.parquet")
     # LTZ (plain timestamp) here: watermarks/event-time require TimestampType;
     # UTC is pinned above so epoch↔wall-clock is deterministic. Integer `div`:
     # see sources/readers.py (ns epochs exceed double precision). The divisor
     # is unit-detected from parquet metadata — the testdata has shipped ts at
     # both ns and µs across driver rounds (streaming/sources.py).
-    from projet_data_infrastructure_spark.streaming.sources import epoch_us_divisor
-
     div = epoch_us_divisor(os.path.join(sf_dir, "events.parquet"))
     return raw.withColumn("ts", F.timestamp_micros(F.expr(f"ts div {div}")))
 

@@ -11,8 +11,9 @@ from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.plans._portable import value_cents
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
+from projet_data_infrastructure_spark.session import scratch_dir
 from projet_data_infrastructure_spark.sources.readers import read_table
-from projet_data_infrastructure_spark.streaming.sinks import drain
+from projet_data_infrastructure_spark.streaming.sinks import replay_foreach_batch
 
 
 def q_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -576,7 +577,7 @@ def _cdc_envelopes(ev: DataFrame) -> DataFrame:
 
 
 def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live CDC path: envelope stream → foreachBatch(op-aware apply) → state.
+    """Live CDC path: envelope stream → op-aware apply per micro-batch → state.
 
     Builds Debezium envelopes DETERMINISTICALLY from the events table —
     op = d / u / c by event_id residue (deletes carry their image in
@@ -591,30 +592,22 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator form replayed only creates). One source file ⇒ one availableNow micro-batch, so the
     streamed apply and the one-shot oracle see the same change order.
     """
-    import tempfile
-
     from projet_data_infrastructure_spark.streaming.cdc import (
         apply_cdc_batch_ooo,
         parse_envelope,
         read_cdc_state,
     )
 
-    work = tempfile.mkdtemp(prefix="cdc_apply_")
+    work = scratch_dir("cdc_apply_")
     ev = read_table(spark, sf_dir, "events")
     src = f"{work}/envelopes"
     _cdc_envelopes(ev).select("value").coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema("value string").format("parquet").load(src)
     target = f"{work}/state"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         apply_cdc_batch_ooo(target, parse_envelope(batch_df))
 
-    drain(
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{work}/ck")
-        .trigger(availableNow=True)
-        .start()
-    )
+    replay_foreach_batch(spark, src, "value string", handle, work)
     return read_cdc_state(spark, target)
 
 
@@ -637,15 +630,13 @@ def q_stream_cdc_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     state must not depend on delivery order). Hash-checked LIVE like the
     other stream/batch parity pairs.
     """
-    import tempfile
-
     from projet_data_infrastructure_spark.streaming.cdc import (
         apply_cdc_batch_ooo,
         parse_envelope,
         read_cdc_state,
     )
 
-    work = tempfile.mkdtemp(prefix="cdc_ooo_")
+    work = scratch_dir("cdc_ooo_")
     ev = read_table(spark, sf_dir, "events")
     # r14 (guide §2.4/§1.2): each slice write below is coalesce(1), which
     # collapses its WHOLE upstream into one task — so the envelope
@@ -663,22 +654,13 @@ def q_stream_cdc_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
         env.filter(F.col("b") == b).select("value").coalesce(1).write.mode(
             "append"
         ).parquet(src)
-    stream = (
-        spark.readStream.schema("value string")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
     target = f"{work}/state"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         apply_cdc_batch_ooo(target, parse_envelope(batch_df))
 
-    drain(
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{work}/ck")
-        .trigger(availableNow=True)
-        .start()
+    replay_foreach_batch(
+        spark, src, "value string", handle, work, max_files_per_trigger=1
     )
     return read_cdc_state(spark, target)
 
@@ -745,36 +727,28 @@ FROM events
 
 def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE incremental dedup: the documents corpus replayed as a file
-    stream through ``foreachBatch(apply_signature_dedup_batch)`` — each
+    stream, ``apply_signature_dedup_batch`` run on each micro-batch — each
     batch MinHash-signs its docs, anti-joins the persisted signature
     store, and appends only first-seen signatures. Final state = one
     winning doc per distinct signature, which for a single availableNow
     batch is exactly min(doc_id) per signature → hash-checked in DuckDB
     over the same signature SQL. Cross-batch first-arrival-wins ordering
     is pinned separately in tests with two controlled batches."""
-    import tempfile
-
     from projet_data_infrastructure_spark.operators.dedup import (
         apply_signature_dedup_batch,
     )
     from projet_data_infrastructure_spark.streaming.versioned import read_snapshot
 
-    work = tempfile.mkdtemp(prefix="stream_mhdedup_")
+    work = scratch_dir("stream_mhdedup_")
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     src = f"{work}/docs"
     docs.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(docs.schema).format("parquet").load(src)
     target = f"{work}/state"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         apply_signature_dedup_batch(target, batch_df)
 
-    drain(
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{work}/ck")
-        .trigger(availableNow=True)
-        .start()
-    )
+    replay_foreach_batch(spark, src, docs.schema, handle, work)
     return read_snapshot(spark, target).select("doc_id", "sig")
 
 
@@ -847,13 +821,11 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = _DERBY_CACHE.get(sf_dir)
     if db is None:
         import os
-        import tempfile
 
         # Per-process dir (embedded Derby holds a JVM lock; cross-process
         # reuse risks stale db.lck) but ONE per sf_dir per process.
         db = os.path.join(
-            tempfile.mkdtemp(prefix=f"derby_{os.path.basename(sf_dir.rstrip('/'))}_"),
-            "db",
+            scratch_dir(f"derby_{os.path.basename(sf_dir.rstrip('/'))}_"), "db"
         )
         cust = read_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_name", "c_acctbal", "c_nationkey"
@@ -908,9 +880,8 @@ def q_csv_dim_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _CSV_DIM_CACHE.get(sf_dir)
     if path is None:
         import os
-        import tempfile
 
-        path = os.path.join(tempfile.mkdtemp(prefix="dim_csv_"), "hr.csv")
+        path = os.path.join(scratch_dir("dim_csv_"), "hr.csv")
         dim = read_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_name", "c_acctbal"
         )
@@ -940,11 +911,10 @@ def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Existence is checked against the session CATALOG, not a module cache —
     the driver builds its own session, where a fresh write is needed even if
     this process wrote the tables before under another session. Data lives
-    under a pid-scoped temp dir so concurrent driver processes never race on
-    the same files."""
+    under the process's scratch root so concurrent driver processes never
+    race on the same files."""
     import os
     import re
-    import tempfile
 
     from projet_data_infrastructure_spark.operators.scale import write_bucketed
 
@@ -952,7 +922,7 @@ def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     orders_tbl = f"graft_bucketed_orders_{tag}"
     li_tbl = f"graft_bucketed_lineitem_{tag}"
     if not (spark.catalog.tableExists(orders_tbl) and spark.catalog.tableExists(li_tbl)):
-        base = tempfile.mkdtemp(prefix=f"bucketed_{tag}_")
+        base = scratch_dir(f"bucketed_{tag}_")
         orders = read_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
         )
@@ -1130,7 +1100,6 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     pointer flip), so a concurrent reader sees a complete version or the
     prior one, never a mix."""
     import os
-    import tempfile
 
     from projet_data_infrastructure_spark.streaming.versioned import (
         read_snapshot,
@@ -1140,7 +1109,7 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="timetravel_"), "t")
+    path = os.path.join(scratch_dir("timetravel_"), "t")
     v1 = write_snapshot(base.filter(F.col("c_nationkey") < 5), path)
     write_snapshot(base, path)
     return read_snapshot(spark, path, version=v1)
@@ -1195,7 +1164,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing for the untouched 5-14 band. Oracle = the classification
     recomputed relationally from the base table."""
     import os
-    import tempfile
 
     from projet_data_infrastructure_spark.streaming.versioned import (
         snapshot_diff,
@@ -1205,7 +1173,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="cdfdiff_"), "t")
+    path = os.path.join(scratch_dir("cdfdiff_"), "t")
     v1 = write_snapshot(base.filter(F.col("c_nationkey") < 15), path)
     v2_df = base.filter(F.col("c_nationkey") != 7).withColumn(
         "c_acctbal",

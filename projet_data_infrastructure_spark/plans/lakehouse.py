@@ -41,9 +41,10 @@ from projet_data_infrastructure_spark.functions.hashing import (
 )
 from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
+from projet_data_infrastructure_spark.session import scratch_dir
 from projet_data_infrastructure_spark.sources.readers import read_table
 from projet_data_infrastructure_spark.streaming import versioned
-from projet_data_infrastructure_spark.streaming.sinks import drain
+from projet_data_infrastructure_spark.streaming.sinks import replay_foreach_batch
 
 # --------------------------------------------------------------------------
 # SCD Type-2 dimension history from a change stream
@@ -583,10 +584,8 @@ def q_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     logic coalesces a default. Parquet-native (Delta's schema evolution is
     this plus a transaction log); the oracle recomputes the unified view
     relationally."""
-    import tempfile
-
     cust = read_table(spark, sf_dir, "customer")
-    work = tempfile.mkdtemp(prefix="schema_evo_")
+    work = scratch_dir("schema_evo_")
     g1 = cust.filter(F.col("c_custkey") % 2 == 0).select("c_custkey", "c_name")
     g2 = cust.filter(F.col("c_custkey") % 2 == 1).select(
         "c_custkey", "c_name", F.col("c_acctbal").alias("c_acctbal")
@@ -719,18 +718,10 @@ def q_stream_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is ≤ 64·|event types| rows (p=6 registers), published atomically
     through the versioned snapshot store; at scale the store becomes a
     Delta table and the merge stays ``union → groupBy max``."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="stream_hll_")
+    work = scratch_dir("stream_hll_")
     ev = read_table(spark, sf_dir, "events").select("event_id", "event_type")
     src = f"{work}/events"
     ev.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
     target = f"{work}/state"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -738,12 +729,7 @@ def q_stream_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per task before the max ships.
         versioned.fold_snapshot(_hll_rows(batch_df), target, _hll_reduce)
 
-    drain(
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{work}/ck")
-        .trigger(availableNow=True)
-        .start()
-    )
+    replay_foreach_batch(spark, src, ev.schema, handle, work, max_files_per_trigger=1)
     exact = ev.groupBy("event_type").agg(
         F.count_distinct(F.col("event_id")).alias("n_exact")
     )

@@ -2597,7 +2597,6 @@ ORDER BY source, stage
 
 
 _MMR_K = 8
-_MMR_TOPN = 3
 
 
 def q_mmr_diverse_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3399,14 +3398,13 @@ def q_stream_quality_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     store, and the store holds one 32-char digest per unique kept doc."""
     from projet_data_infrastructure_spark.operators.text import gopher_keep, gopher_metrics
     from projet_data_infrastructure_spark.plans.events_queries import _run_stream
+    from projet_data_infrastructure_spark.streaming.sources import file_replay_stream
 
-    raw = (
-        spark.readStream.schema(
-            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-        )
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
+    raw = file_replay_stream(
+        spark,
+        sf_dir,
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+        glob="documents.parquet",
     )
     m = gopher_metrics(tokens(F.col("text")))
     kept = raw.filter(gopher_keep(m)).select(F.md5("text").alias("digest"))

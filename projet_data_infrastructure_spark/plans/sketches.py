@@ -38,9 +38,10 @@ from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 
 from projet_data_infrastructure_spark.functions.hashing import HEX_PREFIX_LEN
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
+from projet_data_infrastructure_spark.session import scratch_dir
 from projet_data_infrastructure_spark.sources.readers import read_table
 from projet_data_infrastructure_spark.streaming import versioned
-from projet_data_infrastructure_spark.streaming.sinks import drain
+from projet_data_infrastructure_spark.streaming.sinks import replay_foreach_batch
 
 # --------------------------------------------------------------------------
 # seeded portable hash where the seed is a COLUMN (the per-row sketch seeds
@@ -163,18 +164,10 @@ def q_stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is ≤ d·w = 1024 rows, published atomically through the
     versioned snapshot store; at scale the store becomes a Delta table and
     the merge stays ``union → groupBy sum``."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="stream_cms_")
+    work = scratch_dir("stream_cms_")
     ev = read_table(spark, sf_dir, "events").select("user_id")
     src = f"{work}/events"
     ev.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src)
-    )
     target = f"{work}/state"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -182,12 +175,7 @@ def q_stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per task before the sum ships.
         versioned.fold_snapshot(_cms_updates(batch_df), target, _cms_reduce)
 
-    drain(
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", f"{work}/ck")
-        .trigger(availableNow=True)
-        .start()
-    )
+    replay_foreach_batch(spark, src, ev.schema, handle, work, max_files_per_trigger=1)
     return _cms_probe(versioned.read_snapshot(spark, target), ev)
 
 

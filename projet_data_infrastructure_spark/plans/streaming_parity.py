@@ -19,12 +19,13 @@ from pyspark.sql import functions as F
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
 from projet_data_infrastructure_spark.plans._portable import value_cents
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
+from projet_data_infrastructure_spark.session import scratch_dir
 from projet_data_infrastructure_spark.sources.readers import (
     read_parquet,
     read_table,
     read_table_balanced,
 )
-from projet_data_infrastructure_spark.streaming.sinks import drain
+from projet_data_infrastructure_spark.streaming.sinks import replay_foreach_batch
 
 SPECS: list[QuerySpec] = []
 
@@ -147,9 +148,10 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     core is shared with the batch spec via
     ``corpus_lm.minhash_band_rows`` / ``jaccard_best_match``); state
     growth is the result store only. Batch-split invariance is pinned in
-    tests with a forced two-batch replay."""
-    import tempfile
-
+    tests with a forced two-batch replay. The result is the lazy read of
+    the store, like the other replayed streams: its files live in the
+    process scratch root (``session.scratch_dir``) until the process
+    exits."""
     from projet_data_infrastructure_spark.plans.corpus_lm import (
         doc_token_sets,
         index_tokens_and_bands,
@@ -168,48 +170,31 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # median position-matched).
     idx_toks, idx_bands = index_tokens_and_bands(index_docs)
 
-    import shutil
+    work = scratch_dir("stream_incrdedup_")
+    src = f"{work}/new_docs"
+    new_docs.coalesce(1).write.parquet(src)
+    out_dir = f"{work}/matches"
 
-    work = tempfile.mkdtemp(prefix="stream_incrdedup_")
-    try:
-        src = f"{work}/new_docs"
-        new_docs.coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(new_docs.schema).format("parquet").load(src)
-        out_dir = f"{work}/matches"
-
-        def handle(batch_df: DataFrame, batch_id: int) -> None:
-            batch_bands = minhash_band_rows(batch_df).select(
-                F.col("doc_id").alias("new_doc"), "band", "key"
-            )
-            cand = (
-                batch_bands.join(idx_bands, ["band", "key"])
-                .select("new_doc", "index_doc")
-                .distinct()
-            )
-            result = jaccard_best_match(cand, doc_token_sets(batch_df), idx_toks)
-            # foreachBatch is at-least-once: a replayed batch OVERWRITES its
-            # own batch_id-keyed partition, so redelivery is idempotent (the
-            # standard foreachBatch discipline; ADVICE r9) instead of
-            # appending duplicate rows to the store.
-            result.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-        drain(
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        batch_bands = minhash_band_rows(batch_df).select(
+            F.col("doc_id").alias("new_doc"), "band", "key"
         )
-        # Partition discovery surfaces the batch_id path key as a column;
-        # drop it — the accumulated store equals the batch spec's output.
-        # Materialize before the finally-cleanup deletes the backing files.
-        return (
-            read_parquet(spark, out_dir)
-            .drop("batch_id")
-            .orderBy("new_doc")
-            .localCheckpoint(eager=True)
+        cand = (
+            batch_bands.join(idx_bands, ["band", "key"])
+            .select("new_doc", "index_doc")
+            .distinct()
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        result = jaccard_best_match(cand, doc_token_sets(batch_df), idx_toks)
+        # foreachBatch is at-least-once: a replayed batch OVERWRITES its
+        # own batch_id-keyed partition, so redelivery is idempotent (the
+        # standard foreachBatch discipline; ADVICE r9) instead of
+        # appending duplicate rows to the store.
+        result.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+
+    replay_foreach_batch(spark, src, new_docs.schema, handle, work)
+    # Partition discovery surfaces the batch_id path key as a column; drop
+    # it — the accumulated store equals the batch spec's output.
+    return read_parquet(spark, out_dir).drop("batch_id")
 
 
 # --------------------------------------------------------------------------

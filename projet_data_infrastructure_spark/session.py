@@ -15,11 +15,19 @@ opinionated factory tuned for scale:
   coalescing from a high initial number).
 * Delta Lake extensions are applied only when the `delta-spark` package is
   importable (it is not in the test container); all sinks degrade to parquet.
+
+Files a query writes only to read them back (stream sources, checkpoints,
+fold state, fixture copies) live in :func:`scratch_dir`, under one root per
+process that is removed when the process exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -34,6 +42,37 @@ except ImportError:  # pragma: no cover
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+_scratch_lock = threading.Lock()
+#: (owner pid, root) of this process's scratch root, made on first use.
+_scratch_root: tuple[int, str] | None = None
+
+
+def _remove_scratch(owner: int, root: str) -> None:
+    # A forked child inherits this handler; only the creator removes the root.
+    if os.getpid() == owner:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for files a query writes before it reads them.
+
+    Every such directory sits under one per-process root,
+    ``spark_graft_scratch_<pid>_*`` in the temp dir, which an ``atexit``
+    handler removes: the files last as long as the process that may still
+    read them (a returned lazy frame, a module cache), and no longer. A
+    forked child makes its own root on first use and never removes its
+    parent's."""
+    global _scratch_root
+    pid = os.getpid()
+    with _scratch_lock:
+        if _scratch_root is None or _scratch_root[0] != pid:
+            root = tempfile.mkdtemp(prefix=f"spark_graft_scratch_{pid}_")
+            atexit.register(_remove_scratch, pid, root)
+            _scratch_root = (pid, root)
+        root = _scratch_root[1]
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
 def get_spark(

@@ -25,13 +25,21 @@ value of every conf that changes the inferred type, so a rewritten file, a
 changed listing or a session with other confs re-infers. Writers that know
 what they wrote (``streaming/versioned.write_snapshot``) record it with
 :func:`record_schema`, so even the first read of a fresh snapshot is free.
+
+A table derived from a source file by a pure function (a re-layout of
+``events``) is built once per source fingerprint and shared across
+processes by :func:`derived_lake`.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
 import threading
 from collections import OrderedDict
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -133,6 +141,31 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         _inferences += 1
     _remember(key, df.schema)
     return df
+
+
+def derived_lake(
+    spark: SparkSession, src: str, name: str, write: Callable[[str], None]
+) -> DataFrame:
+    """Read the lake ``write(tmp_path)`` derives from the parquet source
+    ``src``, building it first if no process has published it yet.
+
+    The lake is ``spark_graft_<name>_<fp>`` in the temp dir, ``fp`` hashing
+    the absolute source path and its :func:`file_set`. ``write`` runs into a
+    pid-suffixed temp dir that one ``os.rename`` publishes, so a reader sees
+    a complete lake or none. A publish that loses the race discards only its
+    own temp dir: the winner's copy has the same content and may be in use,
+    so a published lake is never removed."""
+    src = os.path.abspath(src)
+    fp = hashlib.sha1(repr((src, file_set(src))).encode()).hexdigest()[:16]
+    lake = os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_{fp}")
+    if not os.path.exists(os.path.join(lake, "_SUCCESS")):
+        tmp = f"{lake}.tmp-{os.getpid()}"
+        write(tmp)
+        try:
+            os.rename(tmp, lake)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return read_parquet(spark, lake)
 
 
 def _nullable(t: T.DataType) -> T.DataType:

@@ -12,13 +12,16 @@ overwrite where possible instead of full truncation.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from projet_data_infrastructure_spark.session import HAVE_DELTA
+from projet_data_infrastructure_spark.streaming.sources import file_replay_stream
 
 LAKE_FORMAT = "delta" if HAVE_DELTA else "parquet"
 
@@ -39,6 +42,29 @@ def drain(query: StreamingQuery) -> None:
     if not done:
         name = query.name or query.id
         raise TimeoutError(f"stream {name} did not drain in {DRAIN_TIMEOUT_S} s")
+
+
+def replay_foreach_batch(
+    spark: SparkSession,
+    src: str,
+    schema: str | T.StructType,
+    handle: Callable[[DataFrame, int], None],
+    work: str,
+    max_files_per_trigger: int | None = None,
+) -> None:
+    """Replay the parquet directory ``src`` as a stream, run
+    ``handle(batch_df, batch_id)`` on each micro-batch under availableNow and
+    :func:`drain` it. The checkpoint lives in ``work``, the caller's scratch
+    directory, so it goes when the source and the state do."""
+    stream = file_replay_stream(
+        spark, src, schema, max_files_per_trigger=max_files_per_trigger
+    )
+    drain(
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", os.path.join(work, "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_append_sink(

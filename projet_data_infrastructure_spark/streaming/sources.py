@@ -6,12 +6,13 @@
 * Rate source fallback (S2, ``SaveDelta.scala:123-127``): built-in, used in
   tests exactly as the reference used it when Kafka was unreachable.
 * File replay source: replays a parquet table as a stream for deterministic
-  end-to-end tests (the driver star schema's ``events``).
+  end-to-end runs (the driver star schema's ``events``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def kafka_stream(
@@ -86,11 +87,19 @@ def epoch_us_divisor(parquet_path: str, ts_field: str = "ts") -> int:
 def file_replay_stream(
     spark: SparkSession,
     directory: str,
-    schema: str,
+    schema: str | T.StructType,
     glob: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Replay parquet files as a stream (deterministic test source)."""
+    """Replay the parquet files under ``directory`` as a stream: the one file
+    source of the package (the ``stream_*`` specs, via
+    ``sinks.replay_foreach_batch`` or a memory sink, and the tests).
+
+    ``glob`` keeps only the file names it matches: the file source takes the
+    load path as its base path, so a single file fails ("basePath must be a
+    directory") and is read as its directory plus a glob.
+    ``max_files_per_trigger`` makes each file its own micro-batch under
+    availableNow."""
     reader = spark.readStream.schema(schema).format("parquet")
     if glob:
         reader = reader.option("pathGlobFilter", glob)

@@ -24,7 +24,7 @@ _THREE = ("view", "click", "purchase")
 _TWO = ("view", "purchase")
 
 
-def _run_funnel(spark, rows, steps):
+def _run_funnel(spark, rows, steps, work):
     from projet_data_infrastructure_spark.streaming.stateful import funnel_state
 
     src = spark.createDataFrame(
@@ -32,9 +32,6 @@ def _run_funnel(spark, rows, steps):
     )
     # availableNow single-batch replay through a memory stream is overkill
     # for a unit test; drive the update function through a one-batch stream.
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="funnel_unit_")
     src.coalesce(1).write.parquet(f"{work}/in")
     stream = spark.readStream.schema(src.schema).format("parquet").load(f"{work}/in")
     drain(
@@ -62,7 +59,7 @@ def _run_funnel(spark, rows, steps):
     ],
     ids=["three_step", "two_step"],
 )
-def test_funnel_strict_sequencing(spark, steps, expected):
+def test_funnel_strict_sequencing(spark, steps, expected, tmp_path):
     out = _run_funnel(
         spark,
         [
@@ -90,24 +87,24 @@ def test_funnel_strict_sequencing(spark, steps, expected):
             (5, 10, "click"),
         ],
         steps,
+        str(tmp_path),
     )
     assert out == expected
 
 
-def test_funnel_state_carries_across_batches(spark):
+def test_funnel_state_carries_across_batches(spark, tmp_path):
     # The per-step timestamps must survive a state round-trip: view, click
     # and purchase arrive in three availableNow runs over one checkpoint,
     # and each run sees only its own event — the click and the purchase can
     # qualify only through the restored earlier steps.
     import os
-    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from projet_data_infrastructure_spark.streaming.stateful import funnel_state
 
-    base = tempfile.mkdtemp(prefix="funnelstate_")
+    base = str(tmp_path)
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(src)
@@ -157,12 +154,10 @@ def test_stream_funnel3_equals_batch(spark):
 # ------------------------------------- streaming incremental dedup
 
 
-def test_stream_incremental_dedup_batch_split_invariant(spark, monkeypatch):
+def test_stream_incremental_dedup_batch_split_invariant(spark, monkeypatch, tmp_path):
     # The accumulated foreachBatch result must not depend on HOW the new
     # docs are split into micro-batches: force a multi-file source with
     # maxFilesPerTrigger=1 and compare against the batch spec.
-    import tempfile
-
     import projet_data_infrastructure_spark.plans.corpus_lm as r8
 
     batch = {
@@ -185,7 +180,7 @@ def test_stream_incremental_dedup_batch_split_invariant(spark, monkeypatch):
     ).localCheckpoint(eager=True)
     idx_toks = doc_token_sets(index_docs).localCheckpoint(eager=True)
 
-    work = tempfile.mkdtemp(prefix="incrdedup_split_")
+    work = str(tmp_path)
     src = f"{work}/new_docs"
     # two files -> two micro-batches under maxFilesPerTrigger=1
     new_docs.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(

@@ -85,20 +85,19 @@ def test_transform_with_state_matches_legacy_api(spark, tmp_path):
     assert last[3] == (1, 7.0)
 
 
-def test_pit_regimes_state_carries_across_batches(spark):
+def test_pit_regimes_state_carries_across_batches(spark, tmp_path):
     # The carry-forward must survive a state round-trip: feed batch 1 with a
     # state event only, batch 2 with a purchase only — the purchase must be
     # attributed to batch 1's regime. Exercised via two availableNow runs
     # over the same checkpoint (state persisted between runs).
     import os
-    import tempfile
     from datetime import datetime
 
     from pyspark.sql import functions as F
 
     from projet_data_infrastructure_spark.streaming.stateful import pit_regimes
 
-    base = tempfile.mkdtemp(prefix="pitstate_")
+    base = str(tmp_path)
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(src)
