@@ -26,6 +26,7 @@ Every tool that times specs uses this module's protocol: ``warm_up``,
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import statistics
@@ -121,12 +122,30 @@ def _release_cached_blocks(spark) -> None:
         pass  # py4j view quirks must never abort a bench run
 
 
-def timed_run(spark, spec, sf_dir: str) -> float:
-    """Build ``spec`` and execute it through the noop sink; return the
-    build + execution seconds. The cache release that follows is untimed."""
-    t0 = time.perf_counter()
-    spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    sec = time.perf_counter() - t0
+_run_ids = itertools.count()
+
+
+def timed_run(spark, spec, sf_dir: str, jobs: list[int] | None = None) -> float:
+    """Build ``spec`` and execute it through the noop sink under a job group
+    of its own (``bench:<spec>:<n>``); return the build + execution seconds.
+
+    With ``jobs``, the number of Spark jobs the run started is appended to
+    it: builder and execution jobs of the calling thread. Streaming
+    micro-batches run under their query's own group and are not counted.
+    The count and the cache release that follow are untimed."""
+    sc = spark.sparkContext
+    group = f"bench:{spec.name}:{next(_run_ids)}"
+    sc.setJobGroup(group, spec.name)
+    try:
+        t0 = time.perf_counter()
+        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        sec = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    if jobs is not None:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     _release_cached_blocks(spark)
     return sec
 
@@ -239,9 +258,12 @@ def main() -> None:
     warm_up(spark, sf_dir)
     inferred_warm = schema_inferences()
     samples: dict[str, list[float]] = {s.name: [] for s in specs}
+    job_counts: dict[str, list[int]] = {s.name: [] for s in specs}
     for _ in range(REPS):
         for spec in specs:
-            samples[spec.name].append(timed_run(spark, spec, sf_dir))
+            samples[spec.name].append(
+                timed_run(spark, spec, sf_dir, job_counts[spec.name])
+            )
 
     timings = {name: round(statistics.median(ts), 3) for name, ts in samples.items()}
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -270,7 +292,9 @@ def main() -> None:
         ]
         for _ in range(REPS):
             for spec in suspects:
-                samples[spec.name].append(timed_run(spark, spec, sf_dir))
+                samples[spec.name].append(
+                    timed_run(spark, spec, sf_dir, job_counts[spec.name])
+                )
         for spec in suspects:
             timings[spec.name] = round(statistics.median(samples[spec.name]), 3)
             requeried.append(spec.name)
@@ -285,6 +309,9 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        # Spark jobs per timed run (low median over its runs): at these
+        # scale factors a query's cost is mostly fixed per-job cost.
+        "jobs": {name: statistics.median_low(c) for name, c in job_counts.items()},
         "reps": REPS,
         "sf": sf_val,
         # Machine-load fingerprint: a fixed single-thread CPU loop timed

@@ -21,6 +21,9 @@ but every per-task working set stays bounded:
 ``global rank = per-bucket row_number + prefix offset(bucket)``; ``ntile``
 is then a pure integer formula of (rank, N, n) — no window at all.
 
+The one deliberate single-task order is :func:`bounded_order`, the final
+ORDER BY of a result that is small by construction.
+
 Correctness requires a TOTAL order: callers must pass tie-break columns
 that make (key, *ties) unique, exactly as they would for a deterministic
 SQL ``ntile``. The key must be numeric and non-null (nulls would sort
@@ -100,6 +103,36 @@ def global_rank(
         .drop(_PID, _KEY, _RN)
     )
     return ranked, n_total
+
+
+def bounded_order(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """``df.orderBy(*cols)`` for a frame that is bounded BY CONSTRUCTION,
+    sorted in one task.
+
+    ``orderBy`` plans ``Exchange rangepartitioning``: one job samples the
+    input (re-running the stage below the sort), one writes the shuffle and
+    one sorts — three jobs even for a 6-row result. Here the rows funnel
+    into one partition and sort there: no sampling job, no range shuffle.
+
+    Contract: the row count of ``df`` has a bound fixed by the query, not
+    by the data volume —
+
+    * a group-by over a fixed domain (return flag × line status, nations,
+      languages, sources, event types, weekdays, bins of a bounded value,
+      a constant shard/cluster/phase count);
+    * a per-group top-k with a constant k over such groups;
+    * k·|Q| rows for a constant query set Q.
+
+    ``coalesce(1)`` runs the WHOLE stage above the last shuffle in the one
+    task, which is right when that stage only finishes an aggregate or a
+    bounded top-k. When it does per-row work over unbounded input (a scan,
+    a row UDF, a window over every row), call ``repartition(1)`` first so
+    that stage keeps its parallelism. Per-user, per-document, pair and
+    cluster outputs grow with the data and keep ``orderBy``
+    (``tests/test_plans_quality.py`` pins a sample of them); an
+    ``orderBy(...).limit(k)`` already plans ``TakeOrderedAndProject``.
+    """
+    return df.coalesce(1).sortWithinPartitions(*cols)
 
 
 def ntile_from_rank(rank: Column, n: int, n_total: int) -> Column:

@@ -29,6 +29,7 @@ from operator import add
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.plans._portable import _EPS, fdiv, pround
 
 
@@ -617,7 +618,10 @@ def ivf_topk_batch(
     * per-query top-k: rank window over ``query_id`` — Spark plans the
       rank-≤-k filter as Partial+Final **WindowGroupLimit**, so every task
       keeps only k rows per query before the one bounded exchange
-      (O(k·|Q|·tasks) rows), never the candidate set.
+      (O(k·|Q|·tasks) rows), never the candidate set;
+    * final order: the k·|Q| result rows sort in the one task that applies
+      the final limit (``ranks.bounded_order``) — no range-partition
+      sampling job re-running the join stage, no second exchange.
 
     Since assignment gives each corpus vector exactly one bucket, a
     candidate reaches a query at most once — no dedup needed even when the
@@ -651,11 +655,12 @@ def ivf_topk_batch(
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc(id_col))
-    return (
+    return bounded_order(
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col(id_col), "sim")
-        .orderBy("query_id", "rank")
+        .select("query_id", "rank", F.col(id_col), "sim"),
+        "query_id",
+        "rank",
     )
 
 

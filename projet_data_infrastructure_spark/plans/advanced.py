@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from projet_data_infrastructure_spark.operators.asof import asof_join, carry_forward
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.plans._portable import (
     pround,
     pround_sql,
@@ -550,9 +551,11 @@ def q_interevent_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower = F.when(F.col("bucket") == 0, F.lit(0)).otherwise(
         F.expr("shiftleft(CAST(1 AS BIGINT), bucket - 1)")
     )
-    return hist.select(
-        "bucket", lower.cast("long").alias("lower_bound_s"), "n_gaps"
-    ).orderBy("bucket")
+    # ≤ 64 buckets (bit length of a BIGINT gap).
+    return bounded_order(
+        hist.select("bucket", lower.cast("long").alias("lower_bound_s"), "n_gaps"),
+        "bucket",
+    )
 
 
 _GAP_HIST_SQL = """
@@ -1089,10 +1092,14 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), "c_nationkey")
         .filter(F.col("supp_nation") != F.col("cust_nation"))
     )
-    return (
-        j.groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(pround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
+    # ≤ 25·24 nation pairs × 7 ship years.
+    return bounded_order(
+        j.groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")).agg(
+            pround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
+        ),
+        "supp_nation",
+        "cust_nation",
+        "l_year",
     )
 
 
@@ -1122,13 +1129,12 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
     urgent = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        j.groupBy(late.alias("is_late"))
-        .agg(
+    return bounded_order(
+        j.groupBy(late.alias("is_late")).agg(
             F.sum(F.when(urgent, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~urgent, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("is_late")
+        ),
+        "is_late",
     )
 
 
@@ -1188,9 +1194,10 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey"), "o_orderpriority")
         .distinct()
     )
-    return late_orders.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("order_count")
-    ).orderBy("o_orderpriority")
+    return bounded_order(
+        late_orders.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("order_count")),
+        "o_orderpriority",
+    )
 
 
 _TPCH_Q4_SQL = """
@@ -1227,10 +1234,10 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Width-bucket histogram of account balances (portable manual binning)."""
     cust = read_table(spark, sf_dir, "customer")
     bucket = F.floor((F.col("c_acctbal") - F.lit(-1000.0)) / F.lit(1000.0)).cast("int")
-    return (
-        cust.groupBy(bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("bucket")
+    # ≤ 11 buckets: TPC-H c_acctbal lies in [-999.99, 9999.99].
+    return bounded_order(
+        cust.groupBy(bucket.alias("bucket")).agg(F.count(F.lit(1)).alias("n_customers")),
+        "bucket",
     )
 
 
@@ -1512,13 +1519,12 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("c_custkey")
     )
     inactive = wealthy.join(urgent, "c_custkey", "left_anti")
-    return (
-        inactive.groupBy("c_nationkey")
-        .agg(
+    return bounded_order(
+        inactive.groupBy("c_nationkey").agg(
             F.count(F.lit(1)).alias("numcust"),
             pround(F.sum("c_acctbal"), 2).alias("totacctbal"),
-        )
-        .orderBy("c_nationkey")
+        ),
+        "c_nationkey",
     )
 
 
@@ -1572,16 +1578,15 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), "s_nationkey")
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        j.groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
+    return bounded_order(
+        j.groupBy(F.year("o_orderdate").alias("o_year")).agg(
             pround(
                 F.sum(F.when(F.col("supp_nation") == "NATION_2", vol).otherwise(0.0))
                 / F.sum(vol),
                 6,
             ).alias("mkt_share")
-        )
-        .orderBy("o_year")
+        ),
+        "o_year",
     )
 
 
@@ -2205,15 +2210,15 @@ def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer")
     cents = F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long")
     base = cust.select(F.col("c_custkey"), cents.alias("cents"))
-    return (
+    return bounded_order(
         exact_ntile(base, 10, "cents", ties=["c_custkey"], bucket_col="bucket")
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.min("cents").alias("lo_cents"),
             F.max("cents").alias("hi_cents"),
-        )
-        .orderBy("bucket")
+        ),
+        "bucket",
     )
 
 
@@ -2262,17 +2267,16 @@ def q_revenue_decile_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole plan free of single-partition exchanges (the exact_ntile input
     # frame is persisted, so both branches reuse one computation).
     total = by_decile.agg(F.sum("decile_cents").alias("_total"))
-    return (
-        by_decile.crossJoin(F.broadcast(total))
-        .select(
+    return bounded_order(
+        by_decile.crossJoin(F.broadcast(total)).select(
             "decile",
             "n_users",
             "decile_cents",
             pround(
                 F.col("decile_cents") / F.col("_total").cast("double"), 6
             ).alias("rev_share"),
-        )
-        .orderBy("decile")
+        ),
+        "decile",
     )
 
 

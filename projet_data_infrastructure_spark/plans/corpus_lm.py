@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
 from projet_data_infrastructure_spark.operators.joins import vertex_side
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.operators.text import bpe_ish_tokens, tokens
 from projet_data_infrastructure_spark.plans._portable import (
     fdiv as _fdiv,
@@ -70,11 +71,11 @@ def q_doc_keywords_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wd = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("token"))
-    return (
+    return bounded_order(
         scored.withColumn("rnk", F.row_number().over(wd))
         .filter(F.col("rnk") <= _KW_TOP)
-        .select("doc_id", "token", "score", F.col("rnk").cast("int").alias("rnk"))
-        .orderBy("doc_id", "rnk")
+        .select("doc_id", "token", "score", F.col("rnk").cast("int").alias("rnk")),
+        "doc_id", "rnk",
     )
 
 
@@ -591,7 +592,7 @@ def q_temperature_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFram
             " (acc, r) -> acc + CAST(r.lang_tokens AS DOUBLE))"
         ).alias("s_raw"),
     )
-    return (
+    return bounded_order(
         tl.crossJoin(F.broadcast(folded))
         .select(
             "lang",
@@ -602,8 +603,8 @@ def q_temperature_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFram
             pround(
                 F.sqrt(F.col("lang_tokens").cast("double")) / F.col("s_sqrt"), 6
             ).alias("temp_share_r"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -744,7 +745,7 @@ def q_epoch_shuffle_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tokens(F.col("text"))).cast("long").alias("n_tok"),
         hash64(F.col("doc_id"), seed=_SHUFFLE_SEED).alias("pos_key"),
     )
-    return (
+    return bounded_order(
         keyed.withColumn("shard", F.pmod(F.col("pos_key"), F.lit(_SHUFFLE_SHARDS)))
         .groupBy("shard")
         .agg(
@@ -753,8 +754,8 @@ def q_epoch_shuffle_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("doc_id").alias("id_checksum"),
             F.min("pos_key").alias("min_key"),
             F.max("pos_key").alias("max_key"),
-        )
-        .orderBy("shard")
+        ),
+        "shard",
     )
 
 
@@ -959,7 +960,7 @@ def q_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame
         F.size(bpe_ish_tokens(F.col("text"))).cast("long").alias("n_sub"),
         F.octet_length("text").cast("long").alias("n_bytes"),
     )
-    return (
+    return bounded_order(
         per_doc.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -977,8 +978,8 @@ def q_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame
             F.expr("(1000000 * n_bytes) DIV n_subwords").alias(
                 "bytes_per_subword_micro"
             ),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -1192,7 +1193,7 @@ def q_curriculum_length_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tokens(F.col("text"))).cast("long").alias("n_tok"),
     )
     ranked, n_total = global_rank(docs, "len", ties=("doc_id",))
-    return (
+    return bounded_order(
         ranked.withColumn(
             "phase",
             F.expr(f"((rank - 1) * {_CURRICULUM_PHASES}) DIV {n_total}"),
@@ -1203,8 +1204,8 @@ def q_curriculum_length_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("n_tokens"),
             F.min("len").alias("min_chars"),
             F.max("len").alias("max_chars"),
-        )
-        .orderBy("phase")
+        ),
+        "phase",
     )
 
 
@@ -1251,7 +1252,7 @@ def q_oov_rate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_OOV_VOCAB)
         .select("w", F.lit(1).alias("in_vocab"))
     )
-    return (
+    return bounded_order(
         tok.join(F.broadcast(vocab), "w", "left_outer")
         .groupBy("lang")
         .agg(
@@ -1260,8 +1261,8 @@ def q_oov_rate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("in_vocab").isNull(), 1).otherwise(0).cast("long")
             ).alias("n_oov"),
         )
-        .withColumn("oov_micro", F.expr("(1000000 * n_oov) DIV n_tokens"))
-        .orderBy("lang")
+        .withColumn("oov_micro", F.expr("(1000000 * n_oov) DIV n_tokens")),
+        "lang",
     )
 
 
@@ -1663,15 +1664,15 @@ def q_minhash_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("jac_micro", F.expr("(1000000 * inter) DIV (szsum - inter)"))
     )
-    return (
+    return bounded_order(
         scored.groupBy("n_match")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
             F.expr("sum(jac_micro) DIV count(1)").alias("mean_jac_micro"),
             F.min("jac_micro").alias("min_jac_micro"),
             F.max("jac_micro").alias("max_jac_micro"),
-        )
-        .orderBy("n_match")
+        ),
+        "n_match",
     )
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.plans._portable import value_cents
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import scratch_dir
@@ -955,15 +956,15 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = spark.table(li_tbl).hint("merge").join(
         spark.table(orders_tbl).hint("merge"), "l_orderkey"
     )
-    return (
+    return bounded_order(
         j.groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             pround(
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue"),
-        )
-        .orderBy("o_orderpriority")
+        ),
+        "o_orderpriority",
     )
 
 

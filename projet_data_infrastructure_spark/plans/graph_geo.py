@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
 from projet_data_infrastructure_spark.operators.joins import vertex_side
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import default_parallelism
@@ -958,14 +959,14 @@ def q_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("support"))
         .filter(F.col("support") >= minsup)
     )
-    return (
+    return bounded_order(
         triples.select(
             F.col("a").alias("brand_a"),
             F.col("b").alias("brand_b"),
             F.col("c").alias("brand_c"),
             "support",
-        )
-        .orderBy(F.desc("support"), "brand_a", "brand_b", "brand_c")
+        ),
+        F.desc("support"), "brand_a", "brand_b", "brand_c",
     )
 
 
@@ -1329,14 +1330,14 @@ def q_geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"(({bx - ax}) * (lon_m - {ay}) - ({by - ay}) * (lat_m - {ax})) >= 0"
         )
     inside = F.expr(" AND ".join(crosses))
-    return (
+    return bounded_order(
         pts.select(inside.alias("inside"), "c_custkey")
         .groupBy("inside")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
             F.sum("c_custkey").alias("key_checksum"),
-        )
-        .orderBy("inside")
+        ),
+        "inside",
     )
 
 

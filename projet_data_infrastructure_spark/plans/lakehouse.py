@@ -39,6 +39,7 @@ from projet_data_infrastructure_spark.functions.hashing import (
     hash64,
     hash64_sql,
 )
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.session import scratch_dir
@@ -691,7 +692,7 @@ def _hll_report(regs: DataFrame, exact: DataFrame) -> DataFrame:
         1 << _HLL_RHO_CAP
     ).cast("long")
     est = pround(F.lit(_HLL_NUMER) / s_total.cast("double"), 3)
-    return (
+    return bounded_order(
         per_type.join(exact, "event_type")
         .select(
             "event_type",
@@ -699,8 +700,8 @@ def _hll_report(regs: DataFrame, exact: DataFrame) -> DataFrame:
             (F.lit(_HLL_M) - F.col("n_present")).cast("long").alias("n_empty_registers"),
             s_total.cast("long").alias("harmonic_denom"),
             est.alias("est_distinct"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.operators.text import tokens
 from projet_data_infrastructure_spark.plans._portable import fdiv, pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
@@ -154,10 +155,10 @@ def q_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     prediction frame is factored out so paired-classifier audits —
     ``stats_inference.q_mcnemar_lang_classifiers`` — reuse the exact scorer)."""
     pred = nb_predictions(spark, sf_dir)
-    return (
+    return bounded_order(
         pred.groupBy(F.col("true_lang").alias("lang"), F.col("pred").alias("pred_lang"))
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "pred_lang")
+        .agg(F.count(F.lit(1)).alias("n_docs")),
+        "lang", "pred_lang",
     )
 
 
@@ -692,7 +693,7 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.floor(F.col("c_acctbal") / F.lit(1000.0)).cast("long").alias("bal_band"),
     )
-    return (
+    return bounded_order(
         cust.groupBy("c_nationkey", "c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("k_count"),
@@ -704,8 +705,8 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k_count",
             "l_distinct",
             (F.col("l_distinct") < 3).alias("risky"),
-        )
-        .orderBy("c_nationkey", "c_mktsegment")
+        ),
+        "c_nationkey", "c_mktsegment",
     )
 
 
@@ -843,14 +844,14 @@ def q_markov_2step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p1 = p.select(F.col("a"), F.col("b").alias("mid"), F.col("p_micro").alias("pab"))
     p2 = p.select(F.col("a").alias("mid"), F.col("b").alias("c"), F.col("p_micro").alias("pbc"))
-    return (
+    return bounded_order(
         p1.join(F.broadcast(p2), "mid")
         .groupBy("a", "c")
         .agg(F.expr("sum(pab * pbc) DIV 1000000").alias("p2_micro"))
         .select(
             F.col("a").alias("from_type"), F.col("c").alias("to_type"), "p2_micro"
-        )
-        .orderBy("from_type", "to_type")
+        ),
+        "from_type", "to_type",
     )
 
 
@@ -997,14 +998,14 @@ def q_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
     )["s"]
-    return (
+    return bounded_order(
         docs.select(shard.alias("shard"), "doc_id")
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("doc_id").alias("id_checksum"),
-        )
-        .orderBy("shard")
+        ),
+        "shard",
     )
 
 
@@ -1193,7 +1194,9 @@ def q_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate(zip_with(pa, p, (x, y) -> (x - y) * (x - y)),"
         " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
-    return (
+    # ≤ 50 rows (vec_id 1..50), straight off the key-pruned scan: the scan
+    # keeps its parallelism above the single-partition exchange.
+    return bounded_order(
         b.crossJoin(F.broadcast(a))
         .select(
             F.col("vec_id").alias("vec_b"),
@@ -1206,7 +1209,8 @@ def q_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d2_proj",
             F.expr(f"(d2_proj * 1000000) DIV ({_JL_K} * d2_orig)").alias("ratio_micro"),
         )
-        .orderBy("vec_b")
+        .repartition(1),
+        "vec_b",
     )
 
 
@@ -1554,7 +1558,7 @@ def q_roc_auc_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("npos").alias("n_pos"),
         (F.sum("cnt") - F.sum("npos")).alias("n_neg"),
     )
-    return (
+    return bounded_order(
         per_dow.select(
             "dow",
             "n_pos",
@@ -1568,7 +1572,10 @@ def q_roc_auc_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
             "u2",
             F.expr("(u2 * 1000000) DIV (2 * n_pos * n_neg)").alias("auc_micro"),
         )
-        .orderBy("dow")
+        # ≤ 7 rows, but the aggregate shares its stage with the window over
+        # every (dow, cents) cell: that stage keeps its parallelism.
+        .repartition(1),
+        "dow",
     )
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
 from projet_data_infrastructure_spark.operators import dedup, similarity
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.operators.text import (
     LANG_MARKERS,
     bpe_ish_tokens,
@@ -560,7 +561,7 @@ def q_ivf_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched ANN retrieval: 5 queries probed through the IVF buckets in
     ONE plan (`operators/similarity.py:ivf_topk_batch`) — corpus bucket/norm
     map-side, probe rows broadcast, one bucket equi-join, per-query top-k
-    via WindowGroupLimit."""
+    via WindowGroupLimit, and the k·|Q| result rows sorted in one task."""
     emb = read_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk_batch(
         emb, list(_IVF_BATCH_QIDS), k=_IVF_BATCH_K, nprobe=_IVF_BATCH_NPROBE
@@ -2554,8 +2555,8 @@ def q_curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(stage_report(keepers, "exact_dedup"))
         .unionByName(stage_report(quality, "quality"))
     )
-    return out.select("source", "stage", "n_docs", "id_checksum").orderBy(
-        "source", "stage"
+    return bounded_order(
+        out.select("source", "stage", "n_docs", "id_checksum"), "source", "stage"
     )
 
 
@@ -3158,10 +3159,10 @@ def q_weighted_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn = F.row_number().over(
         Window.partitionBy("lang").orderBy(F.desc("es_key"), F.asc("doc_id"))
     )
-    return (
+    return bounded_order(
         keyed.withColumn("rnk", rn)
-        .filter(F.col("rnk") <= 3)
-        .orderBy("lang", "rnk")
+        .filter(F.col("rnk") <= 3),
+        "lang", "rnk",
     )
 
 
@@ -3299,14 +3300,14 @@ def q_lang_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.col("n_common").cast("double") / (
         F.col("v_a") + F.col("v_b") - F.col("n_common")
     ).cast("double")
-    return (
+    return bounded_order(
         inter.join(F.broadcast(sa), "lang_a")
         .join(F.broadcast(sb), "lang_b")
         .select(
             "lang_a", "lang_b", "v_a", "v_b", "n_common",
             pround(jac, 6).alias("jaccard"),
-        )
-        .orderBy("lang_a", "lang_b")
+        ),
+        "lang_a", "lang_b",
     )
 
 
@@ -3496,13 +3497,13 @@ def q_cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest("sa", "sb").alias("source_b"),
         "jaccard",
     )
-    return (
+    return bounded_order(
         cross.groupBy("source_a", "source_b")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
             pround(F.avg("jaccard"), 4).alias("avg_jaccard"),
-        )
-        .orderBy("source_a", "source_b")
+        ),
+        "source_a", "source_b",
     )
 
 

@@ -102,6 +102,7 @@ from pyspark.sql.window import Window
 
 from projet_data_infrastructure_spark.operators.asof import asof_join
 from projet_data_infrastructure_spark.operators.joins import vertex_side
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.operators.similarity import (
     int_centroid_argmin_col,
     int_lloyd_centroids,
@@ -168,16 +169,14 @@ def q_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # old frame is unreachable; Dataset.unpersist cannot release
         # localCheckpoint blocks (they are not CacheManager entries — ADVICE r14).
         visited = visited.unionByName(new).localCheckpoint(eager=True)
-    out = (
-        visited.groupBy("hop")
-        .agg(
+    # _BFS_HOPS + 1 rows, one per hop.
+    return bounded_order(
+        visited.groupBy("hop").agg(
             F.count(F.lit(1)).alias("n_nodes"),
             F.sum("node").alias("node_checksum"),
-        )
-        .orderBy("hop")
+        ),
+        "hop",
     )
-    # The aggregate is 4 rows — collect it off the checkpointed lineage.
-    return out
 
 
 def _bfs_oracle() -> str:
@@ -471,7 +470,7 @@ def q_ols_two_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
             for name, (expr, dp) in _ols_solve_exprs().items()
         ],
     )
-    return solved.orderBy("n_name")
+    return bounded_order(solved, "n_name")
 
 
 _OLS_SQL = f"""
@@ -648,13 +647,13 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= _ATTR_WINDOW_US
         )
     )
-    return (
+    return bounded_order(
         attributed.groupBy(F.col("campaign_asof").alias("campaign"))
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
             F.sum("cents").alias("attributed_cents"),
-        )
-        .orderBy("campaign")
+        ),
+        "campaign",
     )
 
 
@@ -736,13 +735,13 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0).cast("long")),
         )
     )
-    return (
+    return bounded_order(
         alloc.groupBy("campaign")
         .agg(
             F.count(F.lit(1)).alias("n_touches"),
             F.sum("share").alias("attributed_cents"),
-        )
-        .orderBy("campaign")
+        ),
+        "campaign",
     )
 
 
@@ -791,6 +790,12 @@ def q_mapinarrow_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     order DuckDB's ``list_sum`` folds, so the doubles agree to the last
     ulp (pround is belt-and-braces). API-surface spec: the real vector
     math elsewhere stays in JVM expressions (F.aggregate / zip_with).
+
+    The result is ≤ _MIA_MAX_ID rows, bounded only by the filter on the
+    scan, so the scan and the Arrow UDF run in parallel, one
+    single-partition exchange gathers their rows and one task sorts them
+    (``operators.ranks.bounded_order``). A range-partitioned ``orderBy``
+    would run the ``mapInArrow`` stage twice, once for its sampling job.
     """
     emb = (
         read_table(spark, sf_dir, "embeddings")
@@ -815,8 +820,9 @@ def q_mapinarrow_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     out = emb.mapInArrow(fold_norms, "vec_id long, norm2 double")
-    return out.select("vec_id", pround(F.col("norm2"), 6).alias("norm2")).orderBy(
-        "vec_id"
+    return bounded_order(
+        out.select("vec_id", pround(F.col("norm2"), 6).alias("norm2")).repartition(1),
+        "vec_id",
     )
 
 
@@ -855,7 +861,9 @@ def q_applyinarrow_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = emb.groupBy("label").applyInArrow(
         label_stats, "label int, n long, min_vec long, max_vec long, sum_vec long"
     )
-    return out.orderBy("label")
+    # One row per label; the grouped Arrow UDF stays parallel above the
+    # single-partition exchange.
+    return bounded_order(out.repartition(1), "label")
 
 
 _APPLYINARROW_SQL = """
@@ -1194,7 +1202,7 @@ def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_cell").cast("double") * F.col("n_all").cast("double"))
         / (F.col("n_et").cast("double") * F.col("n_dow").cast("double"))
     )
-    return (
+    return bounded_order(
         cell.join(F.broadcast(et_m), "event_type")
         .join(F.broadcast(dow_m), "dow")
         .join(F.broadcast(total))
@@ -1203,8 +1211,8 @@ def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dow",
             "n_cell",
             pround(lift, 4).alias("lift"),
-        )
-        .orderBy("event_type", "dow")
+        ),
+        "event_type", "dow",
     )
 
 
@@ -1309,13 +1317,14 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("node", F.coalesce(F.col("lab"), F.col("plab")).alias("lab"))
             .localCheckpoint(eager=True)
         )
-    return (
+    # ≤ _LP_SEED_MAX + 1 rows: every label comes from a seed, and -1.
+    return bounded_order(
         labels.groupBy(F.coalesce(F.col("lab"), F.lit(-1)).alias("final_label"))
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
             F.sum("node").alias("id_checksum"),
-        )
-        .orderBy("final_label")
+        ),
+        "final_label",
     )
 
 
@@ -1456,13 +1465,17 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick = lambda c: F.array_join(
         F.filter(F.expr(f"transform({c}, s -> s.x)"), lambda x: x.isNotNull()), " "
     )
-    return agg.select(
+    # ≤ _SC_MAX_ID documents.
+    return bounded_order(
+        agg.select(
+            "doc_id",
+            pick("arr_in").alias("input_text"),
+            pick("arr_tg").alias("target_text"),
+            F.col("n_spans").cast("long").alias("n_spans"),
+            "n_tokens",
+        ),
         "doc_id",
-        pick("arr_in").alias("input_text"),
-        pick("arr_tg").alias("target_text"),
-        F.col("n_spans").cast("long").alias("n_spans"),
-        "n_tokens",
-    ).orderBy("doc_id")
+    )
 
 
 from projet_data_infrastructure_spark.functions.hashing import hash64_sql as _h64sql
@@ -1887,14 +1900,14 @@ def q_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = emb.localCheckpoint(eager=True)  # scanned K+1 times; decode once
     pick = int_centroid_argmin_col(int_lloyd_centroids(emb, _KM_K, _KM_ROUNDS))
     final = emb.withColumn("dist", pick["dist"]).withColumn("cl", pick["cl"])
-    return (
+    return bounded_order(
         final.groupBy("cl")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
             F.sum("vec_id").alias("id_checksum"),
             F.sum("dist").alias("inertia"),
-        )
-        .orderBy("cl")
+        ),
+        "cl",
     )
 
 

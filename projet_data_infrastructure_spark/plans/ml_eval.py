@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
 from projet_data_infrastructure_spark.operators import similarity
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.operators.text import tokens
 from projet_data_infrastructure_spark.plans._portable import (
     fdiv as _fdiv,
@@ -59,7 +60,7 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = scored.withColumn("rnk", F.row_number().over(wk)).filter(F.col("rnk") <= _KNN_K)
     votes = top.groupBy("qid", "true_label", "label").agg(F.count(F.lit(1)).alias("votes"))
     wv = Window.partitionBy("qid").orderBy(F.desc("votes"), F.asc("label"))
-    return (
+    return bounded_order(
         votes.withColumn("vrnk", F.row_number().over(wv))
         .filter(F.col("vrnk") == 1)
         .select(
@@ -68,8 +69,8 @@ def q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("pred_label"),
             F.col("votes").cast("long").alias("votes"),
             (F.col("label") == F.col("true_label")).cast("int").alias("correct"),
-        )
-        .orderBy("qid")
+        ),
+        "qid",
     )
 
 
@@ -355,14 +356,17 @@ def q_conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("n_covered"),
         )
     )
-    return cov.select(
+    return bounded_order(
+        cov.select(
+            "event_type",
+            "n_calib",
+            "q_hat_micro",
+            "n_test",
+            "n_covered",
+            F.expr("(n_covered * 1000000) DIV n_test").alias("coverage_micro"),
+        ),
         "event_type",
-        "n_calib",
-        "q_hat_micro",
-        "n_test",
-        "n_covered",
-        F.expr("(n_covered * 1000000) DIV n_test").alias("coverage_micro"),
-    ).orderBy("event_type")
+    )
 
 
 _CONFORMAL_SQL = f"""
@@ -504,12 +508,15 @@ def q_routing_topk_experts(spark: SparkSession, sf_dir: str) -> DataFrame:
     share = (
         "CAST(n_primary + n_secondary AS DOUBLE) / (2.0 * CAST(nd AS DOUBLE))"
     )
-    return out.select(
+    return bounded_order(
+        out.select(
+            "expert",
+            "n_primary",
+            "n_secondary",
+            pround(F.expr(share), 6).alias("load_share_r"),
+        ),
         "expert",
-        "n_primary",
-        "n_secondary",
-        pround(F.expr(share), 6).alias("load_share_r"),
-    ).orderBy("expert")
+    )
 
 
 def _routing_sql() -> str:
@@ -580,14 +587,18 @@ def q_quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.col("n_chars").cast("long").alias("len")
     )
     ranked = grouped_rank(docs, "lang", "len", ties=("doc_id",))
-    return (
+    return bounded_order(
         ranked.withColumn(
             "qn_micro",
             F.expr("((2 * rank - 1) * 1000000) DIV (2 * group_total)"),
         )
         .filter(F.col("rank") <= 8)
         .select("lang", F.col("rank").cast("long").alias("rank"), "doc_id", "len", "qn_micro")
-        .orderBy("lang", "rank")
+        # 8 rows per language, filtered from a rank window over every
+        # document: that window keeps its parallelism.
+        .repartition(1),
+        "lang",
+        "rank",
     )
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
 from projet_data_infrastructure_spark.sources.readers import read_table
@@ -245,15 +246,16 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - (
         F.col("ps_supplycost_cents") * F.col("l_quantity")
     ) / F.lit(100.0)
-    return (
+    return bounded_order(
         j.select(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").alias("o_year"),
             amount.alias("amount"),
         )
         .groupBy("nation", "o_year")
-        .agg(pround(F.sum("amount"), 2).alias("sum_profit"))
-        .orderBy(F.asc("nation"), F.desc("o_year"))
+        .agg(pround(F.sum("amount"), 2).alias("sum_profit")),
+        F.asc("nation"),
+        F.desc("o_year"),
     )
 
 
@@ -389,7 +391,7 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") < 0)
         .select(F.col("s_suppkey").alias("ps_suppkey"))
     )
-    return (
+    return bounded_order(
         ps.join(
             F.broadcast(
                 part.select(
@@ -400,8 +402,11 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(bad_supp), "ps_suppkey", "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("ps_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), F.asc("p_brand"), F.asc("p_type"), F.asc("p_size"))
+        .agg(F.countDistinct("ps_suppkey").alias("supplier_cnt")),
+        F.desc("supplier_cnt"),
+        F.asc("p_brand"),
+        F.asc("p_type"),
+        F.asc("p_size"),
     )
 
 

@@ -27,6 +27,7 @@ from projet_data_infrastructure_spark.operators.aggregates import (
 )
 from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sql
 from projet_data_infrastructure_spark.operators.joins import anti_join, enrich, semi_join
+from projet_data_infrastructure_spark.operators.ranks import bounded_order
 from projet_data_infrastructure_spark.operators.transforms import mask_columns, project
 from projet_data_infrastructure_spark.plans._portable import pround, pround_sql
 from projet_data_infrastructure_spark.plans.registry import QuerySpec
@@ -560,11 +561,14 @@ def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     noisy_n = F.col("true_n").cast("double") + lap_noise(31, str(_DP_EPSILON_INV))
     noisy_sum = F.col("true_sum") + lap_noise(37, str(10_000.0 * _DP_EPSILON_INV))
-    return agg.select(
+    return bounded_order(
+        agg.select(
+            "c_mktsegment",
+            pround(noisy_n, 4).alias("dp_count"),
+            pround(noisy_sum, 4).alias("dp_balance_sum"),
+        ),
         "c_mktsegment",
-        pround(noisy_n, 4).alias("dp_count"),
-        pround(noisy_sum, 4).alias("dp_balance_sum"),
-    ).orderBy("c_mktsegment")
+    )
 
 
 def _dp_noisy_sql() -> str:
@@ -734,7 +738,8 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
-    return (
+    # ≤ 6 rows (return flag × line status).
+    return bounded_order(
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -746,8 +751,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
             pround(F.avg("l_extendedprice"), 2).alias("avg_price"),
             pround(F.avg("l_discount"), 4).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
+        ),
+        "l_returnflag",
+        "l_linestatus",
     )
 
 
@@ -840,10 +846,13 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey",
     )
     j = ls.join(oc, "l_orderkey").filter(F.col("s_nationkey") == F.col("n_nationkey"))
-    return (
-        j.groupBy("n_name")
-        .agg(pround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
+    # ≤ 25 rows (one per nation).
+    return bounded_order(
+        j.groupBy("n_name").agg(
+            pround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
+        ),
+        F.desc("revenue"),
+        F.asc("n_name"),
     )
 
 

@@ -27,6 +27,7 @@ from projet_data_infrastructure_spark.functions.hashing import hash64, hash64_sq
 from projet_data_infrastructure_spark.functions.stats import two_sided_p_sql
 from projet_data_infrastructure_spark.operators.ranks import (
     average_rank_table,
+    bounded_order,
     two_rbar,
     value_grid_ranks,
 )
@@ -220,11 +221,16 @@ def q_gini_lorenz_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(2.0 * CAST(six AS DOUBLE) - CAST(n_cust + 1 AS DOUBLE)"
         " * CAST(sx AS DOUBLE)) / (CAST(n_cust AS DOUBLE) * CAST(sx AS DOUBLE))"
     )
-    return agg.select(
-        F.col("c_nationkey").cast("int").alias("nationkey"),
-        "n_cust",
-        pround(F.expr(g), 6).alias("gini_r"),
-    ).orderBy("nationkey")
+    # One row per nation, but the aggregate shares its stage with the rank
+    # window over every customer: that stage keeps its parallelism.
+    return bounded_order(
+        agg.select(
+            F.col("c_nationkey").cast("int").alias("nationkey"),
+            "n_cust",
+            pround(F.expr(g), 6).alias("gini_r"),
+        ).repartition(1),
+        "nationkey",
+    )
 
 
 _GINI_SQL = f"""

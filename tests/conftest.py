@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -24,6 +25,28 @@ def spark(tmp_path_factory):
     )
     yield s
     s.stop()
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def jobs(spark):
+    """``jobs(fn)`` → (fn(), number of Spark jobs fn started), counted
+    under a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-jobs-{next(_job_groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 def pytest_sessionstart(session):

@@ -82,3 +82,18 @@ def test_baseline_is_the_full_record_for_this_core_count(tmp_path):
     (tmp_path / "BENCH_r15.json").write_text(json.dumps({"parsed": compact}))
     assert bench.baseline(8, root=str(tmp_path))["queries"] == full["queries"]
     assert bench.baseline(32, root=str(tmp_path)) is None
+
+
+def test_timed_run_counts_the_jobs_of_its_group(spark):
+    """``timed_run`` tags the run with a job group of its own and counts the
+    builder's jobs with the execution's; the group is cleared afterwards."""
+    from types import SimpleNamespace
+
+    def build(s, sf_dir):
+        s.range(3).collect()  # one eager builder job
+        return s.range(10)  # one noop execution job
+
+    counts = []
+    sec = bench.timed_run(spark, SimpleNamespace(name="two_jobs", fn=build), "", counts)
+    assert sec > 0 and counts == [2]
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

@@ -1297,3 +1297,111 @@ def test_bh_fdr_windows_only_over_nation_frame(spark):
     agg = plan.find("HashAggregate(keys=[c_nationkey", win_pos)
     assert agg != -1, plan
     assert "o_orderkey" not in plan[win_pos:agg], plan
+
+
+# --------------------------------------------------------------------------
+# Final ORDER BY: bounded results sort in one task, unbounded ones by range
+# --------------------------------------------------------------------------
+
+_BOUNDED_ORDERS = {
+    # spec: its sort columns
+    "tpch_q1_pricing": ("l_returnflag", "l_linestatus"),
+    "tpch_q5_local_supplier": ("revenue", "n_name"),
+    "ivf_topk_batch": ("query_id", "rank"),
+    "mapinarrow_vector_norm": ("vec_id",),
+}
+
+
+def _spec(name):
+    from projet_data_infrastructure_spark.plans import all_specs
+
+    return next(s for s in all_specs() if s.name == name)
+
+
+def _executed(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("name", sorted(_BOUNDED_ORDERS))
+def test_bounded_final_order_has_no_range_sort(spark, name):
+    """A result bounded by construction sorts in one task
+    (``ranks.bounded_order``): no range-partition exchange, so no sampling
+    job re-runs the stage below the sort."""
+    plan = _executed(_spec(name).fn(spark, SF))
+    assert "rangepartitioning" not in plan, plan
+
+
+@pytest.mark.parametrize("name", sorted(_BOUNDED_ORDERS))
+def test_bounded_final_order_matches_oracle_order(spark, name):
+    """The one-task sort returns the rows in the oracle's ORDER BY order."""
+    import math
+
+    import duckdb
+
+    from conftest import SF_CORRECT as sf  # SF gives tpch_q5 a single row
+    from tools.check_oracle import register_views
+
+    spec = _spec(name)
+    cols = _BOUNDED_ORDERS[name]
+    got = [tuple(r[c] for c in cols) for r in spec.fn(spark, sf).collect()]
+    con = duckdb.connect()
+    register_views(con, sf)
+    rel = con.sql(spec.oracle)
+    idx = [rel.columns.index(c) for c in cols]
+    want = [tuple(r[i] for i in idx) for r in rel.fetchall()]
+    assert len(got) == len(want) > 1
+    for g, w in zip(got, want):
+        for a, b in zip(g, w):
+            if isinstance(a, float):
+                assert math.isclose(a, b, rel_tol=1e-9), (g, w)
+            else:
+                assert a == b, (g, w)
+
+
+@pytest.mark.parametrize(
+    "name", ["tpch_q1_pricing", "mapinarrow_vector_norm"]
+)
+def test_bounded_final_order_runs_two_jobs(spark, jobs, name):
+    """tpch_q1: the aggregate's shuffle-map job and the result job.
+    mapinarrow: the scan + Arrow UDF map job and the result job — the
+    ``mapInArrow`` stage runs once (a range sort ran it twice: its
+    sampling job re-ran the stage)."""
+    df = _spec(name).fn(spark, SF)
+    _, n = jobs(lambda: df.write.format("noop").mode("overwrite").save())
+    assert n == 2
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "entity_resolution_clusters",
+        "dedup_keepbest_canonical",
+        "prefix_filter_jaccard",
+        "embedding_simhash_pairs",
+        "geo_grid_dbscan",
+    ],
+)
+def test_unbounded_final_order_keeps_range_sort(spark, name):
+    """Cluster and pair outputs grow with the data: their final order stays
+    a range-partitioned sort, and nothing funnels them into one task."""
+    plan = _executed(_spec(name).fn(spark, SF))
+    assert "rangepartitioning" in plan, plan
+    assert "Coalesce 1" not in plan, plan
+
+
+def test_plan_capture_counts_range_sorts(spark):
+    """``tools/plan_capture.py``'s smell line names each range-partitioned
+    sort; the one-task order of a bounded result has none."""
+    from projet_data_infrastructure_spark.operators.ranks import bounded_order
+    from tools.plan_capture import smell_summary
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    agg = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+
+    def formatted(df):
+        return df._jdf.queryExecution().explainString(mode)
+
+    assert "RangeSortx1" in smell_summary(formatted(agg.orderBy("k")))
+    assert "RangeSort" not in smell_summary(formatted(bounded_order(agg, "k")))

@@ -139,34 +139,18 @@ def test_events_ts_ntz_invariant_to_session_confs(spark):
 # Schema catalog: read_table / read_parquet infer once per file set + confs
 # --------------------------------------------------------------------------
 
-_group_ids = iter(range(1_000_000))
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn started)."""
-    sc = spark.sparkContext
-    group = f"catalog-{next(_group_ids)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _write(path, table):
     import pyarrow.parquet as pq
 
     pq.write_table(table, str(path))
 
 
-def test_read_table_second_read_runs_no_job(spark, tmp_path):
+def test_read_table_second_read_runs_no_job(spark, tmp_path, jobs):
     import pyarrow as pa
 
     _write(tmp_path / "nation.parquet", pa.table({"n_nationkey": [1, 2], "n_name": ["a", "b"]}))
-    first, n_first = _jobs(spark, lambda: read_table(spark, str(tmp_path), "nation"))
-    second, n_second = _jobs(spark, lambda: read_table(spark, str(tmp_path), "nation"))
+    first, n_first = jobs(lambda: read_table(spark, str(tmp_path), "nation"))
+    second, n_second = jobs(lambda: read_table(spark, str(tmp_path), "nation"))
     assert n_first == 1 and n_second == 0
     assert second.schema == first.schema
     assert sorted(second.collect()) == sorted(first.collect())

@@ -6,7 +6,10 @@ Usage:
 
 With no names, captures every pinned headliner (``bench.headliners()``).
 Smells flagged: BatchEvalPython/ArrowEvalPython nodes, SortMergeJoin,
-CartesianProduct, Exchange count, missing PushedFilters on filtered scans.
+CartesianProduct, Exchange count, and range-partitioned sorts
+(``RangeSort``: an ``orderBy`` without a limit, which costs a sampling job,
+a shuffle-map job and the sort; a result bounded by construction sorts in
+one task through ``operators.ranks.bounded_order`` instead).
 
 Each spec's optimized logical plan also goes to
 plans/<label>/<query>.optimized.txt with expression ids and lambda-variable
@@ -46,6 +49,21 @@ def optimized_plan(df) -> str:
     return _LAMBDA_VAR.sub(r"\1", _EXPR_ID.sub("#x", plan))
 
 
+def smell_summary(plan: str) -> str:
+    """The one-line smell summary of a formatted plan."""
+    n_exch = len(re.findall(r"\bExchange\b", plan))
+    smells = []
+    for pat in ("BatchEvalPython", "ArrowEvalPython", "CartesianProduct",
+                "SortMergeJoin", "BroadcastNestedLoopJoin"):
+        k = len(re.findall(pat, plan))
+        if k:
+            smells.append(f"{pat}x{k}")
+    k = len(re.findall(r"\brangepartitioning\(", plan))
+    if k:
+        smells.append(f"RangeSortx{k}")
+    return f"exch={n_exch} {' '.join(smells)}"
+
+
 def main() -> None:
     label = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:] or headliners()
@@ -72,14 +90,7 @@ def main() -> None:
             f.write(plan)
         with open(os.path.join(out_dir, f"{name}.optimized.txt"), "w") as f:
             f.write(optimized)
-        n_exch = len(re.findall(r"\bExchange\b", plan))
-        smells = []
-        for pat in ("BatchEvalPython", "ArrowEvalPython", "CartesianProduct",
-                    "SortMergeJoin", "BroadcastNestedLoopJoin"):
-            k = len(re.findall(pat, plan))
-            if k:
-                smells.append(f"{pat}x{k}")
-        rows.append((name, f"exch={n_exch} {' '.join(smells)}"))
+        rows.append((name, smell_summary(plan)))
     for name, info in rows:
         print(f"{name:40s} {info}")
     spark.stop()
